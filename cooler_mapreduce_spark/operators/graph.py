@@ -1,4 +1,4 @@
-"""Iterative graph analytics on the star schema — PageRank.
+"""Iterative graph analytics on the star schema.
 
 The reference is a MapReduce engine, and PageRank is *the* canonical
 iterative MapReduce workload (one map/reduce round per iteration); the
@@ -7,27 +7,18 @@ reference cannot express it because its jobs are single-round
 declarative join + partial-aggregated shuffle and the driver loop only
 composes plans — the Spark-native shape of iterate-until-k.
 
-Scale design (100 TB): the edge list is the only big dataset; every
-iteration shuffles contribution tuples keyed by destination with
-map-side partial sums, so per-iteration cost is O(|edges|) shuffled
-bytes regardless of iteration count. Rank state is O(|nodes|), never
-collected to the driver; the node count rides the plan as a broadcast
-single-row aggregate. For deep iteration counts a production deployment
-adds periodic ``localCheckpoint`` to truncate lineage — at the fixed
-k=5 here the composed plan is small enough that checkpointing would
-only add I/O.
-
-Determinism: contributions are floor-quantized to 1e-15 resolution and
-summed as exact decimals (the same convention as
-``similarity.embedding_centroids_by_label``), so the per-iteration sums
-are order-independent and bit-identical in Spark and DuckDB; the
-remaining arithmetic (rank/outdeg, damping) is a fixed sequence of
-scalar IEEE double ops, identical on both engines.
+The five rank queries (uniform, weighted and personalized PageRank, and
+the two weekly random-walk-with-restart faces) run one kernel,
+:func:`rank_walk`, over static sides built once by :func:`rank_sides`;
+the kernel's docstring carries the determinism and scale argument.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import functools
+import operator
+
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..registry import query
 from ..sources.catalog import table
@@ -40,6 +31,109 @@ _Q = "1000000000000000"
 
 _PR_ITERATIONS = 5
 _DAMPING = 0.85
+
+
+def rank_sides(
+    edges: DataFrame, group: tuple[str, ...] = (), weight: str | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The static sides of :func:`rank_walk`, materialized once: the
+    ``(group…, src, dst[, weight])`` edge frame hash-partitioned by its
+    join key ``(group…, src)`` and checkpointed, and its out-degree frame
+    ``(group…, src, outdeg)`` — ``count(*)``, or ``sum(weight)`` when
+    weighted — checkpointed too.
+
+    Every round joins both sides; without the checkpoints round i's plan
+    re-derives the edge subtree i times over (measured 8.4 s → the
+    uniform bench entry at sf0.1, values bit-identical). At cluster
+    scale these are ``checkpoint()`` calls to a reliable store.
+    Partitioning BEFORE the checkpoint (r11, measured): the checkpoint
+    scans back with unknown partitioning, but AQE's stage cache turns
+    the per-round edge and degree exchanges into ReusedExchange, so the
+    O(|edges|) frame crosses the network once. Checkpointing first and
+    repartitioning on top pins the partition count and disables AQE
+    coalescing (interleaved A/B at sf0.1, identical top-20: 4.93 s vs
+    7.1 s).
+    """
+    keys = (*group, "src")
+    edges = edges.repartition(*keys).localCheckpoint(eager=True)
+    outdeg = F.sum(weight) if weight else F.count("*")
+    deg = edges.groupBy(*keys).agg(outdeg.alias("outdeg")).localCheckpoint(eager=True)
+    return edges, deg
+
+
+def rank_walk(
+    edges: DataFrame,
+    deg: DataFrame,
+    *,
+    init: Column,
+    teleport: Column,
+    iterations: int = _PR_ITERATIONS,
+    group: tuple[str, ...] = (),
+    weight: str | None = None,
+) -> DataFrame:
+    """``iterations`` rounds of damped rank flow over the static sides
+    of :func:`rank_sides`; returns the ``(group…, node, outdeg, rank)``
+    rank state.
+
+    One round is one map/combine/reduce: the rank state joins the edges
+    on ``(group…, src)``, each edge carries the contribution
+    ``floor(rank [* weight] / outdeg * 1e15)``, the contributions sum
+    per ``(group…, dst)``, the sums join the out-degree frame, and
+    ``rank = teleport + 0.85 · s / 1e15``. ``init`` and ``teleport`` are
+    columns over ``node`` that the caller spells and the kernel uses
+    verbatim: each tier's oracle pins its own IEEE constants (``0.15/n``
+    and ``(1.0-0.85)/n`` are different doubles). Nodes are each group's
+    sources; a destination that is never a source gets no row (the
+    inner join to the out-degree frame drops it, as the oracles' joins
+    do), and a mirrored edge set loses no rank mass. Group keys
+    (``week`` for the RWR faces) widen every join and aggregation key,
+    so more groups add rows, never stages.
+
+    Determinism: floor() yields a BIGINT in both engines, and the
+    per-destination sum of longs is exact and order-free — it is bounded
+    by the quantized rank mass 1e15 ≪ 2^63 per group (ANSI errors
+    loudly rather than wrap). The rest is a fixed sequence of scalar
+    IEEE double ops, identical in Spark and DuckDB, so every round is a
+    pure function of the edge multiset (property-pinned against a
+    sequential replica in tests/test_property_blocks.py). Longs rather
+    than decimal(38,0) keep the aggregate buffer at 8 bytes (A/B at
+    sf0.1, identical top-20: 3.84 → 3.30 s).
+
+    Scale: each round shuffles O(|edges|) contributions keyed by
+    destination with map-side partial sums; the state is O(|nodes|)
+    rows and is never collected. The rank side of both joins is
+    hash-built (SHUFFLE_HASH): sort-merge would re-sort the checkpointed
+    edge partitions every round, while the build side is O(|nodes| /
+    partitions) rows per task — executor-sized at any scale, unlike a
+    forced broadcast (sf0.1: 6.3 → ~4 s). The state is checkpointed
+    once, after round ``iterations // 2`` when ``iterations > 3``: the
+    later rounds re-optimize half the plan depth and a retry replays
+    half the lineage, while a plain localCheckpoint leaves AQE free to
+    size every exchange (r12 A/B at k=5, identical top-20: 2.600 →
+    2.434 s min). At k ≤ 3 the plan is already shallow and the
+    checkpoint is skipped.
+    """
+    q = F.lit(float(_Q))
+    # the static sides' group keys are renamed so both joins stay
+    # unambiguous against the rank state's own group columns
+    renamed = {g: "side_" + g for g in group}
+    e, d = edges.withColumnsRenamed(renamed), deg.withColumnsRenamed(renamed)
+    keys = [F.col(g) == F.col(side) for g, side in renamed.items()]
+    on = functools.reduce(operator.and_, [*keys, F.col("node") == F.col("src")])
+    share = F.col("rank") * F.col(weight) if weight else F.col("rank")
+    ranks = deg.select(*group, F.col("src").alias("node"), "outdeg").withColumn("rank", init)
+    damped = teleport + F.lit(_DAMPING) * (F.col("s").cast("double") / q)
+    for i in range(iterations):
+        contribs = ranks.hint("shuffle_hash").join(e, on).select(
+            *group, F.col("dst").alias("node"), F.floor(share / F.col("outdeg") * q).alias("c")
+        )
+        sums = contribs.groupBy(*group, "node").agg(F.sum("c").alias("s"))
+        ranks = sums.join(d.hint("shuffle_hash"), on).select(
+            *group, "node", "outdeg", damped.alias("rank")
+        )
+        if iterations > 3 and i == iterations // 2:
+            ranks = ranks.localCheckpoint(eager=True)
+    return ranks
 
 
 def _pagerank_oracle(iterations: int = _PR_ITERATIONS) -> str:
@@ -102,15 +196,19 @@ def pagerank_supplier_customer(
     leaks and the teleport term is the plain 0.15/N).
 
     Node ids: supplier s ↦ 2s, customer c ↦ 2c+1 — disjoint numeric
-    spaces, join-key friendly. Per iteration: ranks ⋈ edges on the
-    source key (contribution = rank/outdeg), then a destination-keyed
-    partial+final aggregate — the exact map/combine/reduce round the
-    reference would need k chained jobs for. The node count is one O(1)
-    driver-side count of the checkpointed degree frame, folded into the
-    teleport/init literals (r12; see pagerank_frame); the final top-20
-    is TakeOrdered with a node-id tiebreak.
+    spaces, join-key friendly. The rounds are :func:`rank_walk`'s — the
+    exact map/combine/reduce round the reference would need k chained
+    jobs for. The node count n is ONE driver-side count of the
+    checkpointed degree frame, folded into the init and teleport
+    literals: 1.0/n and 0.15/n are the same IEEE divisions the oracle
+    does, and a 1-row aggregate in the plan would re-enter every round
+    as a broadcast subtree (r12 A/B, identical top-20: 2.592 → 2.477 s).
+    The final top-20 is TakeOrdered with a node-id tiebreak.
     """
-    ranks = pagerank_frame(spark, sf_dir, iterations)
+    edges, deg = _uniform_trade_graph(spark, sf_dir)
+    n = deg.count()
+    init, teleport = F.lit(1.0) / F.lit(n), F.lit(0.15) / F.lit(n)
+    ranks = rank_walk(edges, deg, init=init, teleport=teleport, iterations=iterations)
     return (
         ranks.orderBy(F.desc("rank"), F.asc("node"))
         .limit(20)
@@ -119,11 +217,9 @@ def pagerank_supplier_customer(
 
 
 def _uniform_trade_graph(spark: SparkSession, sf_dir: str):
-    """(edges, deg) of the unweighted mirrored trade graph, both
-    src-partitioned and checkpointed — the shared static sides of the
-    uniform and personalized PageRank loops (identical ops to the
-    pre-refactor ``pagerank_frame`` body, so the uniform tier's plan is
-    unchanged)."""
+    """:func:`rank_sides` of the unweighted mirrored trade graph — the
+    static sides shared by the uniform and personalized PageRank tiers
+    and by :func:`harmonic_centrality_hubs`."""
     li = table(spark, sf_dir, "lineitem", fan_out=False)
     o = table(spark, sf_dir, "orders", fan_out=False)
     fwd = (
@@ -135,108 +231,7 @@ def _uniform_trade_graph(spark: SparkSession, sf_dir: str):
         .distinct()
     )
     # mirrored edge: src/dst parity differs, so the union is disjoint
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    # materialize the static sides ONCE: every iteration joins edges and
-    # deg, and without truncation iteration i's plan re-derives the
-    # lineitem⋈orders⋈distinct edge subtree i times over —
-    # localCheckpoint turns the loop's per-iteration cost into pure
-    # join+agg over the cached edge partitions (measured 8.4 s → the
-    # bench entry at sf0.1; the values are bit-identical either way).
-    # At cluster scale this is `edges.checkpoint()` to a reliable store.
-    #
-    # Partition by the join key BEFORE checkpointing. NOTE (r11,
-    # measured): on Spark 4.1 the checkpoint scans back as ExistingRDD
-    # with UNKNOWN partitioning in the initial plan — the co-location
-    # is restored at RUNTIME by AQE's stage cache, which canonicalizes
-    # the per-iteration edge/deg exchanges into ReusedExchange (final
-    # executed plan: ReusedExchange ×12), so the O(|edges|) frame still
-    # crosses the network once. The explicit alternative (checkpoint
-    # first, repartition(n, key) on top) makes the partitioning visible
-    # to the planner but PINS the partition count, disabling AQE
-    # coalescing — interleaved A/B at sf0.1, identical top-20: status
-    # quo min 4.93 s (58 stages) vs explicit min 7.1 s (52 stages).
-    # Measured when first introduced: steady-state 5.97 → 5.5 s and
-    # first-run 17.7 → 5.8 s, values bit-identical.
-    edges = edges.repartition("src").localCheckpoint(eager=True)
-    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg")).localCheckpoint(eager=True)
-    return edges, deg
-
-
-def pagerank_frame(
-    spark: SparkSession, sf_dir: str, iterations: int = _PR_ITERATIONS
-) -> DataFrame:
-    """Full (node, outdeg, rank) frame after ``iterations`` rounds —
-    the registered query's top-20 is a TakeOrdered over this."""
-    edges, deg = _uniform_trade_graph(spark, sf_dir)
-    # The node count n is ONE O(1) driver-side scalar over the already-
-    # checkpointed degree frame — not a scale-killer collect (r11 verdict
-    # blessed exactly this hoist). The former 1-row broadcast aggregate
-    # re-entered EVERY iteration's plan as a crossJoin subtree, so each
-    # round re-planned (and the executed plan re-carried) the deg-scan +
-    # count + broadcast; folding n into literals drops 5 broadcast
-    # exchanges and shrinks every iteration's plan. 1.0/n and 0.15/n are
-    # the same IEEE double divisions either way — probe7 pinned the
-    # top-20 bit-identical, and the A/B reads 2.592 → 2.477 s min
-    # (interleaved, 4 rounds).
-    n = deg.count()
-    ranks = deg.select(
-        F.col("src").alias("node"),
-        "outdeg",
-        (F.lit(1.0) / F.lit(n)).alias("rank"),
-    )
-    q = F.lit(float(_Q))
-    # SHUFFLE_HASH on the rank-state side of both per-iteration joins:
-    # sort-merge would re-SORT the checkpointed edge partitions every
-    # iteration (5 sorts of the O(|edges|) side for zero information),
-    # while a shuffled-hash build of the rank side streams the edges
-    # unsorted. The build side is O(|nodes|/partitions) rows of
-    # (id, outdeg, rank) per task — bounded far below the edge side at
-    # any scale, and partition count grows with the cluster, so the
-    # per-task hash map stays executor-sized (this is the textbook SHJ
-    # case, unlike a forced broadcast which must fit ONE executor whole).
-    # Measured at sf0.1, identical top-20 hash: 6.3 s → ~4 s steady.
-    for i in range(iterations):
-        # `floor` already yields BIGINT; summing the longs directly is
-        # bit-identical to the former decimal(38,0) staging (each
-        # per-destination sum is bounded by the total quantized rank
-        # mass q = 1e15 ≪ 2^63, and integer addition is exact and
-        # order-free in both widths — ANSI would error loudly, never
-        # wrap, if the bound were ever violated) while the aggregate
-        # buffer stays a compact 8-byte long instead of a 128-bit
-        # decimal. Interleaved A/B at sf0.1, identical top-20 hash:
-        # 3.84 s → 3.30 s steady (guide §2.3 "narrower types").
-        contribs = ranks.hint("shuffle_hash").join(
-            edges, F.col("node") == F.col("src")
-        ).select(
-            F.col("dst").alias("to"),
-            F.floor(F.col("rank") / F.col("outdeg") * q).alias("c"),
-        )
-        sums = contribs.groupBy("to").agg(F.sum("c").alias("s"))
-        ranks = (
-            sums.join(deg.hint("shuffle_hash"), F.col("to") == F.col("src"))
-            .select(
-                F.col("to").alias("node"),
-                "outdeg",
-                (
-                    F.lit(0.15) / F.lit(n)
-                    + F.lit(_DAMPING) * (F.col("s").cast("double") / q)
-                ).alias("rank"),
-            )
-        )
-        # ONE mid-loop truncation of the O(|nodes|) rank state (r12,
-        # measured): unlike the REJECTED checkpoint-then-repartition
-        # variant (r11 — pinning partition counts disabled AQE
-        # coalescing, 7.1 vs 4.93 s), a plain localCheckpoint keeps AQE
-        # free to size every exchange while halving the plan depth the
-        # later iterations re-optimize. Interleaved A/B at sf0.1
-        # (scripts/opt_probe13 snapshot), identical top-20: none 2.600 /
-        # ckpt-after-iter-3 2.434 s min with the tightest spread. The
-        # materialized state is O(|nodes|) rows — the same class as the
-        # static-side checkpoints above; at cluster scale this also
-        # bounds the retry-lineage depth of the unrolled loop.
-        if i == 2:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+    return rank_sides(fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))))
 
 
 def _copurchase_graph(spark: SparkSession, sf_dir: str):
@@ -298,7 +293,7 @@ def _copurchase_graph(spark: SparkSession, sf_dir: str):
         .localCheckpoint(eager=True)
     )
     # SHUFFLE_HASH on the degree side of both annotation joins (the
-    # pagerank rationale, pagerank_frame): sort-merge would sort the
+    # pagerank rationale, rank_walk): sort-merge would sort the
     # O(m) edge side twice for zero information, while a shuffled-hash
     # build of the O(nodes) degree table streams the edges unsorted —
     # the per-task build is O(|nodes|/partitions), bounded at any
@@ -870,7 +865,7 @@ def _weighted_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier↔customer edges weighted by the {1,2,3} cost bands of
     ``_SSSP_W`` (more distinct shared orders = stronger tie). Returned
     UNCHECKPOINTED — each caller owns its own materialization point
-    (sssp checkpoints before the relaxation loop; the PageRank kernel
+    (sssp checkpoints before the relaxation loop; :func:`rank_sides`
     repartitions by src first so the checkpoint lands pre-partitioned)."""
     li = table(spark, sf_dir, "lineitem", fan_out=False).select("l_orderkey", "l_suppkey")
     o = table(spark, sf_dir, "orders", fan_out=False).select("o_orderkey", "o_custkey")
@@ -918,73 +913,13 @@ def sssp_frame(edges: DataFrame, sources: DataFrame, max_cost: int) -> DataFrame
     return dist.select("node", F.col("cost").cast("bigint").alias("cost"))
 
 
-def weighted_pagerank_frame(
-    edges: DataFrame, iterations: int = _PR_ITERATIONS, damping: float = _DAMPING
-) -> DataFrame:
-    """Weight-proportional PageRank over an ``(src, dst, w)`` edge frame
-    (w integer > 0): each node's rank flows to its neighbors pro rata to
-    edge weight instead of uniformly — the natural ranking for the
-    tie-strength edges :func:`sssp_weighted_from_hub` introduced.
-
-    Registered (round-9) through :func:`weighted_pagerank_trade`,
-    oracled via the same unrolled-CTE construction as
-    `pagerank_supplier_customer`. Same determinism discipline as the
-    uniform kernel: contributions are floor-quantized to 1e-15 and
-    summed as exact 64-bit integers, so per-iteration sums are order-free;
-    same scale shape: one O(|edges|) keyed shuffle per iteration with
-    map-side partial sums, state O(|nodes|), nothing collected. Nodes
-    are the distinct sources; a mirrored (symmetric) edge set has no
-    dangling mass by construction — callers with directed edges own
-    that accounting, as with the uniform kernel.
-
-    Property-pinned against a same-op-order sequential replica on
-    arbitrary weighted graphs (tests/test_property_blocks.py).
-    """
-    edges = edges.repartition("src").localCheckpoint(eager=True)
-    outw = edges.groupBy("src").agg(F.sum("w").alias("outw")).localCheckpoint(eager=True)
-    # O(1) driver-side scalar over the checkpointed out-weight frame —
-    # the same n-broadcast hoist as pagerank_frame (identical IEEE
-    # divisions, 5 broadcast-exchange subtrees dropped from the loop).
-    n = outw.count()
-    ranks = outw.select(
-        F.col("src").alias("node"),
-        "outw",
-        (F.lit(1.0) / F.lit(n)).alias("rank"),
-    )
-    q = F.lit(float(_Q))
-    for _ in range(iterations):
-        contribs = ranks.hint("shuffle_hash").join(
-            edges, F.col("node") == F.col("src")
-        ).select(
-            F.col("dst").alias("to"),
-            # bigint sums: exact and bit-identical to the decimal(38,0)
-            # staging (per-destination sums bounded by q = 1e15 ≪ 2^63
-            # since total rank mass is 1) with an 8-byte agg buffer —
-            # see pagerank_frame's A/B note
-            F.floor(F.col("rank") * F.col("w") / F.col("outw") * q).alias("c"),
-        )
-        sums = contribs.groupBy("to").agg(F.sum("c").alias("s"))
-        ranks = (
-            sums.join(outw.hint("shuffle_hash"), F.col("to") == F.col("src"))
-            .select(
-                F.col("to").alias("node"),
-                "outw",
-                (
-                    F.lit(1.0 - damping) / F.lit(n)
-                    + F.lit(damping) * (F.col("s").cast("double") / q)
-                ).alias("rank"),
-            )
-        )
-    return ranks.select("node", "rank")
-
-
 def _weighted_pagerank_oracle(iterations: int = _PR_ITERATIONS) -> str:
-    """Unrolled-iteration DuckDB oracle for the weighted kernel — the
+    """Unrolled-iteration DuckDB oracle for the weighted tier — the
     `_pagerank_oracle` construction with SUM(w) out-weights and
     weight-proportional contributions. The teleport term spells
     (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) so both engines
-    compute the IDENTICAL IEEE subtraction the kernel's
-    ``F.lit(1.0 - damping)`` does (a bare 0.15 decimal literal would
+    compute the IDENTICAL IEEE subtraction the query's
+    ``F.lit(1.0 - _DAMPING)`` does (a bare 0.15 decimal literal would
     cast to the neighboring double and could flip a floor-quantized
     contribution at a knife edge)."""
     tele = "(CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE))"
@@ -1048,26 +983,22 @@ def weighted_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     to relationship strength — "who is influential when strong trading
     ties count more", the weighted sibling completing the ranking tier.
 
-    Per iteration: ranks ⋈ edges on the source key (contribution =
-    rank·w/outw, floor-quantized to 1e-15 and summed as exact decimals
-    — order-free, bit-identical across engines), then a
-    destination-keyed partial+final aggregate; the edge frame is
-    repartitioned by the join key BEFORE its one checkpoint so all five
-    iterations join co-located (the uniform kernel's discipline). The
-    oracle unrolls the same five iterations as chained CTEs. Top-20 is
-    TakeOrdered with a node-id tiebreak.
-
-    100 TB shape: identical to the uniform tier — O(|edges|) shuffled
-    bytes per iteration with map-side partial sums, O(|nodes|) state,
-    node count rides the plan as a broadcast single-row aggregate,
-    nothing collected.
+    :func:`rank_walk` with ``weight="w"``: contribution rank·w/outdeg,
+    out-degree SUM(w). The node count n is one driver-side count of the
+    checkpointed out-weight frame folded into the init and teleport
+    literals, as in the uniform tier; the teleport is (1.0-0.85)/n, the
+    subtraction the oracle spells. The oracle unrolls the same five
+    iterations as chained CTEs. Top-20 is TakeOrdered with a node-id
+    tiebreak.
 
     Reference parity: the canonical iterative-MapReduce workload the
     reference cannot chain (SURVEY.md §2.2); closes the round-8
     verdict's staged-kernel item (next-round #1).
     """
-    edges = _weighted_trade_edges(spark, sf_dir)
-    ranks = weighted_pagerank_frame(edges)
+    edges, deg = rank_sides(_weighted_trade_edges(spark, sf_dir), weight="w")
+    n = deg.count()
+    init, teleport = F.lit(1.0) / F.lit(n), F.lit(1.0 - _DAMPING) / F.lit(n)
+    ranks = rank_walk(edges, deg, weight="w", init=init, teleport=teleport)
     # Round BEFORE ordering so the top-20 gate binds to the same value
     # the oracle's ORDER BY sees (the round-12 alias) — a round-12 tie
     # between distinct unrounded ranks must not flip limit membership.
@@ -1085,7 +1016,7 @@ _PPR_SEEDS = tuple(2 * s for s in range(1, 9))
 
 
 def _personalized_pagerank_oracle(iterations: int = _PR_ITERATIONS) -> str:
-    """Unrolled-iteration DuckDB oracle for the personalized kernel: the
+    """Unrolled-iteration DuckDB oracle for the personalized tier: the
     uniform construction with the teleport mass concentrated on the
     literal seed set — CASE WHEN node IN seeds THEN (1-d)/|S| ELSE 0 —
     and rank initialized to the seed indicator /|S|. The (1-d) term
@@ -1157,14 +1088,9 @@ def personalized_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFra
     tiebreak); zero-rank nodes outside the walk's reach are excluded in
     BOTH engines by the same round-12 gate.
 
-    Same per-iteration shape and determinism discipline as the uniform
-    tier (shared `_uniform_trade_graph` static sides — one checkpointed
-    src-partitioned edge list feeds all three ranking queries'
-    iteration loops): contributions floor-quantized at 1e-15 and summed
-    as exact decimals; the teleport constant is the IDENTICAL IEEE
-    expression in both engines; per-iteration cost O(|edges|) shuffled
-    bytes with map-side partial sums, state O(|nodes|), nothing
-    collected (the seed gate is a literal isin, not a join).
+    :func:`rank_walk` over the uniform tier's static sides, with the
+    seed gate a literal isin (no join, no broadcast, no node count) and
+    the teleport constant the IDENTICAL IEEE expression in both engines.
 
     Reference parity: the canonical iterative-MapReduce workload the
     reference cannot chain (SURVEY.md §2.2); completes the ranking
@@ -1172,36 +1098,10 @@ def personalized_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFra
     """
     edges, deg = _uniform_trade_graph(spark, sf_dir)
     ns = float(len(_PPR_SEEDS))
-    seed_col = F.col("src").isin(*_PPR_SEEDS)
-    ranks = deg.select(
-        F.col("src").alias("node"),
-        "outdeg",
-        F.when(seed_col, F.lit(1.0 / ns)).otherwise(F.lit(0.0)).alias("rank"),
-    )
-    q = F.lit(float(_Q))
-    tele = (
-        lambda col: F.when(
-            col.isin(*_PPR_SEEDS), F.lit((1.0 - _DAMPING) / ns)
-        ).otherwise(F.lit(0.0))
-    )
-    for _ in range(_PR_ITERATIONS):
-        contribs = ranks.hint("shuffle_hash").join(
-            edges, F.col("node") == F.col("src")
-        ).select(
-            F.col("dst").alias("to"),
-            # bigint sums — exact, bounded by q = 1e15 ≪ 2^63 per
-            # destination; see pagerank_frame's A/B note
-            F.floor(F.col("rank") / F.col("outdeg") * q).alias("c"),
-        )
-        sums = contribs.groupBy("to").agg(F.sum("c").alias("s"))
-        ranks = sums.join(deg.hint("shuffle_hash"), F.col("to") == F.col("src")).select(
-            F.col("to").alias("node"),
-            "outdeg",
-            (
-                tele(F.col("to"))
-                + F.lit(_DAMPING) * (F.col("s").cast("double") / q)
-            ).alias("rank"),
-        )
+    seed = F.col("node").isin(*_PPR_SEEDS)
+    init = F.when(seed, F.lit(1.0 / ns)).otherwise(F.lit(0.0))
+    teleport = F.when(seed, F.lit((1.0 - _DAMPING) / ns)).otherwise(F.lit(0.0))
+    ranks = rank_walk(edges, deg, init=init, teleport=teleport)
     return (
         ranks.select("node", F.round("rank", 12).alias("rank"))
         .filter(F.col("rank") > 0.0)
@@ -1252,80 +1152,20 @@ def _weekly_transition_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def rwr_grouped_frame(
-    edges: DataFrame,
-    seed,
-    iterations: int = _PR_ITERATIONS,
-    damping: float = _DAMPING,
-) -> DataFrame:
-    """GROUPED random-walk-with-restart: one independent weighted RWR
-    per ``week`` over a ``(week, src, dst, w)`` edge frame, seeded at
-    the single node ``seed`` (teleport mass (1-d) lands only there;
-    rank initialized to the seed indicator). The per-week loops run in
-    the SAME five joins — the group key simply widens every join and
-    aggregation key, so adding windows adds rows, never stages.
-
-    Same determinism discipline as :func:`weighted_pagerank_frame`:
-    contributions floor-quantized to 1e-15 and summed as exact
-    decimals; the teleport constant is a fixed IEEE expression spelled
-    identically in the oracle. Nodes are each week's distinct SOURCES
-    (outdeg ≥ 1 by construction); a dst that is never a src receives no
-    row — the oracle's inner join to the out-weight table drops it the
-    same way.
-
-    Scale shape: per iteration O(|edges|) shuffled bytes keyed by
-    (week, dst) with map-side partial sums, state O(weeks × nodes);
-    the edge frame is repartitioned by the join key (week, src) BEFORE
-    its one checkpoint so all iterations join co-located. Nothing is
-    collected or broadcast — the seed gate is a literal predicate.
-    """
-    edges = edges.repartition("week", "src").localCheckpoint(eager=True)
-    e = edges.select(
-        F.col("week").alias("e_week"),
-        F.col("src").alias("e_src"),
-        F.col("dst").alias("e_dst"),
-        F.col("w").alias("e_w"),
-    )
-    outw = (
-        edges.groupBy("week", "src")
-        .agg(F.sum("w").alias("outw"))
-        .localCheckpoint(eager=True)
-    )
-    ow = outw.select(
-        F.col("week").alias("o_week"), F.col("src").alias("o_src"), "outw"
-    )
-    ranks = outw.select(
-        "week",
-        F.col("src").alias("node"),
-        "outw",
-        F.when(F.col("src") == seed, F.lit(1.0)).otherwise(F.lit(0.0)).alias("rank"),
-    )
-    q = F.lit(float(_Q))
-    for _ in range(iterations):
-        contribs = ranks.hint("shuffle_hash").join(
-            e, (F.col("week") == F.col("e_week")) & (F.col("node") == F.col("e_src"))
-        ).select(
-            F.col("e_week").alias("cweek"),
-            F.col("e_dst").alias("to"),
-            # bigint sums — exact, bounded by q = 1e15 ≪ 2^63 per
-            # (week, destination) since each week's walk mass is 1;
-            # see pagerank_frame's A/B note
-            F.floor(F.col("rank") * F.col("e_w") / F.col("outw") * q).alias("c"),
-        )
-        sums = contribs.groupBy("cweek", "to").agg(F.sum("c").alias("s"))
-        ranks = sums.join(
-            ow.hint("shuffle_hash"),
-            (F.col("cweek") == F.col("o_week")) & (F.col("to") == F.col("o_src")),
-        ).select(
-            F.col("o_week").alias("week"),
-            F.col("to").alias("node"),
-            "outw",
-            (
-                F.when(F.col("to") == seed, F.lit(1.0 - damping)).otherwise(F.lit(0.0))
-                + F.lit(damping) * (F.col("s").cast("double") / q)
-            ).alias("rank"),
-        )
-    return ranks.select("week", "node", "rank")
+def _weekly_rwr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The visible ``(week, node, rank)`` rows of the windowed RWR: one
+    independent weighted walk per week over
+    :func:`_weekly_transition_edges`, seeded at ``_RWR_SEED`` (the
+    teleport mass (1-d) lands only there; rank starts as the seed
+    indicator), ranks rounded to 12 places with zero ranks dropped —
+    the row set both weekly faces and their oracles share."""
+    edges, deg = rank_sides(_weekly_transition_edges(spark, sf_dir), ("week",), "w")
+    seed = F.col("node") == F.lit(_RWR_SEED)
+    init = F.when(seed, F.lit(1.0)).otherwise(F.lit(0.0))
+    teleport = F.when(seed, F.lit(1.0 - _DAMPING)).otherwise(F.lit(0.0))
+    ranks = rank_walk(edges, deg, group=("week",), weight="w", init=init, teleport=teleport)
+    rounded = ranks.select("week", "node", F.round("rank", 12).alias("rank"))
+    return rounded.filter(F.col("rank") > 0.0)
 
 
 def _rwr_weekly_oracle(iterations: int = _PR_ITERATIONS, with_deltas: bool = False) -> str:
@@ -1427,16 +1267,16 @@ def rwr_weekly_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     detector behind funnel-health dashboards: a week whose 'purchase'
     proximity drops signals a broken funnel even when raw counts hold.
 
-    The grouped kernel (:func:`rwr_grouped_frame`) runs EVERY week's
-    walk in the same five join+aggregate rounds — the week key widens
-    each shuffle instead of multiplying stages, so 5 weeks or 5,000
-    cost the same plan depth. The oracle unrolls the identical five
-    iterations as chained CTEs with week in every key.
+    :func:`rank_walk` with ``group=("week",)`` runs EVERY week's walk
+    in the same five join+aggregate rounds — the week key widens each
+    shuffle instead of multiplying stages, so 5 weeks or 5,000 cost the
+    same plan depth. The oracle unrolls the identical five iterations
+    as chained CTEs with week in every key.
 
     100 TB shape: the transition derivation is one user-keyed window
     exchange over events (the sessionize family's shape) folding into
     O(weeks × |types|²) edge rows; each RWR iteration shuffles
-    O(|edges|) quantized-decimal contributions keyed by (week, dst)
+    O(|edges|) quantized bigint contributions keyed by (week, dst)
     with map-side partial sums. The seed gate is a literal predicate —
     nothing collected, nothing broadcast, no caps needed because the
     graph is vocabulary-bounded per week.
@@ -1446,13 +1286,7 @@ def rwr_weekly_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     personalized ladder with the TEMPORAL axis (round-9 handoff's
     gap-checked direction, built at the full bar).
     """
-    edges = _weekly_transition_edges(spark, sf_dir)
-    ranks = rwr_grouped_frame(edges, F.lit(_RWR_SEED))
-    return (
-        ranks.select("week", "node", F.round("rank", 12).alias("rank"))
-        .filter(F.col("rank") > 0.0)
-        .orderBy("week", F.desc("rank"), F.asc("node"))
-    )
+    return _weekly_rwr(spark, sf_dir).orderBy("week", F.desc("rank"), F.asc("node"))
 
 
 # ------------------------------------- multi-source harmonic centrality --
@@ -1525,7 +1359,7 @@ def harmonic_centrality_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: at horizon 3 the only 1/d terms are {{1, 1/2, 1/3}};
     they are summed as exact integer SIXTHS (6, 3, 2) and divided by
     6.0 once, so the score never depends on double addition order —
-    the same exactness trick as the quantized-decimal rank sums.
+    the same exactness trick as the quantized bigint rank sums.
 
     100 TB shape: the frontier state is O(|S| x |nodes|) rows (|S| = 4
     literal) and each hop is ONE join against the shared checkpointed
@@ -1566,7 +1400,7 @@ def harmonic_centrality_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join's frontier and the anti-join's seen set are O(|S| × nodes)
     # pairs of ints (measured at sf0.1: frontier ≤ 57 k rows, seen
     # ≤ 64 k vs 1.17 M edges), yet sort-merge re-SORTED the checkpointed
-    # O(|edges|) side every hop — the pagerank_frame rationale verbatim.
+    # O(|edges|) side every hop — the rank_walk rationale verbatim.
     # Hash-building the state sides streams the edges unsorted:
     # interleaved A/B at sf0.1, identical top-20, 4.181 → 3.993 s min
     # (and far tighter spread); executed plan 8 SortMergeJoins → 0.
@@ -1641,7 +1475,7 @@ def rwr_weekly_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     appends the identical LAG window.
 
     100 TB shape: the RWR's shape (one user-keyed window exchange +
-    five quantized-decimal join+agg rounds keyed by (week, dst)) plus
+    five quantized bigint join+agg rounds keyed by (week, dst)) plus
     ONE node-keyed exchange over the O(weeks × |types|) rank rows —
     the lag adds rows' worth of shuffle, never stages. Nothing
     collected, nothing broadcast.
@@ -1650,9 +1484,4 @@ def rwr_weekly_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytics it cannot chain, SURVEY.md §2.2); completes the temporal
     RWR pair prescribed by the round-10 handoff.
     """
-    edges = _weekly_transition_edges(spark, sf_dir)
-    ranks = rwr_grouped_frame(edges, F.lit(_RWR_SEED))
-    visible = ranks.select(
-        "week", "node", F.round("rank", 12).alias("rank")
-    ).filter(F.col("rank") > 0.0)
-    return rwr_weekly_deltas_frame(visible).orderBy("week", "node")
+    return rwr_weekly_deltas_frame(_weekly_rwr(spark, sf_dir)).orderBy("week", "node")

@@ -63,8 +63,9 @@ def _input_dir_bytes() -> int:
     return total
 
 
-def default_shuffle_partitions(cpus: int) -> int:
-    """Initial shuffle width sized to the data, clamped to the core count.
+def default_shuffle_partitions(cpus: int, size: int) -> int:
+    """Initial shuffle width sized to the data (``size`` input bytes, from
+    :func:`_input_dir_bytes`), clamped to the core count.
 
     ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` overrides (the cluster knob);
     without a known input dir the historical cores-sized default stands.
@@ -72,7 +73,6 @@ def default_shuffle_partitions(cpus: int) -> int:
     override = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0") or 0)
     if override > 0:
         return override
-    size = _input_dir_bytes()
     if size <= 0:
         return cpus
     return max(1, min(cpus, -(-size // _SHUFFLE_TARGET_BYTES)))
@@ -126,7 +126,9 @@ def get_session(app_name: str = "cooler-mapreduce-spark", cpus: int | None = Non
     spark = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{n}]")
-        .config("spark.sql.shuffle.partitions", str(default_shuffle_partitions(n)))
+        .config(
+            "spark.sql.shuffle.partitions", str(default_shuffle_partitions(n, _input_dir_bytes()))
+        )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -149,6 +151,7 @@ def apply_session_defaults(spark: SparkSession) -> SparkSession:
     change then, but the semantics-critical ones (timezone, AQE, Arrow) are
     runtime-settable.
     """
+    size = _input_dir_bytes()
     for k, v in (
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
@@ -173,12 +176,12 @@ def apply_session_defaults(spark: SparkSession) -> SparkSession:
                     "spark.sql.shuffle.partitions",
                     str(
                         default_shuffle_partitions(
-                            spark.sparkContext.defaultParallelism
+                            spark.sparkContext.defaultParallelism, size
                         )
                     ),
                 ),
             )
-            if _input_dir_bytes() > 0
+            if size > 0
             or int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0") or 0) > 0
             else ()
         ),

@@ -227,10 +227,10 @@ def zordered_layout(
     return spark.read.parquet(path)
 
 
-#: fan-out decision per (path, parallelism) — the split count of a static
-#: file never changes within a run, and the .rdd partition probe costs a
-#: plan construction per call.
-_FANOUT_CACHE: dict[tuple[str, int], bool] = {}
+#: (fan-out decision, file size) per (path, parallelism) — the split count
+#: and size of a static file never change within a run, and the .rdd
+#: partition probe costs a plan construction per call.
+_FANOUT_CACHE: dict[tuple[str, int], tuple[bool, int]] = {}
 
 #: Primary-key columns per table — the deterministic hash key for the
 #: fan-out exchange. A keyless ``repartition(n)`` is round-robin, and
@@ -288,8 +288,8 @@ def _fan_out(spark: SparkSession, df: DataFrame, path: str, name: str) -> DataFr
 
     cores = spark.sparkContext.defaultParallelism
     key = (path, cores)
-    fan = _FANOUT_CACHE.get(key)
-    if fan is None:
+    cached = _FANOUT_CACHE.get(key)
+    if cached is None:
         try:
             size = os.path.getsize(path)
         except OSError:
@@ -299,13 +299,10 @@ def _fan_out(spark: SparkSession, df: DataFrame, path: str, name: str) -> DataFr
             and cores >= 4
             and df.rdd.getNumPartitions() < max(2, cores // 2)
         )
-        _FANOUT_CACHE[key] = fan
+        cached = _FANOUT_CACHE[key] = (fan, size)
+    fan, size = cached
     if not fan:
         return df
-    try:
-        size = os.path.getsize(path)
-    except OSError:
-        size = 0
     weight = _FANOUT_WEIGHTS.get(name, 1)
     target = max(2, min(cores, -(-size * weight // _FANOUT_TARGET_BYTES)))
     keys = _TABLE_KEYS.get(name)

@@ -14,6 +14,27 @@ from cooler_mapreduce_spark.session import get_session  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 
+
+def _checkpoint_scans(plan: str) -> list[str]:
+    """Column lists of the checkpoint scans, expression ids stripped."""
+    return [re.sub(r"#\d+L?", "", m) for m in re.findall(r"Scan ExistingRDD\[([^\]]*)\]", plan)]
+
+
+def _rank_walk_checks(state: str) -> list:
+    """Checks shared by the rank_walk queries at k=5: the rank state is
+    checkpointed after round 3, so the registered plan holds rounds 4-5
+    over that checkpoint, each a shuffled-hash join pair with partial
+    sums before the destination-keyed shuffle."""
+    return [
+        ("rounds 4-5 read the checkpointed rank state", lambda p: state in _checkpoint_scans(p)),
+        ("2 rounds of partial contribution sums", lambda p: len(re.findall(r"partial_sum\(c#", p)) == 2),
+        ("4 shuffled-hash round joins, no sort-merge",
+         lambda p: p.count("ShuffledHashJoin") == 4 and "SortMergeJoin" not in p),
+        ("no cartesian / NL join",
+         lambda p: "CartesianProduct" not in p and "BroadcastNestedLoop" not in p),
+    ]
+
+
 #: query → (one-line claim, checks) where each check is (label, predicate
 #: over the executed-plan string).
 CASES = {
@@ -301,12 +322,10 @@ CASES = {
         ],
     ),
     "pagerank_supplier_customer": (
-        "iterative PageRank: k=5 chained join+partial-agg rounds, top-20 is TakeOrdered — no global sort, no cartesian, no driver loop materialization",
+        "iterative PageRank (rank_walk): k=5 join+partial-agg rounds off the src-partitioned checkpointed edge and degree sides, rank state checkpointed once after round 3; top-20 is TakeOrdered — no global sort, no cartesian, no NL join",
         [
-            ("per-round partial sums before the shuffle", lambda p: "partial_sum" in p),
             ("top-k never global-sorts", lambda p: "TakeOrderedAndProject" in p),
-            ("no cartesian product", lambda p: "CartesianProduct" not in p),
-            ("5 iteration aggregates present", lambda p: p.count("bloomFilter") == 0 and p.count("HashAggregate") >= 10),
+            *_rank_walk_checks("node,outdeg,rank"),
         ],
     ),
     "catalog_partitioned_scan": (
@@ -814,21 +833,19 @@ CASES = {
         ],
     ),
     "weighted_pagerank_trade": (
-        "weighted rank flow: 5 join + partial-agg rounds off the src-partitioned checkpointed edge list; top-20 is TakeOrdered, never a global sort",
+        "weighted rank flow (rank_walk, weight w): the uniform tier's 5 rounds with rank*w/outdeg contributions and the node count a driver-side literal; top-20 is TakeOrdered, never a global sort",
         [
             ("TakeOrdered, not Sort+Limit", lambda p: "TakeOrderedAndProject" in p),
-            ("partial contribution sums", lambda p: "partial_sum" in p),
-            ("checkpointed edge state", lambda p: "Scan ExistingRDD" in p),
-            ("no cartesian beyond 1-row scalar broadcasts", lambda p: "CartesianProduct" not in p),
+            ("weight-proportional contributions", lambda p: re.search(r"\(rank#\d+ \* cast\(w#", p)),
+            *_rank_walk_checks("node,outdeg,rank"),
         ],
     ),
     "personalized_pagerank_suppliers": (
-        "seed-cohort RWR: the same 5 checkpointed join + partial-agg rounds as the uniform tier with a literal isin teleport gate (no seed join, no broadcast); top-20 is TakeOrdered",
+        "seed-cohort RWR (rank_walk): the uniform tier's 5 rounds with a literal isin teleport gate (no seed join, no broadcast, no node count); top-20 is TakeOrdered",
         [
             ("TakeOrdered, not Sort+Limit", lambda p: "TakeOrderedAndProject" in p),
-            ("partial contribution sums", lambda p: "partial_sum" in p),
-            ("checkpointed edge state", lambda p: "Scan ExistingRDD" in p),
-            ("seed gate is a literal predicate, not a join", lambda p: "CartesianProduct" not in p and "BroadcastNestedLoop" not in p),
+            ("seed gate is a literal isin", lambda p: " IN (" in p),
+            *_rank_walk_checks("node,outdeg,rank"),
         ],
     ),
     "dedup_containment_pairs": (
@@ -876,12 +893,10 @@ CASES = {
         ],
     ),
     "rwr_weekly_event_types": (
-        "windowed RWR: 5 grouped join + partial-agg rounds off the (week, src)-partitioned checkpointed edge list (the week key widens each shuffle, never the stage count); the seed gate is a literal predicate",
+        "windowed RWR (rank_walk, group week): 5 grouped join + partial-agg rounds off the (week, src)-partitioned checkpointed edge list (the week key widens each shuffle, never the stage count); the seed gate is a literal predicate",
         [
-            ("partial contribution sums", lambda p: "partial_sum" in p),
-            ("checkpointed edge state", lambda p: "Scan ExistingRDD" in p),
-            ("no cartesian / NL join (seed gate is a literal)", lambda p: "CartesianProduct" not in p and "BroadcastNestedLoop" not in p),
-            ("iteration joins are shuffled-hash on (week, key)", lambda p: "ShuffledHashJoin" in p),
+            ("round shuffles keyed by (week, node)", lambda p: re.search(r"hashpartitioning\(week#\d+, node#", p)),
+            *_rank_walk_checks("week,node,outdeg,rank"),
         ],
     ),
     "fellegi_sunter_weights": (
@@ -921,14 +936,12 @@ CASES = {
         ],
     ),
     "rwr_weekly_deltas": (
-        "RWR drift: the windowed RWR's 5 grouped join+agg rounds plus ONE node-keyed lag window over the O(weeks x types) rank rows — the lag adds one exchange, never a stage multiplier",
+        "RWR drift: the windowed RWR's 5 grouped rank_walk rounds plus ONE node-keyed lag window over the O(weeks x types) rank rows — the lag adds one exchange, never a stage multiplier",
         [
             ("node-keyed lag window present", lambda p: any(
                 ln.strip().lstrip("+-*: ").startswith("Window ") and "node" in ln
                 for ln in p.splitlines())),
-            ("partial contribution sums", lambda p: "partial_sum" in p),
-            ("checkpointed edge state", lambda p: "Scan ExistingRDD" in p),
-            ("no cartesian / NL join", lambda p: "CartesianProduct" not in p and "BroadcastNestedLoop" not in p),
+            *_rank_walk_checks("week,node,outdeg,rank"),
         ],
     ),
     "takedown_scd2_versions": (

@@ -53,7 +53,8 @@ def main() -> None:
         hof.groupBy().sum("s").count()
 
     def fan(tbl: str, val: bool) -> None:
-        catalog._FANOUT_CACHE[(f"{SF_DIR}/{tbl}.parquet", cpus)] = val
+        path = f"{SF_DIR}/{tbl}.parquet"
+        catalog._FANOUT_CACHE[(path, cpus)] = (val, os.path.getsize(path))
 
     def fan_reset() -> None:
         catalog._FANOUT_CACHE.clear()

@@ -170,7 +170,19 @@ def test_pagerank_mass_conservation_and_concentration(spark, sf_dir):
     concentrates mass (max rank rises above uniform)."""
     from pyspark.sql import functions as F
 
-    from cooler_mapreduce_spark.operators.graph import pagerank_frame
+    from cooler_mapreduce_spark.operators.graph import _uniform_trade_graph, rank_walk
+
+    def pagerank_frame(spark, sf_dir, iterations):
+        # the uniform tier's ranks before its top-20
+        edges, deg = _uniform_trade_graph(spark, sf_dir)
+        n = deg.count()
+        return rank_walk(
+            edges,
+            deg,
+            init=F.lit(1.0) / F.lit(n),
+            teleport=F.lit(0.15) / F.lit(n),
+            iterations=iterations,
+        )
 
     r0 = pagerank_frame(spark, sf_dir, iterations=0)
     n = r0.count()

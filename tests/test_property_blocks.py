@@ -862,8 +862,8 @@ _wgraph = st.lists(
 
 
 def _wpr_py(rows, iters, damping=0.85):
-    # mirrors weighted_pagerank_frame's exact op order, including the
-    # floor quantization and the inner sums⋈outw join per iteration
+    # mirrors rank_walk's exact op order on the weighted path, including
+    # the floor quantization and the inner sums⋈outw join per iteration
     import math
 
     q = 1_000_000_000_000_000.0
@@ -886,18 +886,37 @@ def _wpr_py(rows, iters, damping=0.85):
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(base=_wgraph, iters=st.integers(1, 3))
+@given(base=_wgraph, iters=st.integers(0, 6))
 def test_weighted_pagerank_equals_sequential_replica(spark, base, iters):
-    """The staged weighted-PageRank kernel must be BIT-IDENTICAL to a
-    sequential replica written in the same op order (floor-quantized
-    decimal contribution sums make the distributed adds order-free) for
-    ANY mirrored weighted multigraph and damping=0.85."""
-    from cooler_mapreduce_spark.operators.graph import weighted_pagerank_frame
+    """The rank kernel must be BIT-IDENTICAL to a sequential replica
+    written in the same op order (floor-quantized bigint contribution
+    sums make the distributed adds order-free) for ANY mirrored weighted
+    multigraph, damping=0.85 and 0-6 rounds — so the mid-loop
+    truncation both fires and does not. The unweighted path is the same
+    replica with w ≡ 1 and degree = count (rank*1.0 == rank exactly)."""
+    from pyspark.sql import functions as F
+
+    from cooler_mapreduce_spark.operators.graph import _DAMPING, rank_sides, rank_walk
+
+    def walk(df, weight):
+        edges, deg = rank_sides(df, weight=weight)
+        n = deg.count()
+        ranks = rank_walk(
+            edges,
+            deg,
+            weight=weight,
+            iterations=iters,
+            init=F.lit(1.0) / F.lit(n),
+            teleport=F.lit(1.0 - _DAMPING) / F.lit(n),
+        )
+        return {r.node: r.rank for r in ranks.collect()}
 
     rows = base + [(d, s, w) for s, d, w in base]  # mirror: no dangling mass
     e = spark.createDataFrame(rows, "src int, dst int, w int")
-    got = {r.node: r.rank for r in weighted_pagerank_frame(e, iterations=iters).collect()}
-    assert got == _wpr_py(rows, iters)
+    assert walk(e, "w") == _wpr_py(rows, iters)
+    assert walk(e.select("src", "dst"), None) == _wpr_py(
+        [(s, d, 1) for s, d, _w in rows], iters
+    )
 
 
 def test_cluster_matches_composes_resolution_into_entities(spark):
@@ -1322,7 +1341,7 @@ _grwr_edges = st.lists(
 
 
 def _grouped_rwr_py(edges, seed, iterations, damping):
-    """Same-op-order sequential replica of ``rwr_grouped_frame``: per
+    """Same-op-order sequential replica of the grouped ``rank_walk``: per
     (group, src) out-weights, per-EDGE floor-quantized contributions
     summed as exact ints, teleport only at the seed — the weighted
     kernel's mirror with the group key widening every dict key."""
@@ -1356,22 +1375,30 @@ def test_grouped_rwr_equals_sequential_replica(spark, edges):
     trajectory as a sequential replica on ANY (group, src, dst, w)
     multiset — including groups without the seed (all-zero ranks),
     dst-only nodes (dropped by the out-weight join in both), self-loops
-    and duplicate edge rows. Bit-for-bit: the floor-quantized decimal
+    and duplicate edge rows. Bit-for-bit: the floor-quantized bigint
     sums make each iteration a pure function of the edge multiset."""
     from cooler_mapreduce_spark.operators.graph import (
         _DAMPING,
         _PR_ITERATIONS,
-        rwr_grouped_frame,
+        rank_sides,
+        rank_walk,
     )
     from pyspark.sql import functions as F2
 
     df = spark.createDataFrame(
         list(edges), "week int, src int, dst int, w int"
     )
-    got = {
-        (r.week, r.node): r.rank
-        for r in rwr_grouped_frame(df, F2.lit(1)).collect()
-    }
+    e, deg = rank_sides(df, group=("week",), weight="w")
+    seed = F2.col("node") == F2.lit(1)
+    ranks = rank_walk(
+        e,
+        deg,
+        group=("week",),
+        weight="w",
+        init=F2.when(seed, F2.lit(1.0)).otherwise(F2.lit(0.0)),
+        teleport=F2.when(seed, F2.lit(1.0 - _DAMPING)).otherwise(F2.lit(0.0)),
+    )
+    got = {(r.week, r.node): r.rank for r in ranks.collect()}
     want = _grouped_rwr_py(edges, 1, _PR_ITERATIONS, _DAMPING)
     assert got == want
 

@@ -45,7 +45,6 @@ _NL_ALLOWED = {
     "vocab_coverage_topk",     # 3 literal k-thresholds broadcast against vocab ranks
     "doc_unigram_nll",         # single-row corpus-total scalar broadcast to vocab rows
     "ccnet_perplexity_buckets",  # single-row tercile-cutoff scalar broadcast to doc rows
-    "pagerank_supplier_customer",  # single-row node-count scalar broadcast per iteration
     "bm25_topk",               # single-row N/avgdl scalar broadcast to matching postings
     "rrf_hybrid_search",       # bm25's scalar broadcast + the 1-row query-vector cross join
     "hard_negative_mining",    # same 1-row query-vector cross join + bm25's scalar broadcast
@@ -54,7 +53,6 @@ _NL_ALLOWED = {
     "dp_noisy_qi_grid_release",  # 25-nation dim × 5 literal segments — the bounded literal domain grid
     "entity_resolution_customers",  # single-row MAX(c_custkey) scalar broadcast to each dirty slice (r9 derived offsets)
     "entity_clusters_customers",    # composes the resolution above — same single-row scalar
-    "weighted_pagerank_trade",   # single-row node-count scalar broadcast per iteration (the pagerank convention)
     "fellegi_sunter_weights",    # single-row MAX(c_custkey) scalar per dirty slice (the ER convention) + the single-row m/u parameter aggregate broadcast over the pairs
     "bloom_prefilter_hot_orders",  # the ONE-row 16 KB packed bloom broadcast onto the fact scan — fixed size by construction regardless of key count
     "stream_bloom_gated_segments",  # the same ONE-row 16 KB bloom broadcast, onto the event scan (the streaming twin's batch face)
@@ -84,22 +82,23 @@ _LOCAL_RESULT = {"bpe_train_merges", "bpe_encode_stats",
 #: nested-loop, forced-broadcast, order-only window), and building the same
 #: logical frame four times was ~a third of the whole suite's wall time
 #: (r12: the driver's pytest gate timed out at ~40 min). The audits only
-#: READ plans, never execute, so sharing one frame per query is safe.
-_FRAMES: dict[str, object] = {}
-_PLANS: dict[str, str] = {}
+#: READ plans, never execute, so sharing one frame per (query, data dir)
+#: is safe.
+_FRAMES: dict[tuple[str, str], object] = {}
+_PLANS: dict[tuple[str, str], str] = {}
 
 
 def _frame(spark, name, sf_dir):
-    df = _FRAMES.get(name)
+    df = _FRAMES.get((name, sf_dir))
     if df is None:
-        df = _FRAMES[name] = SPECS[name].fn(spark, sf_dir)
+        df = _FRAMES[name, sf_dir] = SPECS[name].fn(spark, sf_dir)
     return df
 
 
 def _plan(spark, name, sf_dir):
-    p = _PLANS.get(name)
+    p = _PLANS.get((name, sf_dir))
     if p is None:
-        p = _PLANS[name] = (
+        p = _PLANS[name, sf_dir] = (
             _frame(spark, name, sf_dir)._jdf.queryExecution().executedPlan().toString()
         )
     return p
@@ -858,4 +857,80 @@ def test_no_unpartitioned_window_over_unbounded_input(spark, oracle_sf_dir, name
         f"spell the rank via exact_global_rank or add the query to "
         f"_ORDER_ONLY_WINDOW_ALLOWED with a docstring justifying the "
         f"bounded input"
+    )
+
+
+# --- sizing from inputs -------------------------------------------------------
+#
+# The catalog fan-out and the session's shuffle width are sized from input
+# bytes. Each size comes from ONE stat or walk: a second read can disagree
+# with the first (a failed stat reads as 0 bytes) and costs a walk per call.
+
+
+def test_fan_out_sizes_from_the_cached_stat(spark, oracle_sf_dir, monkeypatch):
+    """The fan-out width uses the size stat'ed with the fan decision: a
+    later failing stat must not shrink it to the 2-partition floor."""
+    import os
+    from types import SimpleNamespace
+
+    from cooler_mapreduce_spark.sources import catalog
+
+    path = f"{oracle_sf_dir}/lineitem.parquet"
+    df = spark.read.parquet(path)
+    # 8 cores and a zero size floor make the single-split file fan out
+    # on any host
+    host = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=8))
+    monkeypatch.setattr(catalog, "_FANOUT_CACHE", {})
+    monkeypatch.setattr(catalog, "_FANOUT_MIN_BYTES", 0)
+    real_getsize = os.path.getsize
+    stats = []
+
+    def getsize(p):
+        stats.append(p)
+        if len(stats) > 1:
+            raise OSError("stat failed")
+        return real_getsize(p)
+
+    monkeypatch.setattr(os.path, "getsize", getsize)
+
+    def width(out):
+        plan = out._jdf.queryExecution().logical().toString().splitlines()[0]
+        return int(re.search(r"RepartitionByExpression .*, (\d+)$", plan).group(1))
+
+    size = real_getsize(path)
+    want = max(2, min(8, -(-size * 2 // catalog._FANOUT_TARGET_BYTES)))
+    assert want > 2  # the regression would read as the floor
+    assert width(catalog._fan_out(host, df, path, "lineitem")) == want
+    assert width(catalog._fan_out(host, df, path, "lineitem")) == want
+    assert stats == [path]
+    assert catalog._FANOUT_CACHE == {(path, 8): (True, size)}
+
+
+def test_apply_session_defaults_walks_the_input_dir_once(oracle_sf_dir, monkeypatch):
+    """One walk of $SPARK_GRAFT_SF_DIR feeds both the guard and the
+    shuffle width."""
+    from types import SimpleNamespace
+
+    from cooler_mapreduce_spark import session
+
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", oracle_sf_dir)
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
+    monkeypatch.setattr(session, "ship_package", lambda spark: None)
+    real_walk = session.os.walk
+    walks = []
+
+    def walk(top, *a, **k):
+        walks.append(top)
+        return real_walk(top, *a, **k)
+
+    monkeypatch.setattr(session.os, "walk", walk)
+    conf: dict[str, str] = {}
+    host = SimpleNamespace(
+        conf=SimpleNamespace(set=conf.__setitem__),
+        sparkContext=SimpleNamespace(defaultParallelism=4),
+    )
+    session.apply_session_defaults(host)
+    assert walks == [oracle_sf_dir]
+    assert conf["spark.sql.shuffle.partitions"] == str(
+        session.default_shuffle_partitions(4, session._input_dir_bytes())
     )
