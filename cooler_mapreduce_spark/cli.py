@@ -52,7 +52,7 @@ import time
 
 
 def _submit(args: argparse.Namespace) -> int:
-    from .mr import run_job_file, to_tsv_lines
+    from .mr import run_job_file, text_records, to_tsv_lines
     from .session import get_session
 
     spark = get_session("mr-submit")
@@ -68,8 +68,7 @@ def _submit(args: argparse.Namespace) -> int:
     t0 = time.perf_counter()
 
     try:
-        lines = sc.textFile(args.input, minPartitions=args.num_map)
-        kv = lines.zipWithIndex().map(lambda t: (f"{args.input}:{t[1]}", t[0]))
+        kv = text_records(sc, args.input, args.num_map)
         result = run_job_file(spark, kv, args.job_file, num_reduce=args.num_reduce)
         to_tsv_lines(result).saveAsTextFile(args.output)
     finally:

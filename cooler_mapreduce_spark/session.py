@@ -15,16 +15,25 @@ in local test mode:
 - **Arrow enabled** — every Python-side exchange (pandas UDFs, toPandas)
   is columnar/batched, never row-at-a-time pickle (the reference's
   intermediate format, reference task_executor.py:159-170).
+- **Worker daemon** — Python workers start from :mod:`.worker_daemon`,
+  whose guard stops CPython 3.11's ``importlib.invalidate_caches()`` (run
+  by PySpark at the start of every task) from re-reading ``pyspark.zip``
+  once per imported subpackage: about 0.2 s of worker CPU per task. It is a
+  no-op for unchanged archives; one that changes on disk is re-read as
+  before. Static confs, so sessions built elsewhere keep the stock daemon.
 """
 
 from __future__ import annotations
 
 import hashlib
+import logging
 import os
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 
 def default_parallelism() -> int:
@@ -46,6 +55,8 @@ def default_parallelism() -> int:
 #: clamp below), where AQE coalescing takes over — so the knob never
 #: needs cluster-side retuning, only the env override.
 _SHUFFLE_TARGET_BYTES = 2 << 20
+
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
 def _input_dir_bytes() -> int:
@@ -86,7 +97,7 @@ def ship_package(spark: SparkSession) -> None:
     ``--py-files`` deployment path. Zipping is cached per-process and the
     RDD/compat tier (the only Python-on-executor consumer) depends on it.
     """
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    pkg_dir = _PKG_DIR
     # Stable digest (NOT built-in hash(), which is salted per process via
     # PYTHONHASHSEED): the cache path must be reproducible across
     # processes so reruns hit the same zip instead of accumulating stale
@@ -116,8 +127,9 @@ def ship_package(spark: SparkSession) -> None:
         os.replace(tmp, zip_path)
     try:
         spark.sparkContext.addPyFile(zip_path)
-    except Exception:
-        pass  # already added under another name, or context shutting down
+    except Exception as e:
+        # already added under another name, or context shutting down
+        log.warning("addPyFile(%s) failed: %s", zip_path, e)
 
 
 def get_session(app_name: str = "cooler-mapreduce-spark", cpus: int | None = None) -> SparkSession:
@@ -138,6 +150,8 @@ def get_session(app_name: str = "cooler-mapreduce-spark", cpus: int | None = Non
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        .config("spark.python.daemon.module", "cooler_mapreduce_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", os.path.dirname(_PKG_DIR))
         .getOrCreate()
     )
     ship_package(spark)
@@ -188,7 +202,8 @@ def apply_session_defaults(spark: SparkSession) -> SparkSession:
     ):
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # immutable in this deployment — accept the session's value
+        except Exception as e:
+            # immutable in this deployment — accept the session's value
+            log.warning("conf.set(%s) failed, keeping the session's value: %s", k, e)
     ship_package(spark)
     return spark

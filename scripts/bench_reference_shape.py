@@ -27,7 +27,7 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F  # noqa: E402
 
 from cooler_mapreduce_spark.functions.text import word_tokens  # noqa: E402
-from cooler_mapreduce_spark.mr import run_job, to_tsv_lines  # noqa: E402
+from cooler_mapreduce_spark.mr import run_job, text_records, to_tsv_lines  # noqa: E402
 from cooler_mapreduce_spark.session import get_session  # noqa: E402
 
 TARGET_MB = 9.6
@@ -88,8 +88,7 @@ def main() -> None:
 
     t_mr = float("inf")
     for _ in range(2):
-        lines = spark.sparkContext.textFile(path, minPartitions=cores)
-        kv = lines.zipWithIndex().map(lambda t: (f"{path}:{t[1]}", t[0]))
+        kv = text_records(spark.sparkContext, path, cores)
         t0 = time.perf_counter()
         out = run_job(spark, kv, _wc_map, _sum_reduce, combine_fn=_sum_reduce)
         to_tsv_lines(out).count()  # materialize incl. the reference's TSV render
