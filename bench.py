@@ -76,181 +76,26 @@ HEADLINE = [
     "entity_resolution_customers",  # record linkage: block equi-join + levenshtein scoring + keyed best-match window
     "tdigest_quantiles_price",      # sketch tier's Arrow profile: per-partition numpy compression + single-group centroid funnel
 ]
-# Excluded by design: ann_recall_lsh/ann_recall_ivf re-run two already-
-# benched ANN tiers plus a join — benching them would double-count the
-# tiers' cost; sink_tsv_roundtrip and pysink_tsv_roundtrip duplicate the
-# sink path already covered by the (heavier, columnar) ORC roundtrip;
-# vocab_coverage_topk shares doc_unigram_nll's tokenize+term-agg spine
-# (the only corpus-sized work either does); stream_user_type_counts'
-# batch twin is the same shuffle shape as stream_user_totals;
-# multimodal_frame_sample_stats runs the same mapInPandas Arrow path as
-# multimodal_resize_stats over the same 500 videos — only the per-batch
-# kernel differs (frame subsampling vs resize arithmetic), so one entry
-# covers the tier's scan/serialization cost and the other would
-# double-count it; catalog_partitioned_scan, zorder_scan and
-# dpp_partitioned_join's timed cost would be ~90 % one-time fixture
-# materialization (writing the partitioned / z-ordered copy), not query
-# cost — their scan-side benefits (pruned listing, stat-box skipping,
-# runtime DPP metrics) are asserted structurally in tests instead.
-# Of the late round-5 additions, q9 and the triangle census are benched
-# (new cost profiles: widest profit join; m^1.5 wedge join over a
-# checkpointed edge set). The rest re-exercise benched shapes:
-# Q2/Q20 are window-threshold filters over one grouped shuffle
-# (window_top... covers the window tier, pricing_summary the agg tier),
-# Q11's scalar-subquery broadcast matches q18's collapsed chain, Q16 is
-# distinct+anti-join (dedup_exact covers the distinct exchange),
-# ohlc_hourly_by_type is the same single-exchange events agg as
-# stream_tumbling_counts' twin, and attribution_linear_touch's bounded
-# user-keyed theta join is join_interval_overlap's shape plus a window.
-# bpe_train_merges is excluded as an iterative driver-loop tier already
-# represented by pagerank: its corpus-sized work is ONE tokenize scan
-# (the tokenize family is benched via tfidf/doc_unigram_nll) and its
-# measured 4.3 s at sf0.1 is ~10 rounds of fixed small-job scheduling
-# over the vocab-bounded (31-word) symbol table — a scheduler-overhead
-# measurement, not an engine-throughput one. clustering_coefficient_topk
-# (5.1 s steady at sf0.1 on the r7 basket-array derivation) re-runs
-# the census's checkpointed graph
-# derivation plus the same adjacency join with an exploded listing —
-# benching it would mostly double-count the benched census;
-# kcore_copurchase (4.1 s) is a peeling loop over the tiny affinity
-# graph — like bpe, round-scheduling overhead, with the iterative tier
-# already represented by pagerank.
-# Of the round-6 additions, autocorr and the skyline are benched (new
-# cost profiles: the series rollup + unpivoted co-moment pass; the
-# local-prune + level-window skyline). The rest re-exercise benched
-# shapes: ewma/max_drawdown share autocorr's day-rollup scan and differ
-# only in the O(days) window tail; time_weighted_avg_value is a
-# user-keyed window+agg over events (stream_tumbling_counts' twin covers
-# that exchange); incremental_agg_merge is two pricing_summary-shaped
-# partial aggs plus an O(groups) merge; docs_repetition_filter re-runs
-# the benched tokenize family (tfidf/doc_unigram_nll) plus a per-doc
-# keyed count; join_asof_forward_tolerance mirrors join_asof_last_click's
-# union+carry window (its interval cousin join_interval_overlap is
-# benched); bfs_hops_from_hub is a ≤6-round frontier loop over the same
-# checkpointed edge set as pagerank — iterative scheduling overhead,
-# already represented.
-# Of the round-6 second-half additions, holt (sequential HOF fold — a
-# cost profile no other entry has), the weighted median (first RANGE-
-# frame cumulative window over the raw fact table) and the 2-feature
-# OLS (widest partial-agg payload: 10 decimal-staged sufficient
-# statistics in one pass) are benched. The rest re-exercise benched
-# shapes: sql_group_by_all resolves to pricing_summary's agg plan;
-# dedup_prefix_filter_jaccard's honest loss to the posting-list join at
-# this corpus shape is measured in SCALING.md (benching both would
-# double-count the shingle explode); sink_cow_upsert_partitioned is
-# ~80 % fixture write like the other sink roundtrips (ORC roundtrip
-# covers the sink path); stream_stream_left_outer_clicks matches the
-# inner twin's join shape; udtf_table_arg_sessionize is a deliberate
-# Python-hot-path API certification (its declarative twin's shape is
-# the benched window family); downsample_lttb_daily and
-# label_propagation_communities share benched shapes (events
-# day-rollup + argmax; pagerank-style keyed join rounds).
-# Of the round-6 third-wave additions, semdedup_prune_cells is benched
-# (new cost profile: the within-cell all-pairs cosine self-join — the
-# quadratic-verify shape none of the LSH/bucketed dedup entries have).
-# The rest re-exercise benched shapes: rrf_hybrid_search is the benched
-# BM25 tokenize spine plus ONE query-vector cosine scan (the bruteforce
-# ANN entry times eight) and a 50-row fusion join;
-# quantile_bin_rollup_regions is an orders⋈customer join + an
-# O(nations×64-bins) two-level agg (revenue_by_nation covers that join
-# exchange); sql_identifier_clause parses to the same plan as a
-# hand-written supplier⋈nation group-by (parse-time name binding,
-# nothing to time).
-# Of the round-6 fourth-wave additions, embedding_pq_fidelity is
-# benched (new cost profile: the pure map-side encode — 40 literal
-# sub-codebook distance folds + reconstruction per row, zero
-# shuffles — no other entry is expression-bound like this).
-# semdedup_apply re-runs the benched semdedup derivation plus an
-# anti-join; embedding_jl_projection_fidelity, ann_recall_pq and
-# ann_recall_jl are literal-bounded audit joins (1225 / 8×corpus pairs)
-# whose corpus-side scans the benched ANN tiers already time;
-# semdedup_incremental_new_batch runs three instances of the benched
-# semdedup pair kernel over subsets of the same cells; the governance
-# pair and mixing_weights_temperature are single-groupBy rollups
-# (pricing_summary's exchange shape) with O(groups) scalar math;
-# sql_create_function_udfs inlines to a lineitem band join the TPC-H
-# entries already cover; ccnet_perplexity_buckets re-runs the benched
-# doc_unigram_nll spine plus an O(bins) CDF; join_asof_nearest is the
-# benched as-of exchange with a second per-user sort;
-# seasonal_decompose_weekly shares autocorr's day-rollup scan with an
-# O(days) window tail.
-# Of the round-8 growth additions, entity_resolution_customers is
-# benched (new cost profile: the blocked linkage join — levenshtein
-# scoring inside a shuffled equi-join plus the rec_id-keyed best-match
-# window; no other entry runs string-distance kernels in a join) and
-# tdigest_quantiles_price is benched (the sketch tier's Arrow profile:
-# per-partition numpy stream compression + the single-group centroid
-# funnel — multimodal_resize_stats times Arrow over 500 blobs, this
-# times it over the full fact table). The rest re-exercise benched
-# shapes: sssp_weighted_from_hub is a ≤8-round frontier loop over the
-# SAME checkpointed edge derivation as the excluded BFS — iterative
-# scheduling overhead, represented by pagerank;
-# kalman_smooth_weekly_revenue shares holt's weekly-collapse scan and
-# differs only in the O(weeks) fold arithmetic; dp_noisy_quantiles_price
-# is pricing_summary's exchange shape collapsed onto 64 grid rows;
-# sql_tablesample_faces is a TakeOrdered + a gate-filter scan
-# (shipping_priority_topk and forecast_revenue_change cover both);
-# stream_observed_metrics' drain cost is the benched real-stream
-# tumbling drain minus its state store (observe riding a noop sink).
-# The round-9 registrations all re-exercise benched shapes and are
-# excluded to keep the common set comparable across rounds:
-# weighted_pagerank_trade is the benched pagerank's iteration loop with
-# a weight column in the contribution expression (same checkpointed
-# edge derivation as the excluded SSSP/BFS); entity_clusters_customers
-# re-runs the benched entity_resolution_customers plus CC rounds over
-# the O(matched) pair set (iterative scheduling overhead, represented
-# by pagerank); dp_noisy_qi_grid_release and the re-shaped
-# dp_noisy_quantiles_price are pricing_summary's exchange collapsed
-# onto <=125 literal cells; stream_observed_metrics_by_type is the
-# same AvailableNow drain as the excluded stream_observed_metrics with
-# 10 counter cells instead of 4; sql_tablesample_bucket_twin's timed
-# cost outside the one-time bucketed-fixture write is two partial-agg
-# scans (the pruned-scan benefit is asserted structurally via
-# SelectedBucketsCount in tests, the catalog_partitioned_scan rule).
-# The round-10 registrations likewise re-exercise benched shapes and
-# stay out of the common set: kanonymity_lattice_customers is one
-# partial-agg shuffle over the DIMENSION table (pricing_summary times
-# that exchange class on the fact table; the 8-tuple grouping-sets
-# Expand collapses map-side, leaving O(classes) shuffled rows);
-# rwr_weekly_event_types and harmonic_centrality_hubs are
-# iterative join+agg rounds over checkpointed edge state (pagerank
-# times that loop shape; the week/seed key widens rows, not stages);
-# fellegi_sunter_weights re-runs entity_resolution's blocked
-# levenshtein join plus two O(1)-row aggregates;
-# bloom_prefilter_hot_orders is a filter scan + small broadcast join
-# (forecast_revenue_change and join_orders_customers time both) — its
-# 16 KB bloom build is O(hot) work below the scheduling floor.
-# The round-11 registrations likewise re-exercise benched shapes and
-# stay out of the common set: takedown_cascade_manifest is three
-# semi/anti keyed joins over orders/lineitem plus O(1)-row counts (the
-# keyed-join exchange class is benched via join_orders_customers/q18);
-# fellegi_sunter_em_customers re-runs the benched entity_resolution
-# blocked-join spine plus five 1-row iteration aggregates (iterative
-# small-job scheduling, represented by pagerank); rwr_weekly_deltas
-# re-runs the excluded rwr_weekly_event_types loop plus ONE node-keyed
-# lag window (the window family is benched via
-# window_top_orders_per_customer); stream_bloom_gated_segments is the
-# event scan + 16 KB bloom probe + hourly windowed agg —
-# stream_tumbling_counts times that exchange and the probe's per-row
-# cost is the benched prefilter's. Mid-r11: takedown_scd2_versions
-# re-runs the benched SCD2 window derivation's exchange class
-# (window_top_orders_per_customer) plus keyed anti/semi count joins
-# (the takedown class above) — nothing new to time;
-# dq_gate_event_batches is one conditional-agg groupBy over events
-# onto 8 manifest rows (stream_tumbling_counts times that exchange
-# class; the streaming gate's routing cost is a sink write, covered by
-# the ORC roundtrip's file I/O profile). Late-r11:
-# erasure_propagation_docs is keyed anti/semi joins over the two small
-# document-keyed tables plus 1-row counts (the takedown class above,
-# on dimension-sized inputs — below the scheduling floor);
-# stream_erasure_gated_upsert is one broadcast anti join feeding the
-# benched dedup_keep_latest argmax exchange class over orders;
-# dq_quarantine_replay re-runs the dq_gate rollup twice plus the
-# keep-latest argmax (both classes benched via stream_tumbling_counts
-# and dedup_keep_latest) with O(batches) audit joins on top;
-# retention_expiry_orders is the takedown anti/semi class over orders
-# with per-year count rollups — join_orders_customers and
-# pricing_summary time both constituents.
+# Excluded by design: each family re-runs a shape an entry above already
+# times (benching it would double-count that cost) or is mostly one-time
+# fixture work. One line per family: excluded queries -> what covers them.
+#   ANN audits: ann_recall_{lsh,ivf,pq,jl}, embedding_jl_projection_fidelity -> ann_topk_*
+#   sink roundtrips: sink_tsv_roundtrip, pysink_tsv_roundtrip, sink_cow_upsert_partitioned -> sink_orc_roundtrip
+#   fixture-bound layouts: catalog_partitioned_scan, zorder_scan, dpp_partitioned_join, sql_tablesample_bucket_twin -> asserted structurally in tests
+#   tokenize spine: vocab_coverage_topk, docs_repetition_filter, ccnet_perplexity_buckets, rrf_hybrid_search -> tfidf_top_terms, doc_unigram_nll
+#   Arrow mapInPandas: multimodal_frame_sample_stats -> multimodal_resize_stats
+#   events single-exchange aggs: stream_user_type_counts, ohlc_hourly_by_type, time_weighted_avg_value, stream_observed_metrics(_by_type), dq_gate_event_batches, stream_bloom_gated_segments -> stream_tumbling_counts
+#   TPC-H threshold/scalar shapes: min_cost_supplier_q2, potential_promotion_q20, important_part_value_q11, parts_supplier_relationship_q16 -> window_top_orders_per_customer, large_orders_q18, dedup_exact
+#   temporal joins: attribution_linear_touch, join_asof_forward_tolerance, join_asof_nearest -> join_interval_overlap, join_asof_last_click
+#   iterative driver loops: bpe_train_merges, kcore_copurchase, bfs_hops_from_hub, sssp_weighted_from_hub, label_propagation_communities, weighted_pagerank_trade, rwr_weekly_event_types, rwr_weekly_deltas, harmonic_centrality_hubs, entity_clusters_customers, fellegi_sunter_em_customers -> pagerank_supplier_customer
+#   graph census: clustering_coefficient_topk -> triangle_count_copurchase
+#   day/week series rollups: ewma_daily_revenue, max_drawdown_revenue, seasonal_decompose_weekly, downsample_lttb_daily, kalman_smooth_weekly_revenue -> autocorr_daily_revenue, holt_linear_smoothing
+#   single-groupBy rollups: sql_group_by_all, incremental_agg_merge, mixing_weights_temperature, the k-anonymity and DP governance tier (kanonymity_*, dp_noisy_*) -> pricing_summary
+#   shingle/semantic dedup: dedup_prefix_filter_jaccard (SCALING.md), semdedup_apply, semdedup_incremental_new_batch -> dedup_minhash_lsh, semdedup_prune_cells
+#   joins and SQL faces: quantile_bin_rollup_regions, sql_identifier_clause, sql_create_function_udfs, sql_tablesample_faces, bloom_prefilter_hot_orders, stream_stream_left_outer_clicks -> revenue_by_nation, the TPC-H entries, join_orders_customers
+#   record linkage: fellegi_sunter_weights -> entity_resolution_customers
+#   Python hot path: udtf_table_arg_sessionize (API certification) -> window_top_orders_per_customer
+#   erasure and quarantine tier: takedown_cascade_manifest, takedown_scd2_versions, erasure_propagation_docs, retention_expiry_orders, stream_erasure_gated_upsert, dq_quarantine_replay -> join_orders_customers, dedup_keep_latest
 
 #: REAL-STREAM surfaces (not batch twins): each starts an actual
 #: StreamingQuery over the sf dir and times a full bounded-replay drain —

@@ -19,8 +19,6 @@ package re-creates is the *semantics*:
 - ``functions``    — reusable Column-level building blocks (tokenization,
                      vector math, hashing) kept JVM-side where possible.
 - ``streaming``    — Structured Streaming pipelines over the events table.
-- ``plans``        — plan-inspection utilities (shuffle counting, pushdown
-                     checks) used by tests to enforce scale discipline.
 
 Every operator is designed for a 1000-executor / 100 TB deployment and
 merely *tested* on local[32]; see module docstrings for the partitioning

@@ -1929,14 +1929,6 @@ def kmv_sketch(df: DataFrame, keys: list[str], value: str, k: int = _KMV_K) -> D
     )
 
 
-def _kmv_theta(ks: str, k: int = _KMV_K) -> F.Column:
-    """Sampling threshold theta of a packed sketch: the k-th minimum if
-    the sketch is full, else 1.0 (the group's distinct set is exact)."""
-    return F.when(
-        F.size(ks) >= k, F.element_at(F.col(ks), k)
-    ).otherwise(F.lit(1.0))
-
-
 def kmv_estimate(ks: str, k: int = _KMV_K) -> F.Column:
     """Distinct-count estimator over the packed sketch column named
     ``ks``: (k-1)/theta for full sketches (the classic KMV unbiased

@@ -467,7 +467,7 @@ _AUDIO_SAMPLE_RATE = 16_000
 _AUDIO_SILENCE_ABS = 512
 _AUDIO_SCHEMA = "doc_id bigint, n_samples bigint, sum_sq bigint, n_silent bigint, peak bigint"
 _AUDIO_EXPRS = (
-    "CAST(n_samples AS DOUBLE) / 16000.0 AS duration_s",
+    f"CAST(n_samples AS DOUBLE) / {_AUDIO_SAMPLE_RATE}.0 AS duration_s",
     "sqrt(CAST(sum_sq AS DOUBLE) / n_samples) AS rms",
     "CAST(n_silent AS DOUBLE) / n_samples AS silence_ratio",
     "peak",

@@ -8,8 +8,9 @@ in local test mode:
 - **AQE on** — runtime coalescing of shuffle partitions, skew-join
   splitting, and dynamic join-strategy switches replace any hand-tuning of
   the reference's fixed M×R task counts (reference design.md:67-108).
-- **shuffle.partitions** — sized to cores locally; on a real cluster AQE's
-  ``advisoryPartitionSizeInBytes`` makes the initial number mostly moot.
+- **shuffle.partitions** — sized to the input bytes, clamped to the cores;
+  on a real cluster AQE's ``advisoryPartitionSizeInBytes`` makes the
+  initial number mostly moot.
 - **UTC session timezone** — deterministic timestamp semantics and parity
   with the DuckDB oracle.
 - **Arrow enabled** — every Python-side exchange (pandas UDFs, toPandas)
@@ -20,7 +21,8 @@ in local test mode:
   by PySpark at the start of every task) from re-reading ``pyspark.zip``
   once per imported subpackage: about 0.2 s of worker CPU per task. It is a
   no-op for unchanged archives; one that changes on disk is re-read as
-  before. Static confs, so sessions built elsewhere keep the stock daemon.
+  before. Static confs, so sessions built elsewhere keep the stock daemon
+  and import the package from :func:`ship_package`'s zip.
 """
 
 from __future__ import annotations
@@ -53,10 +55,28 @@ def default_parallelism() -> int:
 #: still coalesces every ENSURE_REQUIREMENTS exchange by its own advisory
 #: size. On a cluster the same formula saturates at the core count (the
 #: clamp below), where AQE coalescing takes over — so the knob never
-#: needs cluster-side retuning, only the env override.
+#: needs cluster-side retuning (a fixed width is
+#: ``spark.sql.shuffle.partitions``).
 _SHUFFLE_TARGET_BYTES = 2 << 20
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+
+#: Runtime-settable confs every engine session carries: ``get_session``
+#: sets each on the builder, :func:`apply_session_defaults` on a session
+#: built elsewhere, so both plan alike.
+SESSION_DEFAULTS: tuple[tuple[str, str], ...] = (
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+    ("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)),
+    # Python-DataSource predicate pushdown (the tsv/synthetic connectors
+    # implement pushFilters; the API asserts if this is off while a
+    # reader implements it)
+    ("spark.sql.python.filterPushdown.enabled", "true"),
+)
 
 
 def _input_dir_bytes() -> int:
@@ -78,12 +98,8 @@ def default_shuffle_partitions(cpus: int, size: int) -> int:
     """Initial shuffle width sized to the data (``size`` input bytes, from
     :func:`_input_dir_bytes`), clamped to the core count.
 
-    ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` overrides (the cluster knob);
-    without a known input dir the historical cores-sized default stands.
+    Without a known input dir the historical cores-sized default stands.
     """
-    override = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0") or 0)
-    if override > 0:
-        return override
     if size <= 0:
         return cpus
     return max(1, min(cpus, -(-size // _SHUFFLE_TARGET_BYTES)))
@@ -92,10 +108,13 @@ def default_shuffle_partitions(cpus: int, size: int) -> int:
 def ship_package(spark: SparkSession) -> None:
     """Make this package importable on executors via ``addPyFile``.
 
-    Local mode forks Python workers that don't inherit the driver's
-    ``sys.path`` mutations; on a real cluster this is exactly the
-    ``--py-files`` deployment path. Zipping is cached per-process and the
-    RDD/compat tier (the only Python-on-executor consumer) depends on it.
+    For sessions built outside :func:`get_session` (whose workers find the
+    package on ``spark.executorEnv.PYTHONPATH``): local mode forks Python
+    workers that don't inherit the driver's ``sys.path`` mutations; on a
+    real cluster this is exactly the ``--py-files`` deployment path. The
+    zip is cached in the tempdir under a digest of the package's files, and
+    the RDD/compat tier (the only Python-on-executor consumer) depends on
+    it.
     """
     pkg_dir = _PKG_DIR
     # Stable digest (NOT built-in hash(), which is salted per process via
@@ -135,71 +154,42 @@ def ship_package(spark: SparkSession) -> None:
 def get_session(app_name: str = "cooler-mapreduce-spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) a local SparkSession with the engine's defaults."""
     n = cpus or default_parallelism()
-    spark = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{n}]")
-        .config(
+    builder = SparkSession.builder.appName(app_name).master(f"local[{n}]")
+    for k, v in SESSION_DEFAULTS:
+        builder = builder.config(k, v)
+    return (
+        builder.config(
             "spark.sql.shuffle.partitions", str(default_shuffle_partitions(n, _input_dir_bytes()))
         )
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.python.daemon.module", "cooler_mapreduce_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", os.path.dirname(_PKG_DIR))
         .getOrCreate()
     )
-    ship_package(spark)
-    return spark
 
 
 def apply_session_defaults(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable defaults to an externally-built session.
+    """Apply :data:`SESSION_DEFAULTS` to an externally-built session.
 
     The driver contract hands us a ready SparkSession; static configs can't
-    change then, but the semantics-critical ones (timezone, AQE, Arrow) are
-    runtime-settable.
+    change then (so its workers keep the stock daemon and import this
+    package from :func:`ship_package`'s zip), but every entry of the table
+    is runtime-settable.
     """
+    confs = SESSION_DEFAULTS
     size = _input_dir_bytes()
-    for k, v in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        # Python-DataSource predicate pushdown (the tsv/synthetic
-        # connectors implement pushFilters; the API asserts if this is
-        # off while a reader implements it)
-        ("spark.sql.python.filterPushdown.enabled", "true"),
+    if size > 0:
         # Data-proportional initial shuffle width (see
         # default_shuffle_partitions): runtime-settable, result-neutral
         # (tests pin invariance under shuffle.partitions), and the only
         # way the streaming state-store partition count tracks input
         # volume instead of the hosting session's core count. Only set
-        # when the input dir (or the env override) actually determines a
-        # value — otherwise the hosting session's own choice stands.
-        *(
-            (
-                (
-                    "spark.sql.shuffle.partitions",
-                    str(
-                        default_shuffle_partitions(
-                            spark.sparkContext.defaultParallelism, size
-                        )
-                    ),
-                ),
-            )
-            if size > 0
-            or int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0") or 0) > 0
-            else ()
-        ),
-    ):
+        # when the input dir actually determines a value — otherwise the
+        # hosting session's own choice stands.
+        width = default_shuffle_partitions(spark.sparkContext.defaultParallelism, size)
+        confs += (("spark.sql.shuffle.partitions", str(width)),)
+    for k, v in confs:
         try:
             spark.conf.set(k, v)
         except Exception as e:

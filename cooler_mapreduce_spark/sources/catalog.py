@@ -24,12 +24,6 @@ TABLES = (
     "embeddings",
 )
 
-#: Dimension tables small enough to broadcast at *any* scale factor —
-#: region/nation are fixed-cardinality; supplier/customer/part grow with SF
-#: but stay tiny relative to the fact tables (classic star-schema shape).
-BROADCAST_SAFE = ("region", "nation")
-
-
 #: Fan out single-split scans above this size. The test parquet files are
 #: written as ONE row group each, and parquet can't split below row-group
 #: granularity — so without intervention every scan (and everything fused
@@ -261,7 +255,7 @@ _TABLE_KEYS: dict[str, tuple[str, ...]] = {
 #: weights (how much downstream work a compressed byte usually buys:
 #: documents explode to tokens/shingles, embeddings decode to dense float
 #: arrays, events feed sessionization windows; the TPC-H tables are
-#: near-flat scans+aggs). r12 A/B (scripts/opt_probe6.py, 26 queries × 3
+#: near-flat scans+aggs). r12 A/B (OPTIMIZATION_r12.md, 26 queries × 3
 #: policies × 3 interleaved rounds at sf0.1/32c): sizing the fan-out by
 #: bytes×weight instead of defaultParallelism won or tied 22/27 probes
 #: (word_count 0.524→0.293, tfidf 0.470→0.347, ann_topk 0.469→0.384,

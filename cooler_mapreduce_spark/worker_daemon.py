@@ -11,8 +11,7 @@ user code runs (4-vCPU x86 host).
 The daemon replaces ``zipimporter.invalidate_caches`` with a guard that
 re-reads an archive only when its ``(st_mtime_ns, st_size)`` differs from
 the stamp recorded on that importer's last read. An archive that really
-changes on disk is re-read exactly as before; the package zip from
-``session.ship_package`` is content-addressed and never changes in place.
+changes on disk is re-read exactly as before.
 
 ``session.get_session`` starts this module as the daemon
 (``spark.python.daemon.module``), with the package's parent directory on

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for named queries to plans/r12/<q>_<tag>.txt.
+"""Dump .explain("formatted") for named queries to <out_dir>/<q>_<tag>.txt.
 
-Usage: python scripts/dump_plans_r12.py <tag> [query ...]
+Usage: python scripts/dump_plans.py <out_dir> <tag> [query ...]
 With no query names, dumps the bench.py batch headline set.
 """
 
@@ -18,15 +18,14 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    tag = sys.argv[1]
+    out_dir, tag = sys.argv[1], sys.argv[2]
     from bench import HEADLINE
     from cooler_mapreduce_spark.registry import load_all
     from cooler_mapreduce_spark.session import get_session
 
-    names = sys.argv[2:] or list(HEADLINE)
+    names = sys.argv[3:] or list(HEADLINE)
     spark = get_session("plan-dump", cpus=8)
     specs = load_all()
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r12")
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = specs[name].fn(spark, SF_DIR)

@@ -1,16 +1,19 @@
-"""Closing full-registry rehearsal (the r7 practice, now checked in):
-run EVERY registered query from a fresh ``local[8]`` /
-8-shuffle-partition process — the CPU-count axis the driver may differ
-on — and check each against its DuckDB oracle (hash-match for oracled
-queries, rows-check for the rows-only tiers).
+#!/usr/bin/env python
+"""Check registered queries against their DuckDB oracles the way the
+driver does: from an externally built ``local[8]`` / 8-shuffle-partition
+session, through the ``__spark_entry__`` contract (``entry``,
+``queries``, ``oracle_sql``).
 
-Usage: python scripts/full_rehearsal.py [sf_dir]   (default sf0.01)
-Prints one line per query and a final SUMMARY line; exits non-zero on
-any failure.
+Usage: python scripts/verify.py [--sf DIR] [name ...]
+(default sf0.01 and every registered query). Oracled queries are
+hash-compared (``tests/oracle.py:assert_matches_oracle``); the rest get
+the rows-only check. Prints HASH-GREEN, rows-only or FAIL per query, then
+a SUMMARY line; exits non-zero on any failure.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -18,7 +21,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--sf", default="/root/testdata/sf0.01", help="scale-factor directory")
+    ap.add_argument("names", nargs="*", help="queries to check (default: all)")
+    args = ap.parse_args()
     from pyspark.sql import SparkSession
 
     spark = (
@@ -35,25 +41,25 @@ def main() -> None:
     from tests.oracle import assert_matches_oracle
 
     qs, osql = e.queries(), e.oracle_sql()
+    names = args.names or list(qs)
+    failed = [] if e.entry(spark).collect() else ["entry"]
     n_hash = n_rows = 0
-    failed: list[str] = []
-    for name in qs:
+    for name in names:
         try:
-            df = qs[name](spark, sf_dir)
+            df = qs[name](spark, args.sf)
             if name in osql:
-                assert_matches_oracle(df, osql[name], sf_dir, name)
+                assert_matches_oracle(df, osql[name], args.sf, name)
                 n_hash += 1
                 print(f"{name} HASH-GREEN", flush=True)
             else:
                 n = df.count()
-                assert n >= 0
                 n_rows += 1
                 print(f"{name} rows-only n={n}", flush=True)
-        except Exception as ex:  # noqa: BLE001 — rehearsal must report, not die
+        except Exception as ex:  # noqa: BLE001 — report every query, then fail
             failed.append(name)
             print(f"{name} FAIL {str(ex)[:200]}", flush=True)
     print(
-        f"SUMMARY total={len(qs)} hash_green={n_hash} rows_only={n_rows} "
+        f"SUMMARY total={len(names)} hash_green={n_hash} rows_only={n_rows} "
         f"failed={len(failed)} {failed}"
     )
     spark.stop()

@@ -17,6 +17,9 @@ import glob
 import json
 import os
 
+import pytest
+
+from cooler_mapreduce_spark import registry
 from cooler_mapreduce_spark.registry import PRIORITY_QUERIES, load_all
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -64,3 +67,15 @@ def test_window_names_are_registered():
     specs = load_all()
     missing = [n for n in PRIORITY_QUERIES if n not in specs]
     assert not missing, f"PRIORITY_QUERIES lists unregistered names: {missing}"
+
+
+def test_load_all_leads_with_the_priority_window():
+    """The driver checks the first WINDOW names in ``load_all`` order."""
+    assert list(load_all())[:WINDOW] == list(PRIORITY_QUERIES)
+
+
+def test_load_all_fails_loudly_on_a_missing_query_module(monkeypatch):
+    missing = "cooler_mapreduce_spark.operators.no_such_module"
+    monkeypatch.setattr(registry, "_QUERY_MODULES", (*registry._QUERY_MODULES, missing))
+    with pytest.raises(ModuleNotFoundError, match="no_such_module"):
+        load_all()

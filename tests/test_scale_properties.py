@@ -914,7 +914,6 @@ def test_apply_session_defaults_walks_the_input_dir_once(oracle_sf_dir, monkeypa
     from cooler_mapreduce_spark import session
 
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", oracle_sf_dir)
-    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
     monkeypatch.setattr(session, "ship_package", lambda spark: None)
     real_walk = session.os.walk
     walks = []

@@ -1,11 +1,13 @@
-"""Session wiring: the worker daemon's zip-cache guard and loud conf
-failures."""
+"""Session wiring: the worker daemon's zip-cache guard, the shared conf
+table, loud conf failures and the shipped package zip."""
 
 from __future__ import annotations
 
 import importlib
 import logging
+import os
 import re
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -98,3 +100,35 @@ def test_ship_package_logs_a_rejected_file(caplog):
         session.ship_package(host)
     [record] = caplog.records
     assert re.search(r"cooler_mapreduce_spark_pkg_\w+\.zip", record.getMessage())
+
+
+def test_apply_session_defaults_sets_exactly_the_shared_table(tmp_path, monkeypatch):
+    (tmp_path / "t.parquet").write_bytes(b"x" * 5000)
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path))
+    monkeypatch.setattr(session, "ship_package", lambda spark: None)
+    calls = []
+    session.apply_session_defaults(SimpleNamespace(
+        conf=SimpleNamespace(set=lambda k, v: calls.append((k, v))),
+        sparkContext=SimpleNamespace(defaultParallelism=4),
+    ))
+    # 5000 input bytes size the initial shuffle to one partition
+    assert calls == [*session.SESSION_DEFAULTS, ("spark.sql.shuffle.partitions", "1")]
+    assert len(dict(calls)) == len(calls)
+
+
+def test_verify_script_runs_workers_from_the_shipped_zip(sf_dir, tmp_path):
+    """``scripts/verify.py`` builds its own session, as the driver does, so
+    its Python workers run the stock daemon. With no ``PYTHONPATH`` and a
+    foreign working directory, ``mr_word_count``'s workers can import the
+    package only from :func:`session.ship_package`'s zip."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "2g"
+    out = subprocess.run(
+        [sys.executable, os.path.join(repo, "scripts", "verify.py"),
+         "--sf", sf_dir, "pricing_summary", "mr_word_count"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stdout + out.stderr[-3000:]
+    green = [line for line in out.stdout.splitlines() if line.endswith(" HASH-GREEN")]
+    assert green == ["pricing_summary HASH-GREEN", "mr_word_count HASH-GREEN"]
