@@ -20,7 +20,7 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H Q1 shape) on /root/testdata/sf0.001."""
-    apply_session_defaults(spark)
+    apply_session_defaults(spark, SMOKE_SF_DIR)
     specs = load_all()
     return specs["pricing_summary"].fn(spark, SMOKE_SF_DIR)
 
@@ -31,7 +31,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            apply_session_defaults(spark)
+            apply_session_defaults(spark, sf_dir)
             return fn(spark, sf_dir)
 
         run.__doc__ = fn.__doc__

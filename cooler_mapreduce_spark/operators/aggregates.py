@@ -9,7 +9,7 @@ requested, and partial aggregation still applies before the one shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..functions.numeric import dsum, sql_dsum
 from ..functions.timeutil import wall_trunc
@@ -1193,19 +1193,24 @@ def ohlc_hourly_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift.
     """
     ev = table(spark, sf_dir, "events")
+    return ev.groupBy("event_type", wall_trunc(F.col("ts"), "hour").alias("bucket")).agg(
+        *ohlc_aggs()
+    )
+
+
+def ohlc_aggs() -> list[Column]:
+    """The candle aggregates (open, high, low, close, volume, n_events) of
+    :func:`ohlc_hourly_by_type` and its streaming twin."""
     first = F.min(F.struct("ts", "event_id", "value"))
     last = F.max(F.struct("ts", "event_id", "value"))
-    return (
-        ev.groupBy("event_type", wall_trunc(F.col("ts"), "hour").alias("bucket"))
-        .agg(
-            first.getField("value").alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            last.getField("value").alias("close"),
-            dsum("value").alias("volume"),
-            F.count("*").alias("n_events"),
-        )
-    )
+    return [
+        first.getField("value").alias("open"),
+        F.max("value").alias("high"),
+        F.min("value").alias("low"),
+        last.getField("value").alias("close"),
+        dsum("value").alias("volume"),
+        F.count("*").alias("n_events"),
+    ]
 
 
 @query(

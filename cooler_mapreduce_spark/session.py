@@ -27,6 +27,7 @@ in local test mode:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import logging
 import os
@@ -79,9 +80,8 @@ SESSION_DEFAULTS: tuple[tuple[str, str], ...] = (
 )
 
 
-def _input_dir_bytes() -> int:
-    """Total bytes under $SPARK_GRAFT_SF_DIR (0 = unknown)."""
-    d = os.environ.get("SPARK_GRAFT_SF_DIR", "")
+def _input_dir_bytes(d: str | None) -> int:
+    """Total bytes under the input dir ``d`` (0 = unknown)."""
     if not d or not os.path.isdir(d):
         return 0
     total = 0
@@ -105,17 +105,10 @@ def default_shuffle_partitions(cpus: int, size: int) -> int:
     return max(1, min(cpus, -(-size // _SHUFFLE_TARGET_BYTES)))
 
 
-def ship_package(spark: SparkSession) -> None:
-    """Make this package importable on executors via ``addPyFile``.
-
-    For sessions built outside :func:`get_session` (whose workers find the
-    package on ``spark.executorEnv.PYTHONPATH``): local mode forks Python
-    workers that don't inherit the driver's ``sys.path`` mutations; on a
-    real cluster this is exactly the ``--py-files`` deployment path. The
-    zip is cached in the tempdir under a digest of the package's files, and
-    the RDD/compat tier (the only Python-on-executor consumer) depends on
-    it.
-    """
+@functools.cache
+def _package_zip() -> str:
+    """Path of this package's zip, built once per process in the tempdir
+    under a digest of the package's files."""
     pkg_dir = _PKG_DIR
     # Stable digest (NOT built-in hash(), which is salted per process via
     # PYTHONHASHSEED): the cache path must be reproducible across
@@ -144,23 +137,41 @@ def ship_package(spark: SparkSession) -> None:
                         rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                         zf.write(full, rel)
         os.replace(tmp, zip_path)
+    return zip_path
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Make this package importable on executors via ``addPyFile``, once
+    per SparkContext and package digest.
+
+    For sessions built outside :func:`get_session` (whose workers find the
+    package on ``spark.executorEnv.PYTHONPATH``): local mode forks Python
+    workers that don't inherit the driver's ``sys.path`` mutations; on a
+    real cluster this is exactly the ``--py-files`` deployment path. The
+    RDD/compat tier (the only Python-on-executor consumer) depends on it.
+    """
+    sc = spark.sparkContext
+    zip_path = _package_zip()
+    if getattr(sc, "_graft_shipped_zip", None) == zip_path:
+        return
     try:
-        spark.sparkContext.addPyFile(zip_path)
+        sc.addPyFile(zip_path)
     except Exception as e:
         # already added under another name, or context shutting down
         log.warning("addPyFile(%s) failed: %s", zip_path, e)
+        return
+    sc._graft_shipped_zip = zip_path
 
 
 def get_session(app_name: str = "cooler-mapreduce-spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) a local SparkSession with the engine's defaults."""
     n = cpus or default_parallelism()
+    size = _input_dir_bytes(os.environ.get("SPARK_GRAFT_SF_DIR"))
     builder = SparkSession.builder.appName(app_name).master(f"local[{n}]")
     for k, v in SESSION_DEFAULTS:
         builder = builder.config(k, v)
     return (
-        builder.config(
-            "spark.sql.shuffle.partitions", str(default_shuffle_partitions(n, _input_dir_bytes()))
-        )
+        builder.config("spark.sql.shuffle.partitions", str(default_shuffle_partitions(n, size)))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "cooler_mapreduce_spark.worker_daemon")
@@ -169,8 +180,9 @@ def get_session(app_name: str = "cooler-mapreduce-spark", cpus: int | None = Non
     )
 
 
-def apply_session_defaults(spark: SparkSession) -> SparkSession:
-    """Apply :data:`SESSION_DEFAULTS` to an externally-built session.
+def apply_session_defaults(spark: SparkSession, sf_dir: str) -> SparkSession:
+    """Apply :data:`SESSION_DEFAULTS` to an externally-built session about
+    to query ``sf_dir``.
 
     The driver contract hands us a ready SparkSession; static configs can't
     change then (so its workers keep the stock daemon and import this
@@ -178,7 +190,7 @@ def apply_session_defaults(spark: SparkSession) -> SparkSession:
     is runtime-settable.
     """
     confs = SESSION_DEFAULTS
-    size = _input_dir_bytes()
+    size = _input_dir_bytes(sf_dir)
     if size > 0:
         # Data-proportional initial shuffle width (see
         # default_shuffle_partitions): runtime-settable, result-neutral

@@ -7,9 +7,8 @@ seen keys; with a watermark the state is bounded to the lateness horizon
 window, and the at-rest batch pass (``dedup_exact``) catches cross-window
 stragglers.
 
-Also here: streaming session windows (gap-merged per-user sessions in the
-state store) — the streaming twin of the oracle-checked
-``stream_session_windows`` batch query.
+Also here: the foreachBatch sinks — the hourly-counts parquet sink and
+the table-format-free SCD1/SCD2 upserts (plain and erasure-gated).
 """
 
 from __future__ import annotations
@@ -19,7 +18,43 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..operators.governance import _TAKEDOWN_MOD
 from ..registry import query
 from ..sources.catalog import table
-from .windows import _event_stream
+from .io import DOCUMENTS_SCHEMA, ORDERS_SCHEMA, event_stream, hadoop_path, source, start
+from .windows import _watermarked, _window_counts
+
+#: hash buckets of the upsert stores (a micro-batch rewrites only the
+#: buckets it touches)
+_N_BUCKETS = 8
+#: the debounce's suppression horizon (its watermark delay)
+_DEBOUNCE_HORIZON = "30 minutes"
+#: the order columns the keep-latest argmax carries
+_ORDER_ROW = ("o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate", "o_orderpriority")
+
+
+def _keep_latest(orders: DataFrame, *keys: str) -> DataFrame:
+    """One row per ``keys`` group: the order row with the greatest
+    (o_orderdate, o_orderkey) — a map-side combinable ``max_by`` argmax
+    (dedup_keep_latest's CDC contract)."""
+    return (
+        orders.groupBy(*keys)
+        .agg(
+            F.max_by(F.struct(*_ORDER_ROW), F.struct("o_orderdate", "o_orderkey")).alias("r")
+        )
+        .select(*keys, "r.*")
+    )
+
+
+def _takedown_list(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Customers with an erasure request: every `_TAKEDOWN_MOD`th key."""
+    return (
+        table(spark, sf_dir, "customer", fan_out=False)
+        .filter(F.col("c_custkey") % _TAKEDOWN_MOD == 0)
+        .select("c_custkey")
+    )
+
+
+def _erasure_gate(orders: DataFrame, erased: DataFrame) -> DataFrame:
+    """Orders whose customer is not on the ``erased`` list (anti join)."""
+    return orders.join(erased, orders.o_custkey == F.col("c_custkey"), "left_anti")
 
 
 def run_streaming_dedup(
@@ -46,11 +81,7 @@ def run_streaming_dedup(
     ``max_files_per_trigger`` forces multi-micro-batch ingestion for
     tests that assert cross-batch behavior.
     """
-    schema = "doc_id bigint, source string, lang string, text string, n_chars bigint"
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.parquet(f"{sf_dir}/documents.parque*")
+    raw = source(spark, f"{sf_dir}/documents.parque*", DOCUMENTS_SCHEMA, max_files_per_trigger)
     hashed = raw.select(
         "doc_id", F.md5(F.col("text").cast("binary")).alias("content_hash")
     )
@@ -66,12 +97,7 @@ def run_streaming_dedup(
         )
     else:
         deduped = hashed.dropDuplicates(["content_hash"])
-    return (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return start(deduped, query_name)
 
 
 def run_stream_to_parquet(
@@ -79,75 +105,32 @@ def run_stream_to_parquet(
     sf_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    watermark: str = "10 minutes",
 ):
     """Streaming ETL to a partitioned parquet sink via ``foreachBatch``:
-    watermarked hourly counts appended as (window_start, event_type)
-    rows, partitioned by event_type. foreachBatch is the production
-    sink shape — it gets a *batch* DataFrame per trigger, so the full
-    writer API (partitionBy, overwrite-by-partition, merges into
-    Iceberg/Delta) applies; exactly-once comes from the checkpoint's
-    batch-id dedup."""
-    ev = _event_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"), "event_type", "n_events"
-        )
+    the watermarked hourly counts of ``run_tumbling_stream`` (the same
+    body) as (window_start, event_type, n_events) rows, partitioned by
+    event_type. foreachBatch is the production sink shape — it gets a
+    *batch* DataFrame per trigger, so the full writer API (partitionBy,
+    overwrite-by-partition, merges into Iceberg/Delta) applies.
+
+    The aggregation runs in complete mode, so every trigger hands over
+    the WHOLE result table; each trigger therefore OVERWRITES the sink
+    (appending would re-add every window once per later trigger). The
+    checkpoint restores the aggregation state on restart and never
+    re-fires a committed batch, and a replayed batch rewrites the same
+    table, so the sink ends equal to the batch twin. The overwrite is
+    not atomic: a reader during a trigger can see a partial table."""
+    agg = _window_counts(_watermarked(spark, sf_dir)).select(
+        "window_start", "event_type", "n_events"
     )
 
     def write_batch(batch_df, batch_id: int) -> None:
-        batch_df.write.mode("append").partitionBy("event_type").parquet(out_dir)
+        batch_df.write.mode("overwrite").partitionBy("event_type").parquet(out_dir)
 
-    return (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return start(agg, write_batch, mode="complete", checkpoint=checkpoint_dir)
 
 
-def run_session_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
-    query_name: str = "session_out",
-    output_mode: str = "complete",
-):
-    """Streaming twin of ``stream_session_windows``: gap-merged per-user
-    sessions maintained in the state store. Complete mode for the
-    bounded single-batch drive (see ``run_tumbling_stream`` rationale);
-    production uses append + watermark so closed sessions emit once and
-    their state is evicted."""
-    ev = _event_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-    return (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-
-
-def run_debounce_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "debounce_out",
-    horizon: str = "30 minutes",
-):
+def run_debounce_stream(spark: SparkSession, sf_dir: str, query_name: str = "debounce_out"):
     """Streaming debounce: ``dropDuplicatesWithinWatermark`` on
     (user_id, event_type) — the first event per key passes, repeats are
     suppressed until the key's state expires at the watermark horizon.
@@ -157,18 +140,11 @@ def run_debounce_stream(
     bounded to keys active within the horizon — O(active keys), the
     only shape that survives an unbounded 100 TB/day stream.
     """
-    from .windows import _event_stream
-
-    ev = _event_stream(spark, sf_dir).withWatermark("ts", horizon)
+    ev = event_stream(spark, sf_dir).withWatermark("ts", _DEBOUNCE_HORIZON)
     deduped = ev.dropDuplicatesWithinWatermark(["user_id", "event_type"]).select(
         "user_id", "event_type", "ts"
     )
-    return (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return start(deduped, query_name)
 
 
 def run_streaming_upsert(
@@ -176,7 +152,6 @@ def run_streaming_upsert(
     sf_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    n_buckets: int = 8,
     max_files_per_trigger: int | None = None,
     erased_custkeys: DataFrame | None = None,
 ):
@@ -204,15 +179,7 @@ def run_streaming_upsert(
     Event-time "latest" is (o_orderdate, o_orderkey) — deterministic
     total order, same as dedup_keep_latest's CDC contract.
     """
-    schema = (
-        "o_orderkey bigint, o_custkey bigint, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp_ntz,"
-        " o_orderpriority string"
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.parquet(f"{sf_dir}/orders.parque*")
+    raw = source(spark, f"{sf_dir}/orders.parque*", ORDERS_SCHEMA, max_files_per_trigger)
     if erased_custkeys is not None:
         # ERASURE GATE (staged r12 composition — see
         # run_erasure_gated_upsert): a stream-static LEFT ANTI join
@@ -225,11 +192,7 @@ def run_streaming_upsert(
         # resolved once at creation, so NEW takedown files appended to
         # the directory need a catalog-backed static side (Delta/
         # Iceberg) or a query restart to take effect.
-        raw = raw.join(
-            erased_custkeys.select("c_custkey"),
-            raw.o_custkey == F.col("c_custkey"),
-            "left_anti",
-        )
+        raw = _erasure_gate(raw, erased_custkeys)
 
     def merge_batch(batch_df, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -240,21 +203,11 @@ def run_streaming_upsert(
         # sf0.1 on the bench drain's full-orders batch: 2.25/2.13/1.19 →
         # 1.83/1.35/1.08 s across three quiet alternations). The
         # materialized set is O(batch keys), the pattern's cost bound.
-        fresh = (
-            batch_df.withColumn("bucket", F.pmod(F.col("o_orderkey"), n_buckets))
-            .groupBy("o_orderkey", "bucket")
-            .agg(
-                F.max_by(
-                    F.struct(
-                        "o_custkey", "o_orderstatus", "o_totalprice",
-                        "o_orderdate", "o_orderpriority",
-                    ),
-                    F.struct("o_orderdate", "o_orderkey"),
-                ).alias("r")
-            )
-            .select("o_orderkey", "bucket", "r.*")
-            .localCheckpoint(eager=True)
-        )
+        fresh = _keep_latest(
+            batch_df.withColumn("bucket", F.pmod(F.col("o_orderkey"), _N_BUCKETS)),
+            "o_orderkey",
+            "bucket",
+        ).localCheckpoint(eager=True)
         touched = [r["bucket"] for r in fresh.select("bucket").distinct().collect()]
         # Gate the read-back on EXISTENCE, not on "any read failure": a
         # corrupt footer / transient FS error / permission problem must
@@ -262,27 +215,13 @@ def run_streaming_upsert(
         # mistaken for "first batch" — treating it as empty would
         # dynamic-overwrite the touched buckets with only the fresh rows
         # and silently discard previously merged history.
-        jvm = sp._jvm
-        hconf = sp._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(out_dir)
-        if path.getFileSystem(hconf).exists(path):
+        fs, path = hadoop_path(sp, out_dir)
+        if fs.exists(path):
             old = sp.read.parquet(out_dir).where(F.col("bucket").isin(touched))
             merged_src = old.unionByName(fresh)
         else:  # genuinely the first batch: nothing on disk yet
             merged_src = fresh
-        merged = (
-            merged_src.groupBy("o_orderkey", "bucket")
-            .agg(
-                F.max_by(
-                    F.struct(
-                        "o_custkey", "o_orderstatus", "o_totalprice",
-                        "o_orderdate", "o_orderpriority",
-                    ),
-                    F.struct("o_orderdate", "o_orderkey"),
-                ).alias("r")
-            )
-            .select("o_orderkey", "bucket", "r.*")
-        )
+        merged = _keep_latest(merged_src, "o_orderkey", "bucket")
         # The merged frame READS out_dir and the write OVERWRITES it —
         # localCheckpoint materializes the merge and truncates lineage,
         # so the write plan no longer references the path it replaces
@@ -296,12 +235,7 @@ def run_streaming_upsert(
             .parquet(out_dir)
         )
 
-    return (
-        raw.writeStream.outputMode("append")
-        .foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return start(raw, merge_batch, checkpoint=checkpoint_dir)
 
 
 def _scd2_rebuild_frame(sp: SparkSession, raw_dir: str, touched) -> DataFrame:
@@ -364,7 +298,6 @@ def run_streaming_scd2(
     raw_dir: str,
     history_dir: str,
     checkpoint_dir: str,
-    n_buckets: int = 8,
     max_files_per_trigger: int | None = None,
 ):
     """Streaming SCD2 — dimension HISTORY maintenance without a table
@@ -393,21 +326,13 @@ def run_streaming_scd2(
     rebuilds a bounded slice. The 2200-01-01 open-version sentinel
     matches the batch twin (Arrow ns timestamps top out in 2262).
     """
-    schema = (
-        "o_orderkey bigint, o_custkey bigint, o_orderstatus string,"
-        " o_totalprice double, o_orderdate timestamp_ntz,"
-        " o_orderpriority string"
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.parquet(f"{sf_dir}/orders.parque*")
+    raw = source(spark, f"{sf_dir}/orders.parque*", ORDERS_SCHEMA, max_files_per_trigger)
 
     def merge_batch(batch_df, batch_id: int) -> None:
         sp = batch_df.sparkSession
         changes = batch_df.select(
             F.col("o_custkey").alias("custkey"),
-            F.pmod(F.col("o_custkey"), n_buckets).alias("bucket"),
+            F.pmod(F.col("o_custkey"), _N_BUCKETS).alias("bucket"),
             F.col("o_orderdate").alias("valid_from"),
             F.col("o_orderkey").alias("change_id"),
             F.col("o_totalprice").alias("attr"),
@@ -425,12 +350,7 @@ def run_streaming_scd2(
             .parquet(history_dir)
         )
 
-    return (
-        raw.writeStream.outputMode("append")
-        .foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return start(raw, merge_batch, checkpoint=checkpoint_dir)
 
 
 def run_erasure_gated_upsert(
@@ -438,7 +358,6 @@ def run_erasure_gated_upsert(
     sf_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    n_buckets: int = 8,
     max_files_per_trigger: int | None = None,
 ):
     """ERASURE-GATED streaming upsert (registered batch twin:
@@ -463,19 +382,13 @@ def run_erasure_gated_upsert(
     downstream is the upsert's documented O(touched buckets) merge.
     No extra state.
     """
-    req = (
-        table(spark, sf_dir, "customer", fan_out=False)
-        .filter(F.col("c_custkey") % _TAKEDOWN_MOD == 0)
-        .select("c_custkey")
-    )
     return run_streaming_upsert(
         spark,
         sf_dir,
         out_dir,
         checkpoint_dir,
-        n_buckets=n_buckets,
         max_files_per_trigger=max_files_per_trigger,
-        erased_custkeys=req,
+        erased_custkeys=_takedown_list(spark, sf_dir),
     )
 
 
@@ -527,19 +440,4 @@ def stream_erasure_gated_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-rest half).
     """
     o = table(spark, sf_dir, "orders", fan_out=False)
-    req = (
-        table(spark, sf_dir, "customer", fan_out=False)
-        .filter(F.col("c_custkey") % _TAKEDOWN_MOD == 0)
-        .select("c_custkey")
-    )
-    gated = o.join(req, o.o_custkey == F.col("c_custkey"), "left_anti")
-    latest = gated.groupBy("o_orderkey").agg(
-        F.max_by(
-            F.struct(
-                "o_custkey", "o_orderstatus", "o_totalprice",
-                "o_orderdate", "o_orderpriority",
-            ),
-            F.struct("o_orderdate", "o_orderkey"),
-        ).alias("r")
-    )
-    return latest.select("o_orderkey", "r.*")
+    return _keep_latest(_erasure_gate(o, _takedown_list(spark, sf_dir)), "o_orderkey")

@@ -21,16 +21,37 @@ from __future__ import annotations
 
 from decimal import Decimal
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..registry import query
 from ..sources.catalog import table
 from ..sources.sinks import remove_scratch, scratch_dir
+from .io import drain, hadoop_path, source, start
 
 #: micro-batch replay width: the scratch copy is written as this many
 #: files and streamed with maxFilesPerTrigger=1, so the run is a genuine
 #: multi-batch stream (the stream_scd2 replay convention).
 _OBS_FILES = 4
+
+
+def _observed_batches(spark: SparkSession, sf_dir: str, *metrics: Column) -> list[dict]:
+    """Stage the events table as `_OBS_FILES` files, stream them one file
+    per micro-batch under AvailableNow with ``metrics`` observed, and
+    return the observed metrics of every non-empty batch."""
+    ev = table(spark, sf_dir, "events", fan_out=False)
+    src_dir = scratch_dir(spark, "obs_src_")
+    try:
+        ev.repartition(_OBS_FILES).write.mode("overwrite").parquet(src_dir)
+        stream = source(spark, src_dir, spark.read.parquet(src_dir).schema, 1)
+        q = start(stream.observe("metrics", *metrics), None, available_now=True)
+        drain(q)
+    finally:
+        remove_scratch(spark, src_dir)
+    return [
+        p["observedMetrics"]["metrics"]
+        for p in q.recentProgress
+        if p.get("numInputRows", 0) and "metrics" in (p.get("observedMetrics") or {})
+    ]
 
 
 @query(
@@ -74,53 +95,18 @@ def stream_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     the coordinator's job-status poll (benchmark.py:246-284, SURVEY.md
     §3.2); per-batch data-quality counters have no counterpart.
     """
-    ev = table(spark, sf_dir, "events", fan_out=False)
-    src_dir = scratch_dir(spark, "obs_src_")
-    try:
-        ev.repartition(_OBS_FILES).write.mode("overwrite").parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .observe(
-                "metrics",
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(
-                    F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-                ).alias("n_purchases"),
-                F.sum(F.when(F.col("value") <= 0.0, 1).otherwise(0)).alias(
-                    "n_quality_fail"
-                ),
-                # cast the decimal sum to STRING: the progress feed is
-                # JSON, and a bare decimal would be rounded through a
-                # double there — exact only below 2^53 (≈ sf30 for this
-                # column). The string survives the feed bit-exact at any
-                # SF and Decimal() parses it back.
-                F.sum(F.col("value").cast("decimal(30,6)"))
-                .cast("string")
-                .alias("sum_value"),
-            )
-        )
-        q = (
-            stream.writeStream.format("noop")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-        batches = []
-        for prog in q.recentProgress:
-            om = (prog.get("observedMetrics") or {}).get("metrics")
-            if om is None:
-                continue
-            if prog.get("numInputRows", 0) == 0:
-                continue
-            batches.append(om)
-    finally:
-        remove_scratch(spark, src_dir)
+    batches = _observed_batches(
+        spark,
+        sf_dir,
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("n_purchases"),
+        F.sum(F.when(F.col("value") <= 0.0, 1).otherwise(0)).alias("n_quality_fail"),
+        # cast the decimal sum to STRING: the progress feed is JSON, and
+        # a bare decimal would be rounded through a double there — exact
+        # only below 2^53 (≈ sf30 for this column). The string survives
+        # the feed bit-exact at any SF and Decimal() parses it back.
+        F.sum(F.col("value").cast("decimal(30,6)")).cast("string").alias("sum_value"),
+    )
     n_rows = sum(int(b["n_rows"]) for b in batches)
     n_purchases = sum(int(b["n_purchases"]) for b in batches)
     n_quality_fail = sum(int(b["n_quality_fail"]) for b in batches)
@@ -174,46 +160,16 @@ def stream_observed_metrics_by_type(spark: SparkSession, sf_dir: str) -> DataFra
     the coordinator's job-status poll (benchmark.py:246-284, SURVEY.md
     §3.2).
     """
-    ev = table(spark, sf_dir, "events", fan_out=False)
-    src_dir = scratch_dir(spark, "obs_type_src_")
-    try:
-        ev.repartition(_OBS_FILES).write.mode("overwrite").parquet(src_dir)
-        schema = spark.read.parquet(src_dir).schema
-        exprs = []
-        for t in _EVENT_TYPES:
-            exprs.append(
-                F.sum(F.when(F.col("event_type") == t, 1).otherwise(0)).alias(
-                    f"n_{t}"
-                )
-            )
-            exprs.append(
-                F.sum(
-                    F.when(
-                        F.col("event_type") == t, F.col("value")
-                    ).otherwise(0.0).cast("decimal(30,6)")
-                )
-                .cast("string")
-                .alias(f"v_{t}")
-            )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .observe("metrics", *exprs)
+    exprs = []
+    for t in _EVENT_TYPES:
+        is_t = F.col("event_type") == t
+        exprs.append(F.sum(F.when(is_t, 1).otherwise(0)).alias(f"n_{t}"))
+        exprs.append(
+            F.sum(F.when(is_t, F.col("value")).otherwise(0.0).cast("decimal(30,6)"))
+            .cast("string")
+            .alias(f"v_{t}")
         )
-        q = stream.writeStream.format("noop").trigger(availableNow=True).start()
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-        batches = []
-        for prog in q.recentProgress:
-            om = (prog.get("observedMetrics") or {}).get("metrics")
-            if om is None or prog.get("numInputRows", 0) == 0:
-                continue
-            batches.append(om)
-    finally:
-        remove_scratch(spark, src_dir)
+    batches = _observed_batches(spark, sf_dir, *exprs)
     rows = []
     for t in _EVENT_TYPES:
         n = sum(int(b[f"n_{t}"]) for b in batches)
@@ -272,9 +228,8 @@ def _stage_once(spark: SparkSession, df: DataFrame, src_dir: str) -> None:
     than silently stream an incomplete feed. Once the marker exists,
     re-staging is what would corrupt the run (fresh UUID part names
     would replay every row through the checkpoint), so it is skipped."""
-    jvm = spark._jvm
-    marker = jvm.org.apache.hadoop.fs.Path(f"{src_dir}/_SUCCESS")
-    if not marker.getFileSystem(spark._jsc.hadoopConfiguration()).exists(marker):
+    fs, marker = hadoop_path(spark, f"{src_dir}/_SUCCESS")
+    if not fs.exists(marker):
         df.write.mode("overwrite").parquet(src_dir)
 
 
@@ -406,7 +361,6 @@ def run_dq_gated_stream(
     _stage_once(
         spark, _dq_feed(spark, sf_dir).repartition(_DQ_BATCHES, "batch_id"), src_dir
     )
-    schema = spark.read.parquet(src_dir).schema
 
     def gate(batch_df, batch_id: int) -> None:
         # one pass builds the manifest; the collected O(batch-ids) rows
@@ -441,17 +395,8 @@ def run_dq_gated_stream(
         finally:
             batch_df.unpersist()
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = source(spark, src_dir, spark.read.parquet(src_dir).schema, 1)
+    return start(stream, gate, checkpoint=checkpoint_dir, available_now=True)
 
 
 def dq_replay_convergence_frame(
@@ -734,11 +679,9 @@ def _replay_merge_batch(store_dir: str):
         fresh = batch_df.filter(F.col("batch_id").isin(promoted)).select(
             "event_id", "batch_id", "value", "version"
         )
-        touched = promoted
-        jvm = sp._jvm
-        path = jvm.org.apache.hadoop.fs.Path(store_dir)
-        if path.getFileSystem(sp._jsc.hadoopConfiguration()).exists(path):
-            old = sp.read.parquet(store_dir).where(F.col("batch_id").isin(touched))
+        fs, path = hadoop_path(sp, store_dir)
+        if fs.exists(path):
+            old = sp.read.parquet(store_dir).where(F.col("batch_id").isin(promoted))
             src = old.unionByName(fresh)
         else:
             src = fresh
@@ -818,17 +761,6 @@ def run_dq_replay_stream(
             ),
             src_dir,
         )
-        schema = spark.read.parquet(src_dir).schema
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .writeStream.foreachBatch(_replay_merge_batch(store_dir))
-            .option("checkpointLocation", f"{checkpoint_dir}_v{version}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+        stream = source(spark, src_dir, spark.read.parquet(src_dir).schema, 1)
+        merge = _replay_merge_batch(store_dir)
+        drain(start(stream, merge, checkpoint=f"{checkpoint_dir}_v{version}", available_now=True))

@@ -18,8 +18,10 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..registry import query
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..registry import query
+from .io import event_stream, start
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double, last_ts timestamp"
 STATE_SCHEMA = "n bigint, total double, last_us bigint"
@@ -52,9 +54,7 @@ def run_user_totals_stream(
     """Start the stateful per-user totals stream (update mode, memory
     sink). Each micro-batch emits the refreshed totals of the users it
     touched; the last emitted row per user equals the batch groupBy."""
-    from .windows import _event_stream
-
-    ev = _event_stream(spark, sf_dir).select("user_id", "ts", "value")
+    ev = event_stream(spark, sf_dir).select("user_id", "ts", "value")
     out = ev.groupBy("user_id").applyInPandasWithState(
         _update_user_totals,
         outputStructType=OUTPUT_SCHEMA,
@@ -62,12 +62,7 @@ def run_user_totals_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return start(out, query_name, mode="update")
 
 
 @query(

@@ -34,12 +34,7 @@ from ..operators.aggregates import (
 from ..registry import query
 from ..sources.catalog import table
 from ..sources.sinks import remove_scratch, scratch_dir
-
-_ORDERS_SCHEMA = (
-    "o_orderkey bigint, o_custkey bigint, o_orderstatus string,"
-    " o_totalprice double, o_orderdate timestamp_ntz,"
-    " o_orderpriority string"
-)
+from .io import ORDERS_SCHEMA, drain, hadoop_path, source, start
 
 
 def run_quantile_tiles_stream(
@@ -57,10 +52,7 @@ def run_quantile_tiles_stream(
     batch's (region, bin) counts, and write them under ``batch_id=N``
     with dynamic partition overwrite (replay-idempotent — see module
     docstring). Returns the StreamingQuery."""
-    reader = spark.readStream.schema(_ORDERS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.parquet(orders_path)
+    raw = source(spark, orders_path, ORDERS_SCHEMA, max_files_per_trigger)
 
     def write_tiles(batch_df, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -93,12 +85,7 @@ def run_quantile_tiles_stream(
             .parquet(tiles_dir)
         )
 
-    return (
-        raw.writeStream.outputMode("append")
-        .foreachBatch(write_tiles)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return start(raw, write_tiles, checkpoint=checkpoint_dir)
 
 
 def committed_batch_ids(spark: SparkSession, checkpoint_dir: str) -> set[int]:
@@ -106,10 +93,7 @@ def committed_batch_ids(spark: SparkSession, checkpoint_dir: str) -> set[int]:
     log — the set the engine guarantees will never re-fire on restart.
     Anything NOT in this set (a partition written by a batch that died
     before its commit record) WILL replay and must not be compacted."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(f"{checkpoint_dir.rstrip('/')}/commits")
-    fs = p.getFileSystem(hconf)
+    fs, p = hadoop_path(spark, f"{checkpoint_dir.rstrip('/')}/commits")
     if not fs.exists(p):
         return set()
     out: set[int] = set()
@@ -231,13 +215,8 @@ def stream_quantile_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiles_dir = scratch_dir(spark, "qtiles_")
     ckpt_dir = scratch_dir(spark, "qtiles_ckpt_")
     try:
-        q = run_quantile_tiles_stream(
-            spark, f"{sf_dir}/orders.parque*", sf_dir, tiles_dir, ckpt_dir
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        orders = f"{sf_dir}/orders.parque*"
+        drain(run_quantile_tiles_stream(spark, orders, sf_dir, tiles_dir, ckpt_dir))
         tiles = (
             spark.read.parquet(tiles_dir)
             .select("n_regionkey", "bin", "cnt")

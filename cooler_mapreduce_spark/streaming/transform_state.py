@@ -35,6 +35,7 @@ from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.streaming.stateful_processor import TimerValues
 
 from ..registry import query
+from .io import event_stream, start
 
 OUTPUT_SCHEMA = "user_id bigint, event_type string, n_events bigint"
 
@@ -106,8 +107,6 @@ def run_user_type_counts_stream(
     """Start the per-(user, event_type) running-count stream (update mode,
     memory sink). The last emitted row per (user_id, event_type) equals
     the batch groupBy count."""
-    from .windows import _event_stream
-
     if not have_protobuf():
         raise ImportError(
             "transformWithStateInPandas needs the optional 'protobuf' "
@@ -128,19 +127,14 @@ def run_user_type_counts_stream(
     prev = spark.conf.get(key, None)
     spark.conf.set(key, ROCKSDB_PROVIDER)
     try:
-        ev = _event_stream(spark, sf_dir).select("user_id", "event_type")
+        ev = event_stream(spark, sf_dir).select("user_id", "event_type")
         out = ev.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=UserTypeCountsProcessor(),
             outputStructType=OUTPUT_SCHEMA,
             outputMode="Update",
             timeMode="None",
         )
-        return (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
+        return start(out, query_name, mode="update")
     finally:
         if prev is None:
             spark.conf.unset(key)

@@ -14,9 +14,127 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.numeric import davg, dsum, sql_davg, sql_dsum
-from ..operators.joins import _BLOOM_HOT_BAL
+from ..operators.aggregates import ohlc_aggs
+from ..operators.joins import _BLOOM_HOT_BAL, bloom_build, bloom_might_contain
 from ..registry import query
 from ..sources.catalog import table
+from .io import DOCUMENTS_SCHEMA, event_stream, source, start
+
+#: event-time watermark of the windowed runners, and of the stream-stream
+#: joins (whose horizon must also cover the 30-minute attribution range)
+_WATERMARK = "10 minutes"
+_JOIN_WATERMARK = "1 hour"
+#: bounded replays are one micro-batch, and append mode only emits a
+#: window once a LATER batch advances the watermark past its end, so the
+#: aggregating runners emit in complete mode (see run_tumbling_stream)
+_AGG_MODE = "complete"
+_SESSION_GAP = "30 minutes"
+
+
+def _watermarked(spark: SparkSession, sf_dir: str, delay: str = _WATERMARK) -> DataFrame:
+    return event_stream(spark, sf_dir).withWatermark("ts", delay)
+
+
+# ---------------------------------------------- shared twin bodies ----
+
+
+def _window_counts(ev: DataFrame, *slide: str) -> DataFrame:
+    """Per event type: count and avg value over 1-hour windows (tumbling,
+    or sliding every ``slide``)."""
+    return (
+        ev.groupBy(F.window("ts", "1 hour", *slide).alias("w"), "event_type")
+        .agg(F.count("*").alias("n_events"), davg("value", 6).alias("avg_value"))
+        .select(
+            F.col("w.start").alias("window_start"),
+            F.col("w.end").alias("window_end"),
+            "event_type",
+            "n_events",
+            "avg_value",
+        )
+    )
+
+
+def _sessions(ev: DataFrame) -> DataFrame:
+    return (
+        ev.groupBy(F.session_window("ts", _SESSION_GAP).alias("w"), "user_id")
+        .agg(F.count("*").alias("n_events"))
+        .select(
+            "user_id",
+            F.col("w.start").alias("session_start"),
+            F.col("w.end").alias("session_end"),
+            "n_events",
+        )
+    )
+
+
+def _segment_counts(ev: DataFrame, sf_dir: str) -> DataFrame:
+    # fan_out=False: customer is the broadcast BUILD side here (events
+    # streams; the stream re-plans it per micro-batch), so its
+    # single-split fan-out exchange bought nothing — the tiles-stream
+    # A/B (tiles.py) measured the identical pattern.
+    cust = table(ev.sparkSession, sf_dir, "customer", fan_out=False)
+    return (
+        ev.join(cust, ev.user_id == cust.c_custkey)
+        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("c_mktsegment").alias("segment"))
+        .agg(F.count("*").alias("n_events"), davg("value", 6).alias("avg_value"))
+        .select(
+            F.col("w.start").alias("window_start"),
+            "segment",
+            "n_events",
+            "avg_value",
+        )
+    )
+
+
+def _attribution(clicks: DataFrame, purchases: DataFrame, how: str) -> DataFrame:
+    """Clicks joined to the same user's purchases in the following 30
+    minutes: an equi-join on user_id with a time-range residual."""
+    c = clicks.filter(F.col("event_type") == "click").select(
+        F.col("event_id").alias("click_id"),
+        "user_id",
+        F.col("ts").alias("click_ts"),
+    )
+    p = purchases.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"),
+        F.col("user_id").alias("p_user_id"),
+        F.col("ts").alias("purchase_ts"),
+    )
+    return c.join(
+        p,
+        (c.user_id == p.p_user_id)
+        & (p.purchase_ts >= c.click_ts)
+        & (p.purchase_ts < c.click_ts + F.expr("INTERVAL 30 MINUTES")),
+        how,
+    ).select("click_id", "purchase_id", "user_id", "click_ts", "purchase_ts")
+
+
+def _hot_segment_sums(ev: DataFrame, sf_dir: str, attach) -> DataFrame:
+    """Events of hot customers (c_acctbal > _BLOOM_HOT_BAL) gated by their
+    16 KB bloom, then joined exactly: hourly count and value sum per
+    segment. ``attach(ev, bf)`` puts the one-row bloom next to every
+    event — the step the batch and stream twins spell differently."""
+    hot = (
+        table(ev.sparkSession, sf_dir, "customer", fan_out=False)
+        .filter(F.col("c_acctbal") > _BLOOM_HOT_BAL)
+        .select("c_custkey", "c_mktsegment")
+    )
+    bf = bloom_build(hot.select("c_custkey"), "c_custkey")
+    gated = attach(ev, bf).filter(bloom_might_contain("bf", "user_id")).drop("bf")
+    return (
+        gated.join(hot, gated.user_id == hot.c_custkey)
+        .groupBy(
+            F.window("ts", "1 hour").alias("w"),
+            F.col("c_mktsegment").alias("segment"),
+        )
+        .agg(F.count("*").alias("n_events"), dsum("value", 6).alias("sum_value"))
+        .select(
+            F.col("w.start").alias("window_start"),
+            "segment",
+            "n_events",
+            "sum_value",
+        )
+    )
+
 
 # ------------------------------------------------------- batch twins ----
 
@@ -37,18 +155,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling windows per event type (batch twin of the
     streaming query in :func:`run_tumbling_stream` — same ``window``
     expression, same results on bounded input)."""
-    ev = table(spark, sf_dir, "events", fan_out=False)
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), davg("value", 6).alias("avg_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "avg_value",
-        )
-    )
+    return _window_counts(table(spark, sf_dir, "events", fan_out=False))
 
 
 @query(
@@ -73,18 +180,7 @@ def stream_sliding_value_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour windows sliding every 15 minutes (each event lands in 4
     windows — Spark's ``window(ts, '1 hour', '15 minutes')`` and the
     oracle's explicit 4-way window expansion are the same algebra)."""
-    ev = table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), davg("value", 6).alias("avg_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "avg_value",
-        )
-    )
+    return _window_counts(table(spark, sf_dir, "events"), "15 minutes")
 
 
 @query(
@@ -117,123 +213,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose windows overlap (gap *strictly* less than 30 min ⇒ same
     session; the oracle's is_start uses ``>=`` accordingly). Session end
     is last-event + gap, per session-window semantics."""
-    ev = table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-# --------------------------------------------------- streaming runners ----
-
-
-def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet (one file ⇒ one micro-batch;
-    real deployments point this at Kafka/files with the same schema).
-
-    The stream schema is taken from a batch read of the same file, so the
-    stream twin always sees exactly what the batch side sees regardless
-    of how the writer annotated ``ts`` (TIMESTAMP_NTZ/µs today; the
-    legacy NANOS encoding surfaces as bigint under ``nanosAsLong`` and is
-    rebuilt at µs precision, same as sources/catalog.py)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # file-stream sources demand a directory basePath; the glob pins the
-    # match to the events table while keeping basePath = sf_dir
-    raw = spark.readStream.schema(schema).parquet(f"{sf_dir}/events.parque*")
-    dt = dict(raw.dtypes).get("ts")
-    if dt == "bigint":
-        raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif dt == "timestamp_ntz":
-        # watermarks only accept TIMESTAMP ([EVENT_TIME_IS_NOT_ON_
-        # TIMESTAMP_TYPE]); the session timezone is pinned to UTC
-        # (session.py), so this cast preserves wall-clock values and the
-        # stream stays comparable to its NTZ batch twin
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
-
-
-def run_tumbling_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark: str = "10 minutes",
-    query_name: str = "tumbling_out",
-    output_mode: str = "complete",
-    available_now: bool = False,
-):
-    """Start the streaming twin of ``stream_tumbling_counts``: watermarked
-    tumbling-window counts into a memory sink. Returns the StreamingQuery
-    (caller drives it, e.g. ``processAllAvailable()``).
-
-    Default output mode is ``complete`` because a bounded file source is
-    one micro-batch — append mode only emits a window once a *later*
-    batch advances the watermark past its end, so a single-batch drive
-    would emit nothing. Long-running deployments use ``append`` +
-    watermark so state is evicted and each window emits exactly once.
-
-    ``available_now=True`` starts the query with Trigger.AvailableNow —
-    the production catch-up mode: process everything present at start
-    (respecting per-batch source limits), then TERMINATE, persisting
-    offsets so the next start resumes incrementally. This is how a
-    cron-scheduled job drains a backlog with streaming semantics
-    (exactly-once, bounded state) but batch lifecycle (no always-on
-    cluster); the caller awaits termination instead of draining.
-    """
-    ev = _event_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), davg("value", 6).alias("avg_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "avg_value",
-        )
-    )
-    w = agg.writeStream.outputMode(output_mode).format("memory").queryName(
-        query_name
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
-def run_sliding_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark: str = "10 minutes",
-    query_name: str = "sliding_out",
-    output_mode: str = "complete",
-):
-    """Streaming twin of ``stream_sliding_value_sum`` (see
-    :func:`run_tumbling_stream` for the output-mode rationale)."""
-    ev = _event_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), davg("value", 6).alias("avg_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "avg_value",
-        )
-    )
-    return (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _sessions(table(spark, sf_dir, "events"))
 
 
 @query(
@@ -254,64 +234,7 @@ def stream_enriched_segment_counts(spark: SparkSession, sf_dir: str) -> DataFram
     customer is SF-scaled so it carries no broadcast hint — the size
     threshold broadcasts it at test SF (only shuffle is the windowed
     agg) and degrades to a shuffle join at 100 TB."""
-    ev = table(spark, sf_dir, "events")
-    # fan_out=False: customer is the broadcast BUILD side here (events
-    # streams), so its single-split fan-out exchange bought nothing —
-    # the tiles-stream A/B (tiles.py) measured the identical pattern.
-    cust = table(spark, sf_dir, "customer", fan_out=False)
-    return (
-        ev.join(cust, ev.user_id == cust.c_custkey)
-        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("c_mktsegment").alias("segment"))
-        .agg(F.count("*").alias("n_events"), davg("value", 6).alias("avg_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "segment",
-            "n_events",
-            "avg_value",
-        )
-    )
-
-
-def run_enriched_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark: str = "10 minutes",
-    query_name: str = "enriched_out",
-    output_mode: str = "complete",
-):
-    """Stream-static join: the event stream enriched against the STATIC
-    customer dimension — no watermark needed on the static side, no
-    state kept for it; Spark re-plans the dimension side per micro-batch
-    (so slowly-changing dims pick up updates between batches) and, with
-    no hint on the SF-scaled customer table, picks broadcast by size at
-    test SF and a shuffle join at scale. This is
-    the canonical streaming-ETL enrichment; stream-stream joins (both
-    sides unbounded + dual watermarks) are the state-heavy cousin the
-    pipeline avoids when one side is a dimension.
-    """
-    ev = _event_stream(spark, sf_dir)
-    # fan_out=False: broadcast BUILD side, re-planned per micro-batch —
-    # the fan-out exchange would re-shuffle customer every trigger for
-    # zero parallelism gain (see the tiles-stream A/B, tiles.py).
-    cust = table(spark, sf_dir, "customer", fan_out=False)
-    agg = (
-        ev.withWatermark("ts", watermark)
-        .join(cust, ev.user_id == cust.c_custkey)
-        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("c_mktsegment").alias("segment"))
-        .agg(F.count("*").alias("n_events"), davg("value", 6).alias("avg_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "segment",
-            "n_events",
-            "avg_value",
-        )
-    )
-    return (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _segment_counts(table(spark, sf_dir, "events"), sf_dir)
 
 
 @query(
@@ -335,156 +258,7 @@ def stream_stream_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join (one is a broadcast build at test SF) — the fan-out shuffle
     # was redundant (r11 window-family A/B)
     ev = table(spark, sf_dir, "events", fan_out=False)
-    c = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        "user_id",
-        F.col("ts").alias("click_ts"),
-    )
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    return (
-        c.join(
-            p,
-            (c.user_id == p.p_user_id)
-            & (p.purchase_ts >= c.click_ts)
-            & (p.purchase_ts < c.click_ts + F.expr("INTERVAL 30 MINUTES")),
-        )
-        .select("click_id", "purchase_id", "user_id", "click_ts", "purchase_ts")
-    )
-
-
-def run_stream_stream_join(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark: str = "1 hour",
-    query_name: str = "ss_join_out",
-):
-    """Stream-stream inner join, BOTH sides unbounded: clicks wait in the
-    state store for purchases and vice versa. The dual watermarks plus
-    the time-range join condition are what make state finite — Spark
-    derives a state-eviction horizon from them (a click older than
-    watermark + 30 min can never match a future purchase and is
-    dropped), so state is bounded by the event rate × horizon, not the
-    stream's lifetime. Inner-join matches emit immediately in append
-    mode; this is the attribution-pipeline pattern where BOTH sides are
-    live feeds (contrast run_enriched_stream's static dimension).
-    """
-    c = (
-        _event_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    p = (
-        _event_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    joined = c.join(
-        p,
-        (c.user_id == p.p_user_id)
-        & (p.purchase_ts >= c.click_ts)
-        & (p.purchase_ts < c.click_ts + F.expr("INTERVAL 30 MINUTES")),
-    ).select("click_id", "purchase_id", "user_id", "click_ts", "purchase_ts")
-    return (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-
-
-def run_stream_stream_left_join(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark: str = "10 minutes",
-    query_name: str = "ss_left_join_out",
-    source_dir: str | None = None,
-    max_files_per_trigger: int | None = None,
-):
-    """Stream-stream LEFT OUTER join — the attribution pattern where
-    unconverted clicks must ALSO be emitted (with null purchase).
-
-    Outer semantics force a second timing contract on top of the inner
-    join's: a matched row emits immediately, but an UNMATCHED click can
-    only emit once the watermark proves no future purchase can still
-    match it (click_ts + 30 min join horizon + watermark delay). Until
-    then the click sits in the state store as a candidate; when the
-    watermark passes its horizon, Spark evicts it and emits the
-    null-extended row in the same (or a no-data) micro-batch. State
-    stays bounded exactly as in the inner join — eviction is the
-    emission mechanism, not just cleanup.
-
-    Consequence on a bounded replay: clicks whose horizon the FINAL
-    watermark never passes (the tail of the stream) are still
-    state-resident at shutdown — correct behavior, asserted in the
-    test; a live deployment keeps draining them as event time advances.
-
-    ``source_dir``/``max_files_per_trigger`` let tests feed the same
-    schema through multiple micro-batches (one file per trigger) so the
-    watermark actually advances between batches; production points this
-    at the live feed directory.
-    """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-    def stream():
-        r = spark.readStream.schema(schema)
-        if max_files_per_trigger:
-            r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-        raw = r.parquet(source_dir if source_dir else f"{sf_dir}/events.parque*")
-        dt = dict(raw.dtypes).get("ts")
-        if dt == "bigint":
-            raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif dt == "timestamp_ntz":
-            raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        return raw
-
-    c = (
-        stream()
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    p = (
-        stream()
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    joined = c.join(
-        p,
-        (c.user_id == p.p_user_id)
-        & (p.purchase_ts >= c.click_ts)
-        & (p.purchase_ts < c.click_ts + F.expr("INTERVAL 30 MINUTES")),
-        "leftOuter",
-    ).select("click_id", "purchase_id", "user_id", "click_ts", "purchase_ts")
-    return (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _attribution(ev, ev, "inner")
 
 
 @query(
@@ -513,120 +287,9 @@ def stream_stream_left_outer_clicks(spark: SparkSession, sf_dir: str) -> DataFra
     time-range residual — hash-partitioned, never a cross product, and
     the null-extension adds no extra exchange.
     """
-    # fan_out=False: both filtered legs re-partition on user_id at the
-    # join (one is a broadcast build at test SF) — the fan-out shuffle
-    # was redundant (r11 window-family A/B)
+    # fan_out=False: as in the inner twin above
     ev = table(spark, sf_dir, "events", fan_out=False)
-    c = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        "user_id",
-        F.col("ts").alias("click_ts"),
-    )
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    return c.join(
-        p,
-        (c.user_id == p.p_user_id)
-        & (p.purchase_ts >= c.click_ts)
-        & (p.purchase_ts < c.click_ts + F.expr("INTERVAL 30 MINUTES")),
-        "leftOuter",
-    ).select("click_id", "purchase_id", "user_id", "click_ts", "purchase_ts")
-
-
-def run_ohlc_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark: str = "10 minutes",
-    query_name: str = "ohlc_out",
-    output_mode: str = "complete",
-):
-    """Streaming twin of ``operators.aggregates.ohlc_hourly_by_type``:
-    continuously-maintained OHLC candles — the hypertable continuous
-    aggregate, as a watermarked streaming query.
-
-    The batch tier's insight carries over unchanged: open/close are
-    struct extrema over (ts, event_id, value), which are ASSOCIATIVE,
-    so the streaming state per (window × type) group is just the two
-    candidate structs plus the decimal volume sum and the count — O(1)
-    per group, merged incrementally as micro-batches arrive, never a
-    per-event buffer. The watermark bounds how many window groups stay
-    live; everything older is emittable/evictable. An order-dependent
-    "first value" formulation (ROW_NUMBER) would need per-window event
-    retention — unbounded state; the associative form is what makes
-    the candle streamable at all.
-    """
-    ev = _event_stream(spark, sf_dir)
-    first = F.min(F.struct("ts", "event_id", "value"))
-    last = F.max(F.struct("ts", "event_id", "value"))
-    agg = (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            first.getField("value").alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            last.getField("value").alias("close"),
-            dsum("value").alias("volume"),
-            F.count("*").alias("n_events"),
-        )
-        .select(
-            F.col("w.start").alias("bucket"),
-            "event_type",
-            "open",
-            "high",
-            "low",
-            "close",
-            "volume",
-            "n_events",
-        )
-    )
-    return (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-
-
-def run_cms_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "cms_out",
-):
-    """Continuously-maintained count-min sketch over the documents
-    stream: the same 4×1024 cell construction as the batch
-    ``cms_heavy_hitters`` build (operators/textstats.py), kept live by a
-    streaming aggregation.
-
-    This works because CMS cells are COUNTS — the canonical mergeable
-    streaming state. The per-micro-batch partials fold into at most
-    d×w = 4096 state rows, so sketch state is size-independent of the
-    stream: the property that lets a 100 TB/day ingest keep live
-    heavy-hitter estimates without ever storing tokens. Complete-mode
-    memory sink; convergence to the batch cells is pinned by test.
-    """
-    from ..operators.textstats import _CMS_D, _cms_bucket_sql
-    from ..functions.hashing import md5int_spark
-
-    schema = "doc_id bigint, source string, lang string, text string, n_chars bigint"
-    raw = spark.readStream.schema(schema).parquet(f"{sf_dir}/documents.parque*")
-    toks = raw.select(F.explode(F.split(F.lower("text"), " ")).alias("term"))
-    h = md5int_spark("term")
-    buckets = F.array(*[F.expr(_cms_bucket_sql(j, h)) for j in range(_CMS_D)])
-    cells = (
-        toks.select(F.posexplode(buckets).alias("j", "bucket"))
-        .groupBy("j", "bucket")
-        .agg(F.count("*").alias("c"))
-    )
-    return (
-        cells.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _attribution(ev, ev, "leftOuter")
 
 
 @query(
@@ -644,8 +307,7 @@ def run_cms_stream(
 )
 def stream_bloom_gated_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the bloom-pruned stream-static enrichment
-    (:func:`run_bloom_gated_stream` — memory-sink-pinned equal to this
-    expression in tests/test_streaming.py): the hot-customer dimension
+    (:func:`run_bloom_gated_stream`): the hot-customer dimension
     (c_acctbal > 9900, ~1%) folds its keys into ONE 16 KB packed bloom,
     every event probes the bitmap BEFORE the enrichment join (gate
     first, join second), and the exact inner join kills the bloom's
@@ -667,46 +329,197 @@ def stream_bloom_gated_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern's streaming member (round-10 staged kernel, registered
     round-11).
     """
-    from ..operators.joins import bloom_build, bloom_might_contain
+    return _hot_segment_sums(
+        table(spark, sf_dir, "events", fan_out=False),
+        sf_dir,
+        lambda ev, bf: ev.crossJoin(F.broadcast(bf)),
+    )
 
-    ev = table(spark, sf_dir, "events", fan_out=False)
-    hot = (
-        table(spark, sf_dir, "customer", fan_out=False)
-        .filter(F.col("c_acctbal") > _BLOOM_HOT_BAL)
-        .select("c_custkey", "c_mktsegment")
+
+# --------------------------------------------------- streaming runners ----
+
+
+def run_tumbling_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    query_name: str = "tumbling_out",
+    available_now: bool = False,
+):
+    """Start the streaming twin of ``stream_tumbling_counts``: watermarked
+    tumbling-window counts into a memory sink. Returns the StreamingQuery
+    (caller drives it, e.g. :func:`~.io.drain`).
+
+    The output mode is ``complete`` because a bounded file source is
+    one micro-batch — append mode only emits a window once a *later*
+    batch advances the watermark past its end, so a single-batch drive
+    would emit nothing. Long-running deployments use ``append`` +
+    watermark so state is evicted and each window emits exactly once.
+
+    ``available_now=True`` starts the query with Trigger.AvailableNow —
+    the production catch-up mode: process everything present at start
+    (respecting per-batch source limits), then TERMINATE, persisting
+    offsets so the next start resumes incrementally. This is how a
+    cron-scheduled job drains a backlog with streaming semantics
+    (exactly-once, bounded state) but batch lifecycle (no always-on
+    cluster); the caller awaits termination instead of draining.
+    """
+    return start(
+        _window_counts(_watermarked(spark, sf_dir)),
+        query_name,
+        mode=_AGG_MODE,
+        available_now=available_now,
     )
-    bf = bloom_build(hot.select("c_custkey"), "c_custkey")
-    gated = (
-        ev.crossJoin(F.broadcast(bf))
-        .filter(bloom_might_contain("bf", "user_id"))
-        .drop("bf")
+
+
+def run_sliding_stream(spark: SparkSession, sf_dir: str, query_name: str = "sliding_out"):
+    """Streaming twin of ``stream_sliding_value_sum`` (see
+    :func:`run_tumbling_stream` for the output-mode rationale)."""
+    return start(
+        _window_counts(_watermarked(spark, sf_dir), "15 minutes"), query_name, mode=_AGG_MODE
     )
-    return (
-        gated.join(hot, gated.user_id == hot.c_custkey)
-        .groupBy(
-            F.window("ts", "1 hour").alias("w"),
-            F.col("c_mktsegment").alias("segment"),
+
+
+def run_session_stream(spark: SparkSession, sf_dir: str, query_name: str = "session_out"):
+    """Streaming twin of ``stream_session_windows``: gap-merged per-user
+    sessions maintained in the state store. Complete mode for the
+    bounded single-batch drive (see ``run_tumbling_stream`` rationale);
+    production uses append + watermark so closed sessions emit once and
+    their state is evicted."""
+    return start(_sessions(_watermarked(spark, sf_dir)), query_name, mode=_AGG_MODE)
+
+
+def run_enriched_stream(spark: SparkSession, sf_dir: str, query_name: str = "enriched_out"):
+    """Stream-static join: the event stream enriched against the STATIC
+    customer dimension — no watermark needed on the static side, no
+    state kept for it; Spark re-plans the dimension side per micro-batch
+    (so slowly-changing dims pick up updates between batches) and, with
+    no hint on the SF-scaled customer table, picks broadcast by size at
+    test SF and a shuffle join at scale. This is
+    the canonical streaming-ETL enrichment; stream-stream joins (both
+    sides unbounded + dual watermarks) are the state-heavy cousin the
+    pipeline avoids when one side is a dimension.
+    """
+    return start(
+        _segment_counts(_watermarked(spark, sf_dir), sf_dir), query_name, mode=_AGG_MODE
+    )
+
+
+def run_stream_stream_join(spark: SparkSession, sf_dir: str, query_name: str = "ss_join_out"):
+    """Stream-stream inner join, BOTH sides unbounded: clicks wait in the
+    state store for purchases and vice versa. The dual watermarks plus
+    the time-range join condition are what make state finite — Spark
+    derives a state-eviction horizon from them (a click older than
+    watermark + 30 min can never match a future purchase and is
+    dropped), so state is bounded by the event rate × horizon, not the
+    stream's lifetime. Inner-join matches emit immediately in append
+    mode; this is the attribution-pipeline pattern where BOTH sides are
+    live feeds (contrast run_enriched_stream's static dimension).
+    """
+    legs = [_watermarked(spark, sf_dir, _JOIN_WATERMARK) for _ in range(2)]
+    return start(_attribution(*legs, "inner"), query_name)
+
+
+def run_stream_stream_left_join(
+    spark: SparkSession,
+    sf_dir: str,
+    query_name: str = "ss_left_join_out",
+    source_dir: str | None = None,
+    max_files_per_trigger: int | None = None,
+):
+    """Stream-stream LEFT OUTER join — the attribution pattern where
+    unconverted clicks must ALSO be emitted (with null purchase).
+
+    Outer semantics force a second timing contract on top of the inner
+    join's: a matched row emits immediately, but an UNMATCHED click can
+    only emit once the watermark proves no future purchase can still
+    match it (click_ts + 30 min join horizon + watermark delay). Until
+    then the click sits in the state store as a candidate; when the
+    watermark passes its horizon, Spark evicts it and emits the
+    null-extended row in the same (or a no-data) micro-batch. State
+    stays bounded exactly as in the inner join — eviction is the
+    emission mechanism, not just cleanup.
+
+    Consequence on a bounded replay: clicks whose horizon the FINAL
+    watermark never passes (the tail of the stream) are still
+    state-resident at shutdown — correct behavior, asserted in the
+    test; a live deployment keeps draining them as event time advances.
+
+    ``source_dir``/``max_files_per_trigger`` let tests feed the same
+    schema through multiple micro-batches (one file per trigger) so the
+    watermark actually advances between batches; production points this
+    at the live feed directory.
+    """
+    legs = [
+        event_stream(spark, sf_dir, source_dir, max_files_per_trigger).withWatermark(
+            "ts", _WATERMARK
         )
-        .agg(F.count("*").alias("n_events"), dsum("value", 6).alias("sum_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "segment",
-            "n_events",
-            "sum_value",
-        )
+        for _ in range(2)
+    ]
+    return start(_attribution(*legs, "leftOuter"), query_name)
+
+
+def run_ohlc_stream(spark: SparkSession, sf_dir: str, query_name: str = "ohlc_out"):
+    """Streaming twin of ``operators.aggregates.ohlc_hourly_by_type``:
+    continuously-maintained OHLC candles — the hypertable continuous
+    aggregate, as a watermarked streaming query. The candle aggregates
+    are the batch query's (:func:`~..operators.aggregates.ohlc_aggs`);
+    only the bucket differs, ``window`` here (watermarks need a window)
+    against the batch query's wall-clock truncation.
+
+    The batch tier's insight carries over unchanged: open/close are
+    struct extrema over (ts, event_id, value), which are ASSOCIATIVE,
+    so the streaming state per (window × type) group is just the two
+    candidate structs plus the decimal volume sum and the count — O(1)
+    per group, merged incrementally as micro-batches arrive, never a
+    per-event buffer. The watermark bounds how many window groups stay
+    live; everything older is emittable/evictable. An order-dependent
+    "first value" formulation (ROW_NUMBER) would need per-window event
+    retention — unbounded state; the associative form is what makes
+    the candle streamable at all.
+    """
+    agg = (
+        _watermarked(spark, sf_dir)
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(*ohlc_aggs())
+        .select(F.col("w.start").alias("bucket"), "event_type", "open", "high", "low",
+                "close", "volume", "n_events")
     )
+    return start(agg, query_name, mode=_AGG_MODE)
+
+
+def run_cms_stream(spark: SparkSession, sf_dir: str, query_name: str = "cms_out"):
+    """Continuously-maintained count-min sketch over the documents
+    stream: the same 4×1024 cell construction as the batch
+    ``cms_heavy_hitters`` build (operators/textstats.py), kept live by a
+    streaming aggregation.
+
+    This works because CMS cells are COUNTS — the canonical mergeable
+    streaming state. The per-micro-batch partials fold into at most
+    d×w = 4096 state rows, so sketch state is size-independent of the
+    stream: the property that lets a 100 TB/day ingest keep live
+    heavy-hitter estimates without ever storing tokens. Complete-mode
+    memory sink; convergence to the batch cells is pinned by test.
+    """
+    from ..operators.textstats import _CMS_D, _cms_bucket_sql
+    from ..functions.hashing import md5int_spark
+
+    raw = source(spark, f"{sf_dir}/documents.parque*", DOCUMENTS_SCHEMA)
+    toks = raw.select(F.explode(F.split(F.lower("text"), " ")).alias("term"))
+    h = md5int_spark("term")
+    buckets = F.array(*[F.expr(_cms_bucket_sql(j, h)) for j in range(_CMS_D)])
+    cells = (
+        toks.select(F.posexplode(buckets).alias("j", "bucket"))
+        .groupBy("j", "bucket")
+        .agg(F.count("*").alias("c"))
+    )
+    return start(cells, query_name, mode=_AGG_MODE)
 
 
 def run_bloom_gated_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark: str = "10 minutes",
-    query_name: str = "bloom_gated_out",
-    output_mode: str = "complete",
+    spark: SparkSession, sf_dir: str, query_name: str = "bloom_gated_out"
 ):
     """BLOOM-PRUNED stream-static enrichment (registered batch twin:
-    :func:`stream_bloom_gated_segments`; memory-sink-pinned against the
-    plain batch join in tests/test_streaming.py).
+    :func:`stream_bloom_gated_segments`, the same body).
 
     The hot-customer dimension folds its join keys into ONE 16 KB bloom
     (:func:`~cooler_mapreduce_spark.operators.joins.bloom_build` — the
@@ -717,8 +530,7 @@ def run_bloom_gated_stream(
     the packed bitmap BEFORE the enrichment join, so the cold ~99% of
     events never reaches the join at all. False positives die in the
     exact stream-static inner join downstream — the bloom changes the
-    per-batch plan, never the answer (the memory-sink test pins the
-    drained result against the plain batch join).
+    per-batch plan, never the answer.
 
     100 TB shape: the static side re-plans per micro-batch (picking up
     slowly-changing dims), but its payload on the stream path is the
@@ -728,41 +540,12 @@ def run_bloom_gated_stream(
     composed production shape for high-selectivity streaming
     enrichment (gate first, join second).
     """
-    from ..operators.joins import _BLOOM_HOT_BAL, bloom_build, bloom_might_contain
 
-    ev = _event_stream(spark, sf_dir)
-    hot = (
-        table(spark, sf_dir, "customer", fan_out=False)
-        .filter(F.col("c_acctbal") > _BLOOM_HOT_BAL)
-        .select("c_custkey", "c_mktsegment")
-    )
-    bf = bloom_build(hot.select("c_custkey"), "c_custkey").withColumn(
-        "k", F.lit(1)
-    )
-    gated = (
-        ev.withColumn("k", F.lit(1))
-        .join(bf, "k")
-        .filter(bloom_might_contain("bf", "user_id"))
-        .drop("k", "bf")
-    )
-    agg = (
-        gated.withWatermark("ts", watermark)
-        .join(hot, gated.user_id == hot.c_custkey)
-        .groupBy(
-            F.window("ts", "1 hour").alias("w"),
-            F.col("c_mktsegment").alias("segment"),
-        )
-        .agg(F.count("*").alias("n_events"), dsum("value", 6).alias("sum_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "segment",
-            "n_events",
-            "sum_value",
-        )
-    )
-    return (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .start()
+    def attach(ev: DataFrame, bf: DataFrame) -> DataFrame:
+        return ev.withColumn("k", F.lit(1)).join(bf.withColumn("k", F.lit(1)), "k").drop("k")
+
+    return start(
+        _hot_segment_sums(_watermarked(spark, sf_dir), sf_dir, attach),
+        query_name,
+        mode=_AGG_MODE,
     )

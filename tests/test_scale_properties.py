@@ -907,14 +907,15 @@ def test_fan_out_sizes_from_the_cached_stat(spark, oracle_sf_dir, monkeypatch):
 
 
 def test_apply_session_defaults_walks_the_input_dir_once(oracle_sf_dir, monkeypatch):
-    """One walk of $SPARK_GRAFT_SF_DIR feeds both the guard and the
-    shuffle width."""
+    """One walk of the given ``sf_dir`` feeds both the guard and the
+    shuffle width; ``$SPARK_GRAFT_SF_DIR`` is not read."""
     from types import SimpleNamespace
 
     from cooler_mapreduce_spark import session
 
-    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", oracle_sf_dir)
+    monkeypatch.delenv("SPARK_GRAFT_SF_DIR", raising=False)
     monkeypatch.setattr(session, "ship_package", lambda spark: None)
+    want = str(session.default_shuffle_partitions(4, session._input_dir_bytes(oracle_sf_dir)))
     real_walk = session.os.walk
     walks = []
 
@@ -928,8 +929,6 @@ def test_apply_session_defaults_walks_the_input_dir_once(oracle_sf_dir, monkeypa
         conf=SimpleNamespace(set=conf.__setitem__),
         sparkContext=SimpleNamespace(defaultParallelism=4),
     )
-    session.apply_session_defaults(host)
+    session.apply_session_defaults(host, oracle_sf_dir)
     assert walks == [oracle_sf_dir]
-    assert conf["spark.sql.shuffle.partitions"] == str(
-        session.default_shuffle_partitions(4, session._input_dir_bytes())
-    )
+    assert conf["spark.sql.shuffle.partitions"] == want

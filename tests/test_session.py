@@ -79,7 +79,7 @@ def test_apply_session_defaults_logs_a_rejected_key(monkeypatch, caplog):
         session.apply_session_defaults(SimpleNamespace(
             conf=SimpleNamespace(set=conf_set),
             sparkContext=SimpleNamespace(defaultParallelism=4),
-        ))
+        ), "")
         return conf
 
     everything = apply(None)
@@ -104,16 +104,42 @@ def test_ship_package_logs_a_rejected_file(caplog):
 
 def test_apply_session_defaults_sets_exactly_the_shared_table(tmp_path, monkeypatch):
     (tmp_path / "t.parquet").write_bytes(b"x" * 5000)
-    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path))
     monkeypatch.setattr(session, "ship_package", lambda spark: None)
     calls = []
     session.apply_session_defaults(SimpleNamespace(
         conf=SimpleNamespace(set=lambda k, v: calls.append((k, v))),
         sparkContext=SimpleNamespace(defaultParallelism=4),
-    ))
+    ), str(tmp_path))
     # 5000 input bytes size the initial shuffle to one partition
     assert calls == [*session.SESSION_DEFAULTS, ("spark.sql.shuffle.partitions", "1")]
     assert len(dict(calls)) == len(calls)
+
+
+def test_queries_size_from_their_sf_dir_and_ship_once(tmp_path, monkeypatch):
+    """Each ``queries()`` call sizes the shuffle from the ``sf_dir`` it is
+    given, and the package zip is added to a SparkContext only once."""
+    import __spark_entry__
+
+    small, big = tmp_path / "small", tmp_path / "big"
+    small.mkdir()
+    big.mkdir()
+    (small / "t.parquet").write_bytes(b"x" * 5000)
+    (big / "t.parquet").write_bytes(b"x" * (5 << 20))
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(small))  # must not be read
+    spec = SimpleNamespace(fn=lambda spark, sf_dir: sf_dir, oracle=None)
+    monkeypatch.setattr(__spark_entry__, "load_all", lambda: {"q": spec})
+    widths, added = [], []
+    host = SimpleNamespace(
+        conf=SimpleNamespace(
+            set=lambda k, v: widths.append(v) if k == "spark.sql.shuffle.partitions" else None
+        ),
+        sparkContext=SimpleNamespace(defaultParallelism=8, addPyFile=added.append),
+    )
+    run = __spark_entry__.queries()["q"]
+    assert run(host, str(small)) == str(small)
+    assert run(host, str(big)) == str(big)
+    assert widths == ["1", "3"]
+    assert len(added) == 1
 
 
 def test_verify_script_runs_workers_from_the_shipped_zip(sf_dir, tmp_path):

@@ -2,54 +2,85 @@
 
 Strategy from SURVEY.md §5 carry-over: the batch twin is oracle-checked
 (test_oracle_parity), so streaming == batch ⇒ streaming == oracle.
-Memory sink + processAllAvailable drives the bounded parquet source to
-completion synchronously.
+Memory sink + ``drain`` (processAllAvailable, then stop) drives the
+bounded parquet source to completion synchronously.
 """
 
 from __future__ import annotations
 
 import pytest
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from cooler_mapreduce_spark.registry import load_all
 from cooler_mapreduce_spark.sources.catalog import table
+from cooler_mapreduce_spark.streaming import windows as W
+from cooler_mapreduce_spark.streaming.io import drain, source, start
 from cooler_mapreduce_spark.streaming.stateful import run_user_totals_stream
-from cooler_mapreduce_spark.streaming.windows import run_sliding_stream, run_tumbling_stream
 
 SPECS = load_all()
-
-
-def _drain(q):
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_tumbling_stream_equals_batch(spark, sf_dir):
-    q = run_tumbling_stream(spark, sf_dir, query_name="t_tumbling")
-    _drain(q)
-    got = _rows(spark.sql("SELECT * FROM t_tumbling"))
-    want = _rows(SPECS["stream_tumbling_counts"].fn(spark, sf_dir))
-    assert got == want
+def _twin_parity(runner, batch, sink, sf="sf_dir", **kw):
+    """The streaming==batch check of one twin pair: drain ``runner`` into
+    the memory sink ``sink`` and compare its sorted rows with the
+    registered ``batch`` query's (projected to the sink's columns); the
+    pair's rows must not be empty. One body, instantiated per pair below
+    so each pair keeps its own test id."""
+
+    def test(spark, request):
+        d = request.getfixturevalue(sf)
+        q = runner(spark, d, query_name=sink, **kw)
+        if kw.get("available_now"):
+            assert q.awaitTermination(120), "availableNow query did not self-terminate"
+        drain(q)
+        got = spark.table(sink)
+        rows = _rows(got)
+        assert rows
+        assert rows == _rows(SPECS[batch].fn(spark, d).select(*got.columns))
+
+    return test
 
 
-def test_sliding_stream_equals_batch(spark, sf_dir):
-    q = run_sliding_stream(spark, sf_dir, query_name="t_sliding")
-    _drain(q)
-    got = _rows(spark.sql("SELECT * FROM t_sliding"))
-    want = _rows(SPECS["stream_sliding_value_sum"].fn(spark, sf_dir))
-    assert got == want
+test_tumbling_stream_equals_batch = _twin_parity(
+    W.run_tumbling_stream, "stream_tumbling_counts", "t_tumbling"
+)
+test_available_now_trigger_terminates_and_matches_batch = _twin_parity(
+    W.run_tumbling_stream, "stream_tumbling_counts", "t_avail_now", available_now=True
+)
+test_sliding_stream_equals_batch = _twin_parity(
+    W.run_sliding_stream, "stream_sliding_value_sum", "t_sliding"
+)
+test_session_stream_equals_batch_twin = _twin_parity(
+    W.run_session_stream, "stream_session_windows", "t_sessions"
+)
+test_enriched_stream_equals_batch = _twin_parity(
+    W.run_enriched_stream, "stream_enriched_segment_counts", "t_enriched"
+)
+test_stream_stream_join_equals_batch = _twin_parity(
+    W.run_stream_stream_join, "stream_stream_click_purchase", "t_ss_join"
+)
+# the streaming candles (``window`` bucket) against the batch downsample
+# (wall-clock bucket): struct-extremum open/close merge associatively
+# across micro-batches, so the drain reproduces the batch rollup exactly
+test_ohlc_stream_equals_batch = _twin_parity(
+    W.run_ohlc_stream, "ohlc_hourly_by_type", "t_ohlc"
+)
+# at the oracle SF: sf0.001 has ZERO hot-customer events, the positive
+# path needs this density; the bloom admits false positives by design
+# and the exact join must kill every one, so the gate never changes rows
+test_bloom_gated_stream_equals_batch = _twin_parity(
+    W.run_bloom_gated_stream, "stream_bloom_gated_segments", "t_bloom_gated", sf="oracle_sf_dir"
+)
 
 
 def test_stateful_user_totals_equals_batch(spark, sf_dir):
-    q = run_user_totals_stream(spark, sf_dir, query_name="t_totals")
-    _drain(q)
+    drain(run_user_totals_stream(spark, sf_dir, query_name="t_totals"))
     # update mode: last emitted row per user is the final state
     got = spark.sql(
         """
@@ -89,7 +120,7 @@ def test_transform_with_state_equals_batch(spark, sf_dir):
     # only the stream's cloned session keeps RocksDB
     after = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     assert after == prev, "run_user_type_counts_stream leaked the provider conf"
-    _drain(q)
+    drain(q)
     got = spark.sql(
         """
         SELECT user_id, event_type, n_events FROM (
@@ -135,8 +166,7 @@ def test_streaming_dedup_equals_batch_distinct(spark, sf_dir):
     from cooler_mapreduce_spark.sources.catalog import table
     from cooler_mapreduce_spark.streaming.dedup import run_streaming_dedup
 
-    q = run_streaming_dedup(spark, sf_dir, query_name="t_dedup")
-    _drain(q)
+    drain(run_streaming_dedup(spark, sf_dir, query_name="t_dedup"))
     got = spark.sql("SELECT content_hash FROM t_dedup")
     assert got.count() == got.distinct().count()
     want = (
@@ -174,28 +204,13 @@ def test_streaming_dedup_watermarked_across_batches(spark, tmp_path):
         (part,) = _glob.glob(str(stage / "part-*.parquet"))
         shutil.copy(part, files / f"{i}.parquet")
 
-    q = run_streaming_dedup(
-        spark,
-        str(src),
-        query_name="t_dedup_wm",
-        watermark="1 hour",
-        max_files_per_trigger=1,
-    )
-    _drain(q)
+    drain(run_streaming_dedup(
+        spark, str(src), query_name="t_dedup_wm", watermark="1 hour", max_files_per_trigger=1
+    ))
     out = spark.sql("SELECT content_hash FROM t_dedup_wm")
     # 3 distinct texts -> 3 rows; the cross-batch duplicate is dropped
     assert out.count() == 3
     assert out.distinct().count() == 3
-
-
-def test_session_stream_equals_batch_twin(spark, sf_dir):
-    from cooler_mapreduce_spark.streaming.dedup import run_session_stream
-
-    q = run_session_stream(spark, sf_dir, query_name="t_sessions")
-    _drain(q)
-    got = _rows(spark.sql("SELECT * FROM t_sessions"))
-    want = _rows(SPECS["stream_session_windows"].fn(spark, sf_dir))
-    assert got == want
 
 
 def test_stream_to_parquet_sink(spark, sf_dir, tmp_path):
@@ -205,8 +220,7 @@ def test_stream_to_parquet_sink(spark, sf_dir, tmp_path):
 
     out = str(tmp_path / "stream_out")
     ckpt = str(tmp_path / "ckpt")
-    q = run_stream_to_parquet(spark, sf_dir, out, ckpt)
-    _drain(q)
+    drain(run_stream_to_parquet(spark, sf_dir, out, ckpt))
     import os
 
     assert any(d.startswith("event_type=") for d in os.listdir(out))
@@ -214,6 +228,27 @@ def test_stream_to_parquet_sink(spark, sf_dir, tmp_path):
     got = back.groupBy().sum("n_events").collect()[0][0]
     want = SPECS["stream_tumbling_counts"].fn(spark, sf_dir).groupBy().sum("n_events").collect()[0][0]
     assert got == want
+
+
+def test_stream_to_parquet_counts_each_event_once_across_restarts(spark, sf_dir, tmp_path):
+    """Two source generations through one checkpoint: after each drain
+    the sink holds every window once, equal to the batch twin over the
+    events seen so far. Each complete-mode trigger carries the whole
+    result table, so a sink that appended it would re-add every earlier
+    window on the second generation."""
+    from cooler_mapreduce_spark.streaming.dedup import run_stream_to_parquet
+
+    src, out, ckpt = (str(tmp_path / n) for n in ("src", "out", "ckpt"))
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    cols = ["window_start", "event_type", "n_events"]
+    for gen in (0, 1):
+        ev.filter(F.col("event_id") % 2 == gen).coalesce(1).write.mode("append").parquet(
+            f"{src}/events.parquet"
+        )
+        drain(run_stream_to_parquet(spark, src, out, ckpt))
+        got = _rows(spark.read.parquet(out).select(*cols))
+        assert got == _rows(SPECS["stream_tumbling_counts"].fn(spark, src).select(*cols))
+        assert sum(r[2] for r in got) == ev.filter(F.col("event_id") % 2 <= gen).count()
 
 
 def test_watermark_evicts_state_and_drops_late_events(spark, tmp_path):
@@ -251,19 +286,15 @@ def test_watermark_evicts_state_and_drops_late_events(spark, tmp_path):
     # be dropped, not re-open the window or re-emit
     write_file("b4", [(12, 15)])
 
-    stream = (
-        spark.readStream.schema("user_id bigint, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src / "*"))
-    )
+    stream = source(spark, str(src / "*"), "user_id bigint, ts timestamp", 1)
     agg = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("ws"), "n")
     )
-    q = agg.writeStream.outputMode("append").format("memory").queryName("t_late").start()
-    _drain(q)
+    q = start(agg, "t_late")
+    drain(q)
     rows = spark.sql("SELECT * FROM t_late").collect()
     got = {r["ws"].hour: r["n"] for r in rows}
     assert got == {12: 1}  # emitted exactly once, count WITHOUT the late row
@@ -284,12 +315,10 @@ def test_stream_checkpoint_prevents_duplicate_writes(spark, sf_dir, tmp_path):
 
     out = str(tmp_path / "ckpt_out")
     ckpt = str(tmp_path / "ckpt_dir")
-    q1 = run_stream_to_parquet(spark, sf_dir, out, ckpt)
-    _drain(q1)
+    drain(run_stream_to_parquet(spark, sf_dir, out, ckpt))
     first = spark.read.parquet(out).groupBy().sum("n_events").collect()[0][0]
     # restart from the same checkpoint — batch ids already committed
-    q2 = run_stream_to_parquet(spark, sf_dir, out, ckpt)
-    _drain(q2)
+    drain(run_stream_to_parquet(spark, sf_dir, out, ckpt))
     second = spark.read.parquet(out).groupBy().sum("n_events").collect()[0][0]
     assert second == first
 
@@ -315,33 +344,22 @@ def test_stream_checkpoint_recovers_state_and_catches_up(spark, sf_dir, tmp_path
     b = ev.filter(F.crc32(F.col("event_type").cast("binary")) % 2 == 1)
     a.coalesce(1).write.mode("append").parquet(in_dir)
 
-    def start():
-        agg = (
-            spark.readStream.schema(ev.schema)
-            .parquet(in_dir)
-            .groupBy("event_type")
-            .agg(F.count("*").alias("n"))
-        )
+    def run():
+        agg = source(spark, in_dir, ev.schema).groupBy("event_type").agg(F.count("*").alias("n"))
 
         def write_batch(batch_df, batch_id: int) -> None:
             batch_df.write.mode("overwrite").parquet(out)
 
-        return (
-            agg.writeStream.outputMode("complete")
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
+        return start(agg, write_batch, mode="complete", checkpoint=ckpt)
 
-    q1 = start()
-    _drain(q1)
+    drain(run())
     got_a = {(r.event_type, r.n) for r in spark.read.parquet(out).collect()}
     want_a = {(r.event_type, r.n) for r in a.groupBy("event_type").agg(F.count("*").alias("n")).collect()}
     assert got_a == want_a
     # new data lands while the query is DOWN
     b.coalesce(1).write.mode("append").parquet(in_dir)
-    q2 = start()
-    _drain(q2)
+    q2 = run()
+    drain(q2)
     # catch-up correctness: state restored + only the new file replayed
     got_all = {(r.event_type, r.n) for r in spark.read.parquet(out).collect()}
     want_all = {(r.event_type, r.n) for r in ev.groupBy("event_type").agg(F.count("*").alias("n")).collect()}
@@ -351,28 +369,6 @@ def test_stream_checkpoint_recovers_state_and_catches_up(spark, sf_dir, tmp_path
     # equal file B's rows exactly (A's were committed in q1's offsets).
     replayed = sum(p["numInputRows"] for p in q2.recentProgress)
     assert replayed == b.count()
-
-
-def test_enriched_stream_equals_batch(spark, sf_dir):
-    """The stream-static enrichment join converges to its batch twin."""
-    from cooler_mapreduce_spark.streaming.windows import run_enriched_stream
-
-    q = run_enriched_stream(spark, sf_dir, query_name="t_enriched")
-    _drain(q)
-    got = _rows(spark.sql("SELECT * FROM t_enriched"))
-    want = _rows(SPECS["stream_enriched_segment_counts"].fn(spark, sf_dir))
-    assert got == want
-
-
-def test_stream_stream_join_equals_batch(spark, sf_dir):
-    from cooler_mapreduce_spark.streaming.windows import run_stream_stream_join
-
-    q = run_stream_stream_join(spark, sf_dir, query_name="t_ss_join")
-    _drain(q)
-    got = _rows(spark.sql("SELECT * FROM t_ss_join"))
-    want = _rows(SPECS["stream_stream_click_purchase"].fn(spark, sf_dir))
-    assert len(got) > 0  # positive path: fixtures contain matches
-    assert got == want
 
 
 def test_stream_stream_left_outer_join_emits_unmatched_after_horizon(
@@ -388,9 +384,6 @@ def test_stream_stream_left_outer_join_emits_unmatched_after_horizon(
     globally-last click, whose own side pins the min) legitimately stay
     state-resident — so got-nulls must sit between the guaranteed set
     and the full batch-unmatched set."""
-    from cooler_mapreduce_spark.sources.catalog import table
-    from cooler_mapreduce_spark.streaming.windows import run_stream_stream_left_join
-
     ev = table(spark, sf_dir, "events", fan_out=False)
     mx = ev.agg(F.max("ts")).collect()[0][0]
     cut = (mx - __import__("datetime").timedelta(hours=2)).strftime("%Y-%m-%d %H:%M:%S")
@@ -398,11 +391,9 @@ def test_stream_stream_left_outer_join_emits_unmatched_after_horizon(
     ev.filter(F.col("ts") < cut).coalesce(1).write.mode("append").parquet(src)
     ev.filter(F.col("ts") >= cut).coalesce(1).write.mode("append").parquet(src)
 
-    q = run_stream_stream_left_join(
-        spark, sf_dir, query_name="t_ss_left",
-        source_dir=src, max_files_per_trigger=1,
-    )
-    _drain(q)
+    drain(W.run_stream_stream_left_join(
+        spark, sf_dir, query_name="t_ss_left", source_dir=src, max_files_per_trigger=1
+    ))
 
     clicks = ev.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("click_ts")
@@ -453,9 +444,7 @@ def test_debounce_stream_suppresses_repeats(spark, sf_dir):
     from cooler_mapreduce_spark.streaming.dedup import run_debounce_stream
     from cooler_mapreduce_spark.sources.catalog import table
 
-    q = run_debounce_stream(spark, sf_dir, query_name="t_debounce")
-    q.processAllAvailable()
-    q.stop()
+    drain(run_debounce_stream(spark, sf_dir, query_name="t_debounce"))
     got = spark.sql("SELECT user_id, event_type FROM t_debounce")
     keys = table(spark, sf_dir, "events").select("user_id", "event_type").distinct()
     assert got.count() == keys.count()
@@ -483,11 +472,7 @@ def test_streaming_upsert_scd1_equals_batch_keep_latest(spark, sf_dir, tmp_path)
     # 2 base files + 1 update file; maxFilesPerTrigger=1 -> 3 merge rounds
     base.repartition(2).write.mode("append").parquet(f"{in_dir}/orders.parquet")
     updates.coalesce(1).write.mode("append").parquet(f"{in_dir}/orders.parquet")
-    q = run_streaming_upsert(spark, in_dir, out, ckpt, max_files_per_trigger=1)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(run_streaming_upsert(spark, in_dir, out, ckpt, max_files_per_trigger=1))
     got = spark.read.parquet(out).drop("bucket")
     want = (
         base.unionByName(updates)
@@ -534,40 +519,11 @@ def test_streaming_upsert_read_failure_fails_batch_not_wipes_state(
     with open(f"{out}/bucket=0/part-corrupt.parquet", "wb") as f:
         f.write(b"not a parquet file")
     q = run_streaming_upsert(spark, in_dir, out, ckpt)
-    with pytest.raises(Exception):
-        q.processAllAvailable()
-    q.stop()
+    with pytest.raises(StreamingQueryException):
+        drain(q)
+    assert not q.isActive
     # the corrupt (pre-existing) state was never overwritten
     assert os.path.exists(f"{out}/bucket=0/part-corrupt.parquet")
-
-
-def test_available_now_trigger_terminates_and_matches_batch(spark, sf_dir):
-    """Trigger.AvailableNow — the cron-scheduled catch-up mode — must
-    process everything present at start, TERMINATE on its own (no
-    processAllAvailable drive), and produce the same result as the
-    continuously-driven query."""
-    from cooler_mapreduce_spark.streaming.windows import run_tumbling_stream
-
-    q = run_tumbling_stream(spark, sf_dir, query_name="t_avail_now", available_now=True)
-    assert q.awaitTermination(120), "availableNow query did not self-terminate"
-    got = _rows(spark.sql("SELECT * FROM t_avail_now"))
-    want = _rows(SPECS["stream_tumbling_counts"].fn(spark, sf_dir))
-    assert got == want
-
-
-def test_ohlc_stream_equals_batch(spark, sf_dir):
-    """The streaming OHLC candles converge to the batch downsample: the
-    struct-extremum open/close merge associatively across micro-batches,
-    so a bounded drain must reproduce the batch rollup exactly."""
-    from cooler_mapreduce_spark.streaming.windows import run_ohlc_stream
-
-    q = run_ohlc_stream(spark, sf_dir, query_name="t_ohlc")
-    _drain(q)
-    cols = ["bucket", "event_type", "open", "high", "low", "close", "volume", "n_events"]
-    got = _rows(spark.sql("SELECT {} FROM t_ohlc".format(", ".join(cols))))
-    want = _rows(SPECS["ohlc_hourly_by_type"].fn(spark, sf_dir).select(*cols))
-    assert len(got) > 0
-    assert got == want
 
 
 def test_cms_stream_equals_batch_cells(spark, sf_dir):
@@ -581,8 +537,7 @@ def test_cms_stream_equals_batch_cells(spark, sf_dir):
     from cooler_mapreduce_spark.sources.catalog import table
     from cooler_mapreduce_spark.streaming.windows import run_cms_stream
 
-    q = run_cms_stream(spark, sf_dir, query_name="t_cms")
-    _drain(q)
+    drain(run_cms_stream(spark, sf_dir, query_name="t_cms"))
     got = _rows(spark.sql("SELECT j, bucket, c FROM t_cms"))
 
     d = table(spark, sf_dir, "documents")
@@ -620,11 +575,7 @@ def test_streaming_scd2_equals_batch_history(spark, sf_dir, tmp_path):
     )
     base.repartition(2).write.mode("append").parquet(f"{in_dir}/orders.parquet")
     updates.coalesce(1).write.mode("append").parquet(f"{in_dir}/orders.parquet")
-    q = run_streaming_scd2(spark, in_dir, raw, hist, ckpt, max_files_per_trigger=1)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(run_streaming_scd2(spark, in_dir, raw, hist, ckpt, max_files_per_trigger=1))
     got = {
         tuple(r)
         for r in spark.read.parquet(hist)
@@ -733,13 +684,7 @@ def test_quantile_tiles_multibatch_equals_batch_rollup(spark, sf_dir, tmp_path):
     spark.read.parquet(f"{sf_dir}/orders.parquet").repartition(4).write.parquet(src)
     tiles_dir = str(tmp_path / "tiles")
     ckpt = str(tmp_path / "ckpt")
-    q = run_quantile_tiles_stream(
-        spark, src, sf_dir, tiles_dir, ckpt, max_files_per_trigger=1
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(run_quantile_tiles_stream(spark, src, sf_dir, tiles_dir, ckpt, max_files_per_trigger=1))
     batch_ids = {
         r.batch_id
         for r in spark.read.parquet(tiles_dir).select("batch_id").distinct().collect()
@@ -765,13 +710,7 @@ def test_tile_compaction_preserves_quantiles(spark, sf_dir, tmp_path):
     spark.read.parquet(f"{sf_dir}/orders.parquet").repartition(3).write.parquet(src)
     tiles_dir = str(tmp_path / "tiles")
     ckpt = str(tmp_path / "ckpt")
-    q = run_quantile_tiles_stream(
-        spark, src, sf_dir, tiles_dir, ckpt, max_files_per_trigger=1,
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(run_quantile_tiles_stream(spark, src, sf_dir, tiles_dir, ckpt, max_files_per_trigger=1))
     before = [tuple(r) for r in read_tile_quantiles(spark, sf_dir, tiles_dir).collect()]
     folded = compact_tiles(spark, tiles_dir, ckpt)
     assert folded >= 3
@@ -803,13 +742,7 @@ def test_tile_compaction_skips_uncommitted_trailing_batch(spark, sf_dir, tmp_pat
     spark.read.parquet(f"{sf_dir}/orders.parquet").repartition(3).write.parquet(src)
     tiles_dir = str(tmp_path / "tiles")
     ckpt = str(tmp_path / "ckpt")
-    q = run_quantile_tiles_stream(
-        spark, src, sf_dir, tiles_dir, ckpt, max_files_per_trigger=1,
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(run_quantile_tiles_stream(spark, src, sf_dir, tiles_dir, ckpt, max_files_per_trigger=1))
     committed = sorted(
         r.batch_id for r in spark.read.parquet(tiles_dir)
         .select("batch_id").distinct().collect()
@@ -871,13 +804,7 @@ def test_tile_compaction_refuses_noncontiguous_ids_without_checkpoint(
     spark.read.parquet(f"{sf_dir}/orders.parquet").repartition(2).write.parquet(src)
     tiles_dir = str(tmp_path / "tiles")
     ckpt = str(tmp_path / "ckpt")
-    q = run_quantile_tiles_stream(
-        spark, src, sf_dir, tiles_dir, ckpt, max_files_per_trigger=1,
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(run_quantile_tiles_stream(spark, src, sf_dir, tiles_dir, ckpt, max_files_per_trigger=1))
     top = max(
         r.batch_id for r in spark.read.parquet(tiles_dir)
         .select("batch_id").distinct().collect()
@@ -913,13 +840,7 @@ def test_tile_compaction_crash_recovery(spark, sf_dir, tmp_path):
     spark.read.parquet(f"{sf_dir}/orders.parquet").repartition(2).write.parquet(src)
     tiles_dir = str(tmp_path / "tiles")
     ckpt = str(tmp_path / "ckpt")
-    q = run_quantile_tiles_stream(
-        spark, src, sf_dir, tiles_dir, ckpt, max_files_per_trigger=1,
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(run_quantile_tiles_stream(spark, src, sf_dir, tiles_dir, ckpt, max_files_per_trigger=1))
     before = [tuple(r) for r in read_tile_quantiles(spark, sf_dir, tiles_dir).collect()]
     # simulate the mid-swap crash state: data parked aside, path absent
     import os
@@ -929,41 +850,6 @@ def test_tile_compaction_crash_recovery(spark, sf_dir, tmp_path):
     assert folded >= 2
     after = [tuple(r) for r in read_tile_quantiles(spark, sf_dir, tiles_dir).collect()]
     assert before == after
-
-
-def test_bloom_gated_stream_equals_batch(spark, oracle_sf_dir):
-    """The bloom-pruned stream-static enrichment (gate first, join
-    second) must drain to EXACTLY the plain batch join of hot events —
-    the 16 KB bloom prefilter admits false positives by design and the
-    downstream inner join must kill every one of them, so the gate can
-    never change the answer, only the per-batch work. Runs at the
-    oracle SF: sf0.001 has ZERO hot-customer events; the positive path
-    needs this density (117 matches)."""
-    from cooler_mapreduce_spark.operators.joins import _BLOOM_HOT_BAL
-    from cooler_mapreduce_spark.sources.catalog import table
-    from cooler_mapreduce_spark.streaming.windows import run_bloom_gated_stream
-    from cooler_mapreduce_spark.functions.numeric import dsum
-
-    q = run_bloom_gated_stream(spark, oracle_sf_dir, query_name="t_bloom_gated")
-    _drain(q)
-    got = _rows(spark.sql("SELECT * FROM t_bloom_gated"))
-    ev = table(spark, oracle_sf_dir, "events")
-    hot = (
-        table(spark, oracle_sf_dir, "customer", fan_out=False)
-        .filter(F.col("c_acctbal") > _BLOOM_HOT_BAL)
-        .select("c_custkey", "c_mktsegment")
-    )
-    want = _rows(
-        ev.join(hot, ev.user_id == hot.c_custkey)
-        .groupBy(
-            F.window("ts", "1 hour").alias("w"),
-            F.col("c_mktsegment").alias("segment"),
-        )
-        .agg(F.count("*").alias("n_events"), dsum("value", 6).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "segment", "n_events", "sum_value")
-    )
-    assert len(got) > 0  # positive path: hot customers do have events
-    assert got == want
 
 
 def test_dq_gated_stream_routes_and_matches_batch_twin(spark, oracle_sf_dir, tmp_path):
@@ -983,11 +869,7 @@ def test_dq_gated_stream_routes_and_matches_batch_twin(spark, oracle_sf_dir, tmp
     clean = str(tmp_path / "clean")
     quar = str(tmp_path / "quarantine")
     ckpt = str(tmp_path / "ckpt")
-    q = run_dq_gated_stream(spark, oracle_sf_dir, clean, quar, ckpt)
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    drain(run_dq_gated_stream(spark, oracle_sf_dir, clean, quar, ckpt))
     twin = {r["batch_id"]: r for r in dq_gate_event_batches(spark, oracle_sf_dir).collect()}
     assert {b for b, r in twin.items() if r["decision"] == "quarantine"} == {0, 1, 2}
     feed_n = _dq_feed(spark, oracle_sf_dir).count()
@@ -1059,13 +941,7 @@ def test_erasure_gated_upsert_never_admits_erased_keys(spark, oracle_sf_dir, tmp
 
     out = str(tmp_path / "store")
     ckpt = str(tmp_path / "ckpt")
-    q = run_erasure_gated_upsert(
-        spark, str(src), out, ckpt, max_files_per_trigger=1
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(run_erasure_gated_upsert(spark, str(src), out, ckpt, max_files_per_trigger=1))
     store = spark.read.parquet(out)
     req = (
         table(spark, oracle_sf_dir, "customer", fan_out=False)
@@ -1100,11 +976,7 @@ def test_dq_gated_stream_restart_is_idempotent(spark, oracle_sf_dir, tmp_path):
     quar = str(tmp_path / "quarantine")
     ckpt = str(tmp_path / "ckpt")
     for _ in range(2):
-        q = run_dq_gated_stream(spark, oracle_sf_dir, clean, quar, ckpt)
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+        drain(run_dq_gated_stream(spark, oracle_sf_dir, clean, quar, ckpt))
     feed_n = _dq_feed(spark, oracle_sf_dir).count()
     assert spark.read.parquet(clean).count() + spark.read.parquet(quar).count() == feed_n
 
@@ -1257,20 +1129,8 @@ def test_dq_replay_stream_converges_to_batch_face(spark, oracle_sf_dir, tmp_path
     ).write.parquet(src)
     from cooler_mapreduce_spark.streaming.observe import _replay_merge_batch
 
-    schema = spark.read.parquet(src).schema
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(_replay_merge_batch(store1))
-        .option("checkpointLocation", f"{ckpt1}_v1")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    stream = source(spark, src, spark.read.parquet(src).schema, 1)
+    drain(start(stream, _replay_merge_batch(store1), checkpoint=f"{ckpt1}_v1", available_now=True))
     p1 = spark.read.parquet(store1)
     quarantined = [
         r["batch_id"] for r in m1.filter(F.col("decision") == "quarantine").collect()
