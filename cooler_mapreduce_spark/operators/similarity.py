@@ -1,30 +1,44 @@
 """Similarity search over the ``embeddings`` table (array<float>, dim 64).
 
-Two tiers:
+Every top-k query is filter/refine: a candidate generator proposes
+(query, neighbor) pairs and one shared refine step ranks them. The
+generators are separate functions:
 
-- **brute force** — exact cosine top-k for a bounded query set. The
-  all-pairs product is restricted to |queries| × |corpus| with the query
-  side broadcast, so the corpus is scanned once and never shuffled. This
-  is the correctness baseline and perfectly adequate whenever
-  |queries| is small (the common "find neighbors of these N items" case).
-- **random-hyperplane LSH** — sign-pattern bucketing for whole-corpus
-  kNN at scale: candidates only within matching buckets (equi-join),
-  then exact cosine re-rank. Recall is tunable via planes/tables; the
-  test suite pins recall@10 against the brute-force tier.
+- **brute force** — every corpus vector against a bounded, broadcast
+  query set (the exact tier and the recall audits' reference);
+- **random-hyperplane LSH** — pairs sharing a (table, bucket) sign
+  pattern;
+- **IVF cells** — corpus vectors in the query's ``nprobe`` nearest
+  coarse-quantizer cells (k-means or label-mean centroids);
+- **PQ reconstruction** and **JL projection** — all pairs, scored in the
+  compressed space.
+
+Shared steps, one function each:
+
+- :func:`topk_refine` — the neighbor re-rank: ``row_number()`` over
+  (query ORDER BY cosine DESC, neighbor ASC), keep ``rn <= k``;
+- :func:`_rank_cells` — per-row cell ranking: the centroid scores sorted
+  best-first in one array (argmax = element 1, probes = the first
+  ``nprobe``), no shuffle; it feeds the IVF tiers, SemDeDup and the
+  incremental IVF manifest;
+- :func:`_salted_cell_pairs` — the salted, partition-pinned within-cell
+  pair join behind SemDeDup and its incremental funnel.
 
 Embedding arithmetic: float32 inputs are widened to float64; dot/norm
 folds run left-to-right identically in Spark and the DuckDB oracle, and
 the emitted cosine is rounded to 9 decimals — far above fold
 reassociation noise (~1e-14), far below any meaningful similarity gap.
+Ties break the same way everywhere: higher score first, then the lower
+id (neighbor or cell).
 
-Also here: ``embedding_cosine_dups`` — near-duplicate detection by
-embedding similarity, the semantic-dedup companion of the ``dedup``
-module (candidate pairs via LSH buckets, verified by exact cosine).
+Also here: near-duplicate detection by embedding cosine, label
+centroids, Lloyd's k-means, PCA, and the quantization/projection
+fidelity audits.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..registry import query
 from ..sources.catalog import table
@@ -101,6 +115,47 @@ _N_QUERIES = 8
 _TOP_K = 10
 
 
+#: exact cosine of a candidate pair: query side against corpus side, both
+#: pre-cast with per-row norms
+_PAIR_COSINE = spark_cosine_prenorm("q_emb", "emb_d", "q_nrm", "nrm")
+
+
+def _query_side(e: DataFrame, *extra: Column) -> DataFrame:
+    """The bounded query set (the first ``_N_QUERIES`` vectors of ``e``)
+    renamed for the candidate join: query_id, q_emb, q_nrm, ``extra``."""
+    return e.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("emb_d").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+        *extra,
+    )
+
+
+def topk_refine(pairs: DataFrame, cosine: str = _PAIR_COSINE) -> DataFrame:
+    """The family's one re-rank step: score candidate (query_id, vec_id)
+    pairs by the exact ``cosine`` and keep every query's top ``_TOP_K``
+    by (cosine DESC, neighbor_id ASC) — ``row_number()`` over that
+    order, then ``rn <= k``; a query with fewer candidates keeps them
+    all. Output (query_id, neighbor_id, cosine). Spark plans the pair as
+    a ``WindowGroupLimit`` under the window, so each partition ranks a
+    bounded heap per query."""
+    scored = pairs.select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), F.expr(cosine).alias("cosine")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= _TOP_K).drop("rn")
+
+
+def _duck_topk(scored: str, cols: str = "query_id, neighbor_id") -> str:
+    """DuckDB twin of :func:`topk_refine`'s rank: ``scored``'s top ``_TOP_K``
+    rows per query_id by (cosine DESC, neighbor_id)."""
+    return f"""SELECT {cols} FROM (
+            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                         ORDER BY cosine DESC, neighbor_id) AS rn
+            FROM {scored}
+        ) WHERE rn <= {_TOP_K}"""
+
+
 @query(
     "ann_topk_bruteforce",
     oracle=f"""
@@ -110,11 +165,7 @@ _TOP_K = 10
                {duckdb_cosine('q.embedding', 'e.embedding')} AS cosine
         FROM q JOIN embeddings e ON e.vec_id != q.vec_id
     )
-    SELECT query_id, neighbor_id, cosine FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY cosine DESC, neighbor_id) AS rn
-        FROM scored
-    ) WHERE rn <= {_TOP_K}
+    {_duck_topk('scored', 'query_id, neighbor_id, cosine')}
     """,
     tags=("similarity", "ann", "llm-pipeline"),
 )
@@ -127,28 +178,8 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query ranking over |queries| × |corpus| scored rows, bounded by
     the broadcast factor.
     """
-    from pyspark.sql import Window
-
     e = _embeddings_normed(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb_d").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    scored = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(spark_cosine_prenorm("q_emb", "emb_d", "q_nrm", "nrm")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .select("query_id", "neighbor_id", "cosine")
-    )
+    return topk_refine(e.join(F.broadcast(_query_side(e)), F.col("vec_id") != F.col("query_id")))
 
 
 # --- LSH tier -------------------------------------------------------------
@@ -197,24 +228,15 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each vector lands in one bucket per table; candidates share a
     (table, bucket) cell with the query — an equi-join on an int pair,
     shuffle O(corpus × tables), never O(corpus²) — then distinct pairs
-    are re-ranked by exact cosine. IVF (k-means cells) is the next step
-    up and slots into the same candidate-join shape.
+    are re-ranked by exact cosine.
     """
-    from pyspark.sql import Window
-
     e = _embeddings_normed(spark, sf_dir).select(
         "vec_id",
         "emb_d",
         "nrm",
         F.explode(F.expr(_buckets_expr("emb_d"))).alias("tb"),
     ).select("vec_id", "emb_d", "nrm", "tb.table_id", "tb.bucket")
-    q = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb_d").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("table_id").alias("q_table_id"),
-        F.col("bucket").alias("q_bucket"),
-    )
+    q = _query_side(e, F.col("table_id").alias("q_table_id"), F.col("bucket").alias("q_bucket"))
     # Dedup candidate pairs on the ID pair, not on the full row
     # (optimization round 11, guide §2.3 "shuffle keys and metadata
     # instead of payloads"): (query_id, vec_id) determines every payload
@@ -232,17 +254,7 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "vec_id", "q_emb", "q_nrm", "emb_d", "nrm")
         .dropDuplicates(["query_id", "vec_id"])
     )
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.expr(spark_cosine_prenorm("q_emb", "emb_d", "q_nrm", "nrm")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .select("query_id", "neighbor_id", "cosine")
-    )
+    return topk_refine(cand)
 
 
 # --- IVF tier -------------------------------------------------------------
@@ -256,46 +268,59 @@ _CENTROID_CACHE: dict[str, list] = {}
 
 def _fit_centroids(spark: SparkSession, sf_dir: str) -> list:
     """Coarse quantizer fit: distributed k-means (seeded — the fit is an
-    offline model-training step; at 100 TB it runs on a sample). Falls
-    back to per-label mean vectors (one Lloyd step over the fixture's
-    cluster assignments) if pyspark.ml's numpy dependency is absent."""
-    try:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
+    offline model-training step; at 100 TB it runs on a sample)."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
 
-        feats = table(spark, sf_dir, "embeddings").select(
-            "vec_id",
-            array_to_vector(F.expr("CAST(embedding AS ARRAY<DOUBLE>)")).alias("features"),
-        )
-        model = KMeans(k=_IVF_CELLS, seed=42, maxIter=20).fit(feats)
-        return [list(c) for c in model.clusterCenters()]
-    except ImportError:
-        lab = table(spark, sf_dir, "embeddings").select(
-            "label",
-            F.posexplode(F.expr("CAST(embedding AS ARRAY<DOUBLE>)")).alias("pos", "v"),
-        )
-        rows = (
-            lab.groupBy("label", "pos")
-            .agg(F.avg("v").alias("m"))
-            .groupBy("label")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("label", F.expr("transform(pm, s -> s.m)").alias("centroid"))
-            .orderBy("label")
-            .collect()
-        )
-        return [r["centroid"] for r in rows]
+    feats = table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        array_to_vector(F.expr("CAST(embedding AS ARRAY<DOUBLE>)")).alias("features"),
+    )
+    model = KMeans(k=_IVF_CELLS, seed=42, maxIter=20).fit(feats)
+    return [list(c) for c in model.clusterCenters()]
 
 
 def _dots_expr(emb: str, centroids: list[list[float]]) -> str:
-    """Array of cosine scores of ``emb`` against each centroid (centroid
-    norms folded into the literals — centroids are model constants)."""
+    """array<struct(cell, score)>: the dot of ``emb`` with each unit
+    centroid, cell = the centroid's index (centroid norms folded into the
+    literals — centroids are model constants)."""
     scored = []
-    for c in centroids:
+    for cell, c in enumerate(centroids):
         nrm = sum(v * v for v in c) ** 0.5 or 1.0
         unit = [v / nrm for v in c]
         arr = f"array({', '.join(f'CAST({v!r} AS DOUBLE)' for v in unit)})"
-        scored.append(_SPARK_DOT.format(a=emb, b=arr))
+        scored.append(f"struct({cell} AS cell, {_SPARK_DOT.format(a=emb, b=arr)} AS score)")
     return f"array({', '.join(scored)})"
+
+
+def _rank_cells(structs: str) -> Column:
+    """Per-row cell ranking: ``structs`` (array<struct(cell, score)>)
+    sorted best-first as struct(ns = -score, cell, score) — score DESC,
+    then the lower cell id, the ``ORDER BY score DESC, cell`` the DuckDB
+    oracles spell. Element 1 is the argmax cell and the first ``nprobe``
+    elements are the probes. The sort runs inside the scan stage; a
+    window over exploded (vector, cell) rows would instead shuffle every
+    vector once per cell, embedding and all."""
+    return F.expr(
+        f"array_sort(transform({structs}, s -> struct(-s.score AS ns, s.cell AS cell, s.score AS score)))"
+    )
+
+
+def _ivf_candidates(e: DataFrame, structs: str, nprobe: int) -> DataFrame:
+    """IVF candidate generator: every corpus vector of ``e`` (vec_id,
+    emb_d, nrm) sits in its argmax cell, each query probes its ``nprobe``
+    best cells, and a candidate is a (query, vector) pair sharing a
+    probed cell. A vector has one cell and a query's probes are distinct
+    cells, so each pair appears once."""
+    ranked = e.withColumn("cells", _rank_cells(structs))
+    # the argmax is never null (every row ranks every cell); a nullable
+    # cell makes the join infer isnotnull(cell), and that filter is
+    # pushed below the scan's fan-out exchange, re-ranking the whole
+    # corpus in a single task
+    argmax = F.coalesce(F.element_at("cells", 1)["cell"], F.lit(-1))
+    corpus = ranked.select("vec_id", "emb_d", "nrm", argmax.alias("cell"))
+    q = _query_side(ranked, F.explode(F.slice("cells", 1, nprobe)["cell"]).alias("cell"))
+    return corpus.join(F.broadcast(q), "cell").filter(F.col("vec_id") != F.col("query_id"))
 
 
 @query(
@@ -319,48 +344,13 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals. At 100 TB the fit runs offline on a sample; this plan is
     unchanged, only the literals differ.
     """
-    from pyspark.sql import Window
-
-    e = _embeddings_normed(spark, sf_dir)
     cents = _CENTROID_CACHE.get(sf_dir)
     if cents is None:
         # cache like any fitted-model artifact (seeded fit, static table)
         cents = _fit_centroids(spark, sf_dir)
         _CENTROID_CACHE[sf_dir] = cents
-    dots = _dots_expr("emb_d", cents)
-    # rank cells once per row: sort (score, cell_id) structs descending
-    ranked = (
-        f"transform(array_sort(zip_with({dots}, sequence(0, {len(cents) - 1}),"
-        f" (d, i) -> struct(-d AS nd, i AS cell))), s -> s.cell)"
-    )
-    assigned = e.withColumn("cells", F.expr(ranked))
-    corpus = assigned.select(
-        "vec_id", "emb_d", "nrm", F.element_at("cells", 1).alias("cell")
-    )
-    q = (
-        assigned.filter(F.col("vec_id") < _N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb_d").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-            F.explode(F.slice("cells", 1, _IVF_NPROBE)).alias("cell"),
-        )
-    )
-    scored = (
-        corpus.join(F.broadcast(q), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(spark_cosine_prenorm("q_emb", "emb_d", "q_nrm", "nrm")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .select("query_id", "neighbor_id", "cosine")
-    )
+    e = _embeddings_normed(spark, sf_dir)
+    return topk_refine(_ivf_candidates(e, _dots_expr("emb_d", cents), _IVF_NPROBE))
 
 
 _DUP_COS = duckdb_cosine("a.embedding", "b.embedding")
@@ -395,20 +385,30 @@ _DUCK_BF_TOPK = f"""
         FROM embeddings q JOIN embeddings e ON e.vec_id != q.vec_id
         WHERE q.vec_id < {_N_QUERIES}
     ),
-    bf_topk AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                         ORDER BY cosine DESC, neighbor_id) AS rn
-            FROM bf_scored
-        ) WHERE rn <= {_TOP_K}
+    bf_topk AS ({_duck_topk('bf_scored')})"""
+
+#: exact cosine of every pair in a ``cand(query_id, neighbor_id)`` CTE
+_DUCK_CAND_SCORED = f"""scored AS (
+        SELECT cand.query_id, cand.neighbor_id,
+               {duckdb_cosine('qe.embedding', 'ce.embedding')} AS cosine
+        FROM cand JOIN embeddings qe ON qe.vec_id = cand.query_id
+                  JOIN embeddings ce ON ce.vec_id = cand.neighbor_id
     )"""
 
-_DUCK_RECALL_TAIL = f"""
+
+def _duck_recall(ctes: str) -> str:
+    """Recall-audit oracle: ``ctes`` define ``scored`` (query_id,
+    neighbor_id, cosine) for the approximate tier, whose top-k is matched
+    against the exact tier's — one (query_id, hits, recall) row per query."""
+    return f"""
+    WITH {ctes},
+    approx_topk AS ({_duck_topk('scored')}),{_DUCK_BF_TOPK}
     SELECT b.query_id, COUNT(l.neighbor_id) AS hits,
            CAST(COUNT(l.neighbor_id) AS DOUBLE) / {_TOP_K}.0 AS recall
     FROM bf_topk b LEFT JOIN approx_topk l
       ON b.query_id = l.query_id AND b.neighbor_id = l.neighbor_id
-    GROUP BY b.query_id"""
+    GROUP BY b.query_id
+    """
 
 
 def _recall_df(bf: DataFrame, approx: DataFrame) -> DataFrame:
@@ -432,8 +432,7 @@ def _recall_df(bf: DataFrame, approx: DataFrame) -> DataFrame:
 
 @query(
     "ann_recall_lsh",
-    oracle=f"""
-    WITH planes(table_id, j, p) AS (VALUES
+    oracle=_duck_recall(f"""planes(table_id, j, p) AS (VALUES
         {_duck_planes_values()}),
     bits AS (
         SELECT e.vec_id, pl.table_id,
@@ -452,21 +451,7 @@ def _recall_df(bf: DataFrame, approx: DataFrame) -> DataFrame:
           ON q.table_id = c.table_id AND q.bucket = c.bucket
         WHERE q.vec_id < {_N_QUERIES} AND c.vec_id != q.vec_id
     ),
-    scored AS (
-        SELECT cand.query_id, cand.neighbor_id,
-               {duckdb_cosine('qe.embedding', 'ce.embedding')} AS cosine
-        FROM cand JOIN embeddings qe ON qe.vec_id = cand.query_id
-                  JOIN embeddings ce ON ce.vec_id = cand.neighbor_id
-    ),
-    approx_topk AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                         ORDER BY cosine DESC, neighbor_id) AS rn
-            FROM scored
-        ) WHERE rn <= {_TOP_K}
-    ),{_DUCK_BF_TOPK}
-{_DUCK_RECALL_TAIL}
-    """,
+    {_DUCK_CAND_SCORED}"""),
     tags=("similarity", "ann", "lsh", "audit", "llm-pipeline"),
 )
 def ann_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -520,14 +505,16 @@ def _cell_score_structs(cents: list) -> str:
     return f"array({', '.join(entries)})"
 
 
-@query(
-    "ann_recall_ivf",
-    oracle=f"""
-    WITH el AS (
+def _duck_lm_fit(where: str = "") -> str:
+    """DuckDB CTEs el → means → cents(cell, c): the fixed-point label-mean
+    fit (:func:`_labelmean_centroids_frame`) over the embeddings rows
+    that pass ``where``."""
+    return f"""el AS (
         SELECT label, u.idx, CAST(u.val AS DOUBLE) AS val
         FROM embeddings,
              LATERAL (SELECT unnest(embedding) AS val,
                              generate_subscripts(embedding, 1) AS idx) u
+        {where}
     ),
     means AS (
         SELECT label, idx,
@@ -537,7 +524,14 @@ def _cell_score_structs(cents: list) -> str:
     ),
     cents AS (
         SELECT label AS cell, list(m ORDER BY idx) AS c FROM means GROUP BY label
-    ),
+    )"""
+
+
+def _duck_lm_ranked(where: str = "") -> str:
+    """:func:`_duck_lm_fit` plus every vector's cells ranked as
+    :func:`_rank_cells` ranks them — lm_ranked(vec_id, label, cell,
+    score, rn), rn = 1 the argmax cell."""
+    return f"""{_duck_lm_fit(where)},
     cnorm AS (
         SELECT cell, c,
                sqrt(list_aggregate(list_transform(generate_series(1, {_DIM}),
@@ -545,43 +539,38 @@ def _cell_score_structs(cents: list) -> str:
         FROM cents
     ),
     cell_scores AS (
-        SELECT e.vec_id, k.cell,
+        SELECT e.vec_id, e.label, k.cell,
                round(list_aggregate(list_transform(generate_series(1, {_DIM}),
                          i -> CAST(e.embedding[i] AS DOUBLE) * k.c[i]), 'sum')
                      / ({_DUCK_NORM.format(a='e.embedding', dim=_DIM)} * k.nc), 9) AS score
         FROM embeddings e, cnorm k
     ),
-    ranked AS (
-        SELECT vec_id, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                    ORDER BY score DESC, cell) AS rn
+    lm_ranked AS (
+        SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+                     ORDER BY score DESC, cell) AS rn
         FROM cell_scores
-    ),
-    assigned AS (SELECT vec_id, cell FROM ranked WHERE rn = 1),
+    )"""
+
+
+#: the label-mean chain ending with each vector's cell assignment, which
+#: RETAINS the centroid-similarity score — SemDeDup's keep-priority key.
+_DUCK_LM_ASSIGNED = f"""{_duck_lm_ranked()},
+    lm_assigned AS (SELECT vec_id, cell, score FROM lm_ranked WHERE rn = 1)"""
+
+
+@query(
+    "ann_recall_ivf",
+    oracle=_duck_recall(f"""{_DUCK_LM_ASSIGNED},
     probed AS (
-        SELECT vec_id AS query_id, cell FROM ranked
+        SELECT vec_id AS query_id, cell FROM lm_ranked
         WHERE rn <= {_IVF_LM_NPROBE} AND vec_id < {_N_QUERIES}
     ),
     cand AS (
         SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
-        FROM probed p JOIN assigned a ON p.cell = a.cell
+        FROM probed p JOIN lm_assigned a ON p.cell = a.cell
         WHERE a.vec_id != p.query_id
     ),
-    scored AS (
-        SELECT cand.query_id, cand.neighbor_id,
-               {duckdb_cosine('qe.embedding', 'ce.embedding')} AS cosine
-        FROM cand JOIN embeddings qe ON qe.vec_id = cand.query_id
-                  JOIN embeddings ce ON ce.vec_id = cand.neighbor_id
-    ),
-    approx_topk AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                         ORDER BY cosine DESC, neighbor_id) AS rn
-            FROM scored
-        ) WHERE rn <= {_TOP_K}
-    ),{_DUCK_BF_TOPK}
-{_DUCK_RECALL_TAIL}
-    """,
+    {_DUCK_CAND_SCORED}"""),
     tags=("similarity", "ann", "ivf", "audit", "llm-pipeline"),
 )
 def ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -592,49 +581,14 @@ def ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means fit of :func:`ann_topk_ivf`: k-means iterations aren't
     SQL-expressible, label means are, so this variant's entire
     cell-assign → nprobe-probe → re-rank → recall computation has a
-    DuckDB oracle. The IVF *plumbing* audited (cell argmax, nprobe
-    expansion, candidate join, exact re-rank) is byte-for-byte the shape
-    of the k-means tier, whose recall stays pinned in pytest.
+    DuckDB oracle. The IVF plumbing audited (:func:`_ivf_candidates`:
+    cell argmax, nprobe expansion, candidate join; then the exact
+    re-rank) is the same code the k-means tier runs, whose recall
+    stays pinned in pytest.
     """
-    from pyspark.sql import Window
-
-    cents = _labelmean_centroids(spark, sf_dir)
     e = _embeddings_normed(spark, sf_dir)
-    scores = e.select(
-        "vec_id",
-        "emb_d",
-        "nrm",
-        F.explode(F.expr(_cell_score_structs(cents))).alias("cs"),
-    ).select("vec_id", "emb_d", "nrm", "cs.cell", "cs.score")
-    rw = Window.partitionBy("vec_id").orderBy(F.desc("score"), F.asc("cell"))
-    ranked = scores.withColumn("rn", F.row_number().over(rw))
-    assigned = ranked.filter(F.col("rn") == 1).select("vec_id", "emb_d", "nrm", "cell")
-    probed = (
-        ranked.filter((F.col("rn") <= _IVF_LM_NPROBE) & (F.col("vec_id") < _N_QUERIES))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb_d").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-            "cell",
-        )
-    )
-    cand = (
-        assigned.join(F.broadcast(probed), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "q_emb", "q_nrm", "emb_d", "nrm")
-        .distinct()
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.expr(spark_cosine_prenorm("q_emb", "emb_d", "q_nrm", "nrm")).alias("cosine"),
-    )
-    tw = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    approx = (
-        scored.withColumn("rn", F.row_number().over(tw))
-        .filter(F.col("rn") <= _TOP_K)
-        .select("query_id", "neighbor_id")
-    )
+    structs = _cell_score_structs(_labelmean_centroids(spark, sf_dir))
+    approx = topk_refine(_ivf_candidates(e, structs, _IVF_LM_NPROBE))
     return _recall_df(ann_topk_bruteforce(spark, sf_dir), approx)
 
 
@@ -1140,63 +1094,27 @@ def embedding_quantize_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the corpus-wide 0.45 near-dup threshold would leave.
 _SEMDEDUP_THR = 0.30
 
-#: the label-mean coarse-quantizer CTE chain (same fixed-point fit as
-#: :func:`_labelmean_centroids` / the ann_recall_ivf oracle), ending with
-#: per-vector cell assignment that RETAINS the centroid-similarity score
-#: — SemDeDup's keep-priority key.
-_DUCK_LM_ASSIGNED = f"""
-    el AS (
-        SELECT label, u.idx, CAST(u.val AS DOUBLE) AS val
-        FROM embeddings,
-             LATERAL (SELECT unnest(embedding) AS val,
-                             generate_subscripts(embedding, 1) AS idx) u
-    ),
-    means AS (
-        SELECT label, idx,
-               CAST(SUM(CAST(floor(val * 1073741824.0) AS BIGINT)) AS DOUBLE)
-                   / 1073741824.0 / COUNT(*) AS m
-        FROM el GROUP BY label, idx
-    ),
-    cents AS (
-        SELECT label AS cell, list(m ORDER BY idx) AS c FROM means GROUP BY label
-    ),
-    cnorm AS (
-        SELECT cell, c,
-               sqrt(list_aggregate(list_transform(generate_series(1, {_DIM}),
-                    i -> c[i] * c[i]), 'sum')) AS nc
-        FROM cents
-    ),
-    cell_scores AS (
-        SELECT e.vec_id, k.cell,
-               round(list_aggregate(list_transform(generate_series(1, {_DIM}),
-                         i -> CAST(e.embedding[i] AS DOUBLE) * k.c[i]), 'sum')
-                     / ({_DUCK_NORM.format(a='e.embedding', dim=_DIM)} * k.nc), 9) AS score
-        FROM embeddings e, cnorm k
-    ),
-    lm_ranked AS (
-        SELECT vec_id, cell, score,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                    ORDER BY score DESC, cell) AS rn
-        FROM cell_scores
-    ),
-    lm_assigned AS (SELECT vec_id, cell, score FROM lm_ranked WHERE rn = 1)"""
+#: salt count of the within-cell pair join (:func:`_salted_cell_pairs`)
+_NSALT = 32
+
+
+def _duck_pruned(side: str) -> str:
+    """DuckDB twin of :func:`_sd_pruned`: the (cell, vec_id) of every
+    ``side`` member with an earlier near-duplicate cellmate."""
+    return f"""SELECT DISTINCT b.cell, b.vec_id
+        FROM {side} a JOIN {side} b
+          ON a.cell = b.cell
+         AND (a.score > b.score OR (a.score = b.score AND a.vec_id < b.vec_id))
+        JOIN embeddings ea ON ea.vec_id = a.vec_id
+        JOIN embeddings eb ON eb.vec_id = b.vec_id
+        WHERE {duckdb_cosine('ea.embedding', 'eb.embedding')} >= {_SEMDEDUP_THR}"""
 
 
 @query(
     "semdedup_prune_cells",
     oracle=f"""
     WITH {_DUCK_LM_ASSIGNED},
-    pruned AS (
-        SELECT DISTINCT b.cell, b.vec_id
-        FROM lm_assigned a
-        JOIN lm_assigned b
-          ON a.cell = b.cell
-         AND (a.score > b.score
-              OR (a.score = b.score AND a.vec_id < b.vec_id))
-        JOIN embeddings ea ON ea.vec_id = a.vec_id
-        JOIN embeddings eb ON eb.vec_id = b.vec_id
-        WHERE {duckdb_cosine('ea.embedding', 'eb.embedding')} >= {_SEMDEDUP_THR}
-    )
+    pruned AS ({_duck_pruned('lm_assigned')})
     SELECT s.cell,
            COUNT(*) AS n_total,
            COALESCE(p.n_pruned, 0) AS n_pruned,
@@ -1240,8 +1158,8 @@ def semdedup_prune_cells(
     (SURVEY.md §2) — this extends the dedup family
     (dedup.py:163 minhash-LSH) to the semantic axis.
     """
-    assigned, pruned_ids = _semdedup_frames(spark, sf_dir, thr)
-    pruned = pruned_ids.groupBy("cell").agg(F.count("*").alias("n_pruned"))
+    assigned = _lm_assigned(spark, sf_dir).localCheckpoint(eager=True)
+    pruned = _sd_pruned(assigned, thr).groupBy("cell").agg(F.count("*").alias("n_pruned"))
     census = assigned.groupBy("cell").agg(F.count("*").alias("n_total"))
     # SHUFFLE_HASH on the pruned side of the census join (optimization
     # round 11): both sides are O(|cells|)-row aggregates, but the
@@ -1263,101 +1181,82 @@ def semdedup_prune_cells(
     )
 
 
-def _semdedup_frames(
-    spark: SparkSession, sf_dir: str, thr: float
-) -> tuple[DataFrame, DataFrame]:
-    """SemDeDup's two building blocks, shared by the census and apply
-    queries: the per-vector cell assignment (vec_id, emb_d, nrm, cell,
-    score) and the distinct pruned ids (cell, vec_id)."""
-    cents = _labelmean_centroids(spark, sf_dir)
-    e = _embeddings_normed(spark, sf_dir)
-    from pyspark.sql import Window
+def _lm_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every vector in its label-mean cell — (vec_id, emb_d, nrm, cell,
+    score), the argmax of :func:`_rank_cells`; the score is SemDeDup's
+    keep priority. Callers materialize it once (``localCheckpoint``): it
+    feeds both pair sides plus the census, and its cell scoring is ten
+    cosine folds per vector, which the self-join would otherwise run
+    twice. At cluster scale this is a ``.checkpoint()``/cache of an
+    O(corpus)-row frame."""
+    structs = _cell_score_structs(_labelmean_centroids(spark, sf_dir))
+    return _embeddings_normed(spark, sf_dir).select(
+        "vec_id", "emb_d", "nrm", F.element_at(_rank_cells(structs), 1).alias("best")
+    ).select("vec_id", "emb_d", "nrm", "best.cell", "best.score")
 
-    scores = e.select(
-        "vec_id",
-        "emb_d",
-        "nrm",
-        F.explode(F.expr(_cell_score_structs(cents))).alias("cs"),
-    ).select("vec_id", "emb_d", "nrm", "cs.cell", "cs.score")
-    rw = Window.partitionBy("vec_id").orderBy(F.desc("score"), F.asc("cell"))
-    # materialize the assignment ONCE: it has three consumers (both pair
-    # sides + the census/apply), and its cell-scoring subtree is a full
-    # 10-cosine-folds-per-vector pass — without truncation the self-join
-    # recomputes it twice (the pagerank/graph multi-consumer pattern).
-    # Together with the salted pinned pair join below, the census
-    # query's sf0.1 steady state went 3.3 s → 2.0-2.5 s. At cluster
-    # scale this is a `.checkpoint()`/cache of an O(corpus)-row frame.
-    assigned = (
-        scores.withColumn("rn", F.row_number().over(rw))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "emb_d", "nrm", "cell", "score")
-        .localCheckpoint(eager=True)
-    )
-    # SALTED, EXPLICITLY-PARTITIONED self-join. Two scale hazards meet
-    # here: (1) |cells| is small (10 here; 50 k in a paper-scale fit)
-    # while the per-pair work is quadratic in cell size, so a plain
-    # cell-keyed join concentrates each cell's whole verify kernel on
-    # one shuffle key — salting the b-side by vec_id and replicating the
-    # a-side over the salt space splits every cell's pair work 32 ways
-    # (skew.py's hot-key treatment; the replicated side is O(32·corpus)
-    # rows, paid once). (2) The join's INPUT is tiny while its OUTPUT
-    # fans out ~|cell|×, so AQE's input-size coalescing folds the tiny
-    # shuffle into ONE task and the fan-out work serializes — the
-    # explicit repartition pins the (cell, salt) partitioning, which AQE
-    # honors (user-specified repartitions are exempt from coalescing).
-    # Measured at sf0.1: the pair stage went 2.2 s single-task →
-    # 0.6-0.8 s salted+pinned; the join runs exchange-free on the pinned
-    # partitioning.
-    _NSALT = 32
-    a = assigned.select(
-        F.col("cell"),
+
+def _salted_cell_pairs(a_side: DataFrame, b_side: DataFrame) -> DataFrame:
+    """Every within-cell (a, b) pair of two (cell, vec_id, score, emb_d,
+    nrm) frames, as (cell, salt, a_id, a_score, a_emb, a_nrm, b_id,
+    b_score, b_emb, b_nrm).
+
+    A SALTED, EXPLICITLY-PARTITIONED join, because two scale hazards meet
+    here: (1) |cells| is small (10 here; 50 k in a paper-scale fit)
+    while the per-pair work is quadratic in cell size, so a plain
+    cell-keyed join concentrates each cell's whole verify kernel on one
+    shuffle key — salting the b-side by vec_id and replicating the
+    a-side over the ``_NSALT`` salts splits every cell's pair work that
+    many ways (skew.py's hot-key treatment; the replicated side is
+    O(_NSALT·corpus) rows, paid once). (2) The join's INPUT is tiny while its
+    OUTPUT fans out ~|cell|×, so AQE's input-size coalescing folds the
+    tiny shuffle into ONE task and the fan-out work serializes — the
+    explicit repartition pins the (cell, salt) partitioning, which AQE
+    honors (user-specified repartitions are exempt from coalescing).
+    Measured at sf0.1: the pair stage went 2.2 s single-task → 0.6-0.8 s
+    salted+pinned; the join runs exchange-free on the pinned
+    partitioning."""
+    a = a_side.select(
+        "cell",
         F.col("vec_id").alias("a_id"),
         F.col("score").alias("a_score"),
         F.col("emb_d").alias("a_emb"),
         F.col("nrm").alias("a_nrm"),
         F.explode(F.array(*[F.lit(i) for i in range(_NSALT)])).alias("salt"),
-    )
-    b = assigned.select(
-        F.col("cell"),
+    ).repartition(_NSALT * 2, "cell", "salt")
+    b = b_side.select(
+        "cell",
         F.col("vec_id").alias("b_id"),
         F.col("score").alias("b_score"),
         F.col("emb_d").alias("b_emb"),
         F.col("nrm").alias("b_nrm"),
         F.pmod(F.col("vec_id"), F.lit(_NSALT)).cast("int").alias("salt"),
-    )
+    ).repartition(_NSALT * 2, "cell", "salt")
+    return a.join(b, ["cell", "salt"])
+
+
+def _near_dup_ids(pairs: DataFrame, thr: float) -> DataFrame:
+    """(cell, vec_id) of every b-side vector of :func:`_salted_cell_pairs`
+    rows whose pair cosine is ≥ ``thr``."""
+    cos = F.expr(spark_cosine_prenorm("a_emb", "b_emb", "a_nrm", "b_nrm"))
+    return pairs.filter(cos >= F.lit(thr)).select("cell", F.col("b_id").alias("vec_id")).distinct()
+
+
+def _sd_pruned(cellmates: DataFrame, thr: float) -> DataFrame:
+    """SemDeDup's keep rule: the (cell, vec_id) of every member with a
+    near-duplicate cellmate strictly before it in the keep order (score
+    DESC, vec_id ASC). The order predicate is the cheap conjunct, so it
+    filters the pairs before any cosine runs."""
     earlier = (F.col("a_score") > F.col("b_score")) | (
         (F.col("a_score") == F.col("b_score")) & (F.col("a_id") < F.col("b_id"))
     )
-    a = a.repartition(_NSALT * 2, "cell", "salt")
-    b = b.repartition(_NSALT * 2, "cell", "salt")
-    pruned_ids = (
-        a.join(b, ["cell", "salt"])
-        .filter(earlier)
-        .filter(
-            F.expr(spark_cosine_prenorm("a_emb", "b_emb", "a_nrm", "b_nrm"))
-            >= F.lit(thr)
-        )
-        .select("cell", F.col("b_id").alias("vec_id"))
-        .distinct()
-    )
-    return assigned, pruned_ids
+    return _near_dup_ids(_salted_cell_pairs(cellmates, cellmates).filter(earlier), thr)
 
 
 @query(
     "semdedup_apply",
     oracle=f"""
     WITH {_DUCK_LM_ASSIGNED},
-    pruned AS (
-        SELECT DISTINCT b.vec_id
-        FROM lm_assigned a
-        JOIN lm_assigned b
-          ON a.cell = b.cell
-         AND (a.score > b.score
-              OR (a.score = b.score AND a.vec_id < b.vec_id))
-        JOIN embeddings ea ON ea.vec_id = a.vec_id
-        JOIN embeddings eb ON eb.vec_id = b.vec_id
-        WHERE {duckdb_cosine('ea.embedding', 'eb.embedding')} >= {_SEMDEDUP_THR}
-    )
+    pruned AS ({_duck_pruned('lm_assigned')})
     SELECT s.vec_id, e.label, s.cell
     FROM lm_assigned s
     JOIN embeddings e ON e.vec_id = s.vec_id
@@ -1380,7 +1279,8 @@ def semdedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to a shuffle join of a one-column table — a forced hint there
     would be a forced driver/executor OOM.
     """
-    assigned, pruned_ids = _semdedup_frames(spark, sf_dir, _SEMDEDUP_THR)
+    assigned = _lm_assigned(spark, sf_dir).localCheckpoint(eager=True)
+    pruned_ids = _sd_pruned(assigned, _SEMDEDUP_THR)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "label")
     kept = assigned.join(pruned_ids.select("vec_id"), "vec_id", "left_anti")
     return kept.join(emb, "vec_id").select("vec_id", "label", "cell")
@@ -1553,21 +1453,7 @@ def _pq_recon_ctes() -> str:
         f"MAX(CASE WHEN sub = {s + 1} THEN label END) AS code{s + 1}"
         for s in range(_PQ_S)
     )
-    return f"""el AS (
-        SELECT label, u.idx, CAST(u.val AS DOUBLE) AS val
-        FROM embeddings,
-             LATERAL (SELECT unnest(embedding) AS val,
-                             generate_subscripts(embedding, 1) AS idx) u
-    ),
-    means AS (
-        SELECT label, idx,
-               CAST(SUM(CAST(floor(val * 1073741824.0) AS BIGINT)) AS DOUBLE)
-                   / 1073741824.0 / COUNT(*) AS m
-        FROM el GROUP BY label, idx
-    ),
-    cents AS (
-        SELECT label AS cell, list(m ORDER BY idx) AS c FROM means GROUP BY label
-    ),
+    return f"""{_duck_lm_fit()},
     subdist AS (
         SELECT e.vec_id, k.cell AS label, s.sub,
                round(list_aggregate(list_transform(generate_series(1, {_PQ_SUB}),
@@ -1661,23 +1547,13 @@ def embedding_pq_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_recall_pq",
-    oracle=f"""
-    WITH {{PQ_CTES}},
+    oracle=_duck_recall(f"""{_pq_recon_ctes()},
     q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < {_N_QUERIES}),
     scored AS (
         SELECT q.vec_id AS query_id, r.vec_id AS neighbor_id,
                {duckdb_cosine('q.embedding', 'r.r')} AS cosine
         FROM q JOIN recon r ON r.vec_id != q.vec_id
-    ),
-    approx_topk AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                         ORDER BY cosine DESC, neighbor_id) AS rn
-            FROM scored
-        ) WHERE rn <= {_TOP_K}
-    ),{_DUCK_BF_TOPK}
-{_DUCK_RECALL_TAIL}
-    """.replace("{PQ_CTES}", _pq_recon_ctes()),
+    )"""),
     tags=("similarity", "ann", "pq", "audit", "llm-pipeline"),
 )
 def ann_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1706,37 +1582,17 @@ def ann_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     before trusting ADC order. The audit exists to produce exactly
     this go/no-go number.
     """
-    from pyspark.sql import Window
-
-    cents = _labelmean_centroids(spark, sf_dir)
-    code_exprs, recon_expr = _pq_codes_and_recon(cents)
-    e = table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr("CAST(embedding AS ARRAY<DOUBLE>)").alias("emb_d"),
-    )
+    code_exprs, recon_expr = _pq_codes_and_recon(_labelmean_centroids(spark, sf_dir))
+    e = _embeddings_normed(spark, sf_dir)
     coded = e.select(
         "vec_id",
         *[F.expr(ex).alias(f"code{s + 1}") for s, ex in enumerate(code_exprs)],
     )
     corpus = coded.select("vec_id", F.expr(recon_expr).alias("rec"))
-    q = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb_d").alias("q_emb")
+    pairs = corpus.crossJoin(F.broadcast(_query_side(e))).filter(
+        F.col("vec_id") != F.col("query_id")
     )
-    scored = (
-        corpus.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(spark_cosine("q_emb", "rec")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    approx = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .select("query_id", "neighbor_id")
-    )
+    approx = topk_refine(pairs, spark_cosine("q_emb", "rec"))
     return _recall_df(ann_topk_bruteforce(spark, sf_dir), approx)
 
 
@@ -1747,49 +1603,10 @@ _SD_NEW_PRED_SPARK = "pmod({h}, 5) = 0"
 _SD_NEW_SEED = "sd-new:"
 
 
-def _sd_pair_join(a_side: DataFrame, b_side: DataFrame, thr: float) -> DataFrame:
-    """Salted, partition-pinned within-cell pair join with the cosine
-    threshold applied — the semdedup kernel generalized to arbitrary
-    (a, b) sides. Column contract: both sides carry (cell, vec_id,
-    score, emb_d, nrm); output is (cell, a_id, b_id) for pairs with
-    cos ≥ thr and a strictly before b in the keep order
-    (score DESC, vec_id ASC)."""
-    nsalt = 32
-    a = a_side.select(
-        "cell",
-        F.col("vec_id").alias("a_id"),
-        F.col("score").alias("a_score"),
-        F.col("emb_d").alias("a_emb"),
-        F.col("nrm").alias("a_nrm"),
-        F.explode(F.array(*[F.lit(i) for i in range(nsalt)])).alias("salt"),
-    ).repartition(nsalt * 2, "cell", "salt")
-    b = b_side.select(
-        "cell",
-        F.col("vec_id").alias("b_id"),
-        F.col("score").alias("b_score"),
-        F.col("emb_d").alias("b_emb"),
-        F.col("nrm").alias("b_nrm"),
-        F.pmod(F.col("vec_id"), F.lit(nsalt)).cast("int").alias("salt"),
-    ).repartition(nsalt * 2, "cell", "salt")
-    earlier = (F.col("a_score") > F.col("b_score")) | (
-        (F.col("a_score") == F.col("b_score")) & (F.col("a_id") < F.col("b_id"))
-    )
-    return (
-        a.join(b, ["cell", "salt"])
-        .filter(earlier)
-        .filter(
-            F.expr(spark_cosine_prenorm("a_emb", "b_emb", "a_nrm", "b_nrm"))
-            >= F.lit(thr)
-        )
-        .select("cell", "a_id", "b_id")
-    )
-
-
 def _sd_incr_oracle() -> str:
     from ..functions.hashing import md5int_duckdb
 
     h = md5int_duckdb(f"'{_SD_NEW_SEED}' || CAST(s.vec_id AS VARCHAR)")
-    pair_cos = duckdb_cosine("ea.embedding", "eb.embedding")
     return f"""
     WITH {_DUCK_LM_ASSIGNED},
     tagged AS (
@@ -1798,15 +1615,7 @@ def _sd_incr_oracle() -> str:
     ),
     hist AS (SELECT * FROM tagged WHERE NOT is_new),
     newb AS (SELECT * FROM tagged WHERE is_new),
-    hist_pruned AS (
-        SELECT DISTINCT b.vec_id
-        FROM hist a JOIN hist b
-          ON a.cell = b.cell
-         AND (a.score > b.score OR (a.score = b.score AND a.vec_id < b.vec_id))
-        JOIN embeddings ea ON ea.vec_id = a.vec_id
-        JOIN embeddings eb ON eb.vec_id = b.vec_id
-        WHERE {pair_cos} >= {_SEMDEDUP_THR}
-    ),
+    hist_pruned AS ({_duck_pruned('hist')}),
     hist_kept AS (
         SELECT h.* FROM hist h LEFT JOIN hist_pruned p ON p.vec_id = h.vec_id
         WHERE p.vec_id IS NULL
@@ -1816,21 +1625,13 @@ def _sd_incr_oracle() -> str:
         FROM hist_kept k JOIN newb n ON k.cell = n.cell
         JOIN embeddings ea ON ea.vec_id = k.vec_id
         JOIN embeddings eb ON eb.vec_id = n.vec_id
-        WHERE {pair_cos} >= {_SEMDEDUP_THR}
+        WHERE {duckdb_cosine('ea.embedding', 'eb.embedding')} >= {_SEMDEDUP_THR}
     ),
     surv AS (
         SELECT n.* FROM newb n LEFT JOIN rejected r ON r.vec_id = n.vec_id
         WHERE r.vec_id IS NULL
     ),
-    batch_pruned AS (
-        SELECT DISTINCT b.vec_id
-        FROM surv a JOIN surv b
-          ON a.cell = b.cell
-         AND (a.score > b.score OR (a.score = b.score AND a.vec_id < b.vec_id))
-        JOIN embeddings ea ON ea.vec_id = a.vec_id
-        JOIN embeddings eb ON eb.vec_id = b.vec_id
-        WHERE {pair_cos} >= {_SEMDEDUP_THR}
-    )
+    batch_pruned AS ({_duck_pruned('surv')})
     SELECT (SELECT COUNT(*) FROM hist) AS n_history,
            (SELECT COUNT(*) FROM hist_kept) AS n_kept_history,
            (SELECT COUNT(*) FROM newb) AS n_new,
@@ -1863,51 +1664,31 @@ def semdedup_incremental_new_batch(spark: SparkSession, sf_dir: str) -> DataFram
     (:func:`_labelmean_centroids`) shared by history and batch — how a
     production incremental pipeline works (the codebook is NOT refit
     per batch). All three pair stages run the salted, partition-pinned
-    cell join (:func:`_sd_pair_join`); per-batch cost is
+    cell join (:func:`_salted_cell_pairs`); per-batch cost is
     O(batch × kept-per-cell + batch²-per-cell), independent of raw
     history size — the property that makes continuous ingestion
     affordable at 100 TB.
     """
     from ..functions.hashing import md5int_spark
 
-    cents = _labelmean_centroids(spark, sf_dir)
-    e = _embeddings_normed(spark, sf_dir)
-    from pyspark.sql import Window
-
-    scores = e.select(
-        "vec_id",
-        "emb_d",
-        "nrm",
-        F.explode(F.expr(_cell_score_structs(cents))).alias("cs"),
-    ).select("vec_id", "emb_d", "nrm", "cs.cell", "cs.score")
-    rw = Window.partitionBy("vec_id").orderBy(F.desc("score"), F.asc("cell"))
     h = md5int_spark(f"'{_SD_NEW_SEED}' || CAST(vec_id AS STRING)")
     assigned = (
-        scores.withColumn("rn", F.row_number().over(rw))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "emb_d", "nrm", "cell", "score")
+        _lm_assigned(spark, sf_dir)
         .withColumn("is_new", F.expr(_SD_NEW_PRED_SPARK.format(h=h)))
         .localCheckpoint(eager=True)
     )
     hist = assigned.filter(~F.col("is_new"))
     newb = assigned.filter(F.col("is_new"))
-    hist_pruned = _sd_pair_join(hist, hist, _SEMDEDUP_THR).select(
-        F.col("b_id").alias("vec_id")
-    ).distinct()
     # hist_pruned / rejected scale with the corpus dup-rate, so no
     # broadcast hints: the 64 MB auto-threshold keeps the broadcast plan
     # at test SF and degrades to a shuffle anti join at scale.
-    hist_kept = hist.join(hist_pruned, "vec_id", "left_anti")
-    # admission screen: kept history on the a-side WITHOUT the priority
-    # order (any kept near-dup rejects a new vector) — reuse the pair
-    # kernel by giving history infinite priority: it is 'earlier' than
-    # every new vector by construction of the funnel, so the kernel's
-    # order predicate must not drop cross pairs. Spell it directly:
-    rejected = _sd_cross_reject(hist_kept, newb, _SEMDEDUP_THR)
-    surv = newb.join(rejected, "vec_id", "left_anti")
-    batch_pruned = _sd_pair_join(surv, surv, _SEMDEDUP_THR).select(
-        F.col("b_id").alias("vec_id")
-    ).distinct()
+    hist_kept = hist.join(_sd_pruned(hist, _SEMDEDUP_THR), ["cell", "vec_id"], "left_anti")
+    # admission screen: no keep-order predicate — every kept history
+    # vector outranks every new one in the funnel, so any kept near-dup
+    # rejects a new vector
+    rejected = _near_dup_ids(_salted_cell_pairs(hist_kept, newb), _SEMDEDUP_THR)
+    surv = newb.join(rejected, ["cell", "vec_id"], "left_anti")
+    batch_pruned = _sd_pruned(surv, _SEMDEDUP_THR)
     n_hist = hist.agg(F.count("*").alias("n_history"))
     n_kept = hist_kept.agg(F.count("*").alias("n_kept_history"))
     n_new = newb.agg(F.count("*").alias("n_new"))
@@ -1931,40 +1712,10 @@ def semdedup_incremental_new_batch(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-def _sd_cross_reject(kept: DataFrame, newb: DataFrame, thr: float) -> DataFrame:
-    """New vectors with a kept-history near-duplicate in their cell —
-    the salted cell join without the keep-order predicate (every kept
-    history vector outranks every new one in the funnel)."""
-    nsalt = 32
-    a = kept.select(
-        "cell",
-        F.col("emb_d").alias("a_emb"),
-        F.col("nrm").alias("a_nrm"),
-        F.explode(F.array(*[F.lit(i) for i in range(nsalt)])).alias("salt"),
-    ).repartition(nsalt * 2, "cell", "salt")
-    b = newb.select(
-        "cell",
-        F.col("vec_id").alias("b_id"),
-        F.col("emb_d").alias("b_emb"),
-        F.col("nrm").alias("b_nrm"),
-        F.pmod(F.col("vec_id"), F.lit(nsalt)).cast("int").alias("salt"),
-    ).repartition(nsalt * 2, "cell", "salt")
-    return (
-        a.join(b, ["cell", "salt"])
-        .filter(
-            F.expr(spark_cosine_prenorm("a_emb", "b_emb", "a_nrm", "b_nrm"))
-            >= F.lit(thr)
-        )
-        .select(F.col("b_id").alias("vec_id"))
-        .distinct()
-    )
-
-
 @query(
     "ann_recall_jl",
-    oracle=f"""
-    WITH planes(k, p) AS (VALUES
-        {{JL_PLANES}}
+    oracle=_duck_recall(f"""planes(k, p) AS (VALUES
+        {_jl_duck_planes()}
     ),
     proj AS (
         SELECT e.vec_id,
@@ -1984,16 +1735,7 @@ def _sd_cross_reject(kept: DataFrame, newb: DataFrame, thr: float) -> DataFrame:
                             i -> c.pr[i] * c.pr[i]), 'sum'))), 9) AS cosine
         FROM proj q JOIN proj c ON c.vec_id != q.vec_id
         WHERE q.vec_id < {_N_QUERIES}
-    ),
-    approx_topk AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                         ORDER BY cosine DESC, neighbor_id) AS rn
-            FROM scored
-        ) WHERE rn <= {_TOP_K}
-    ),{_DUCK_BF_TOPK}
-{_DUCK_RECALL_TAIL}
-    """.replace("{JL_PLANES}", _jl_duck_planes()),
+    )"""),
     tags=("similarity", "ann", "projection", "audit", "llm-pipeline"),
 )
 def ann_recall_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2009,8 +1751,6 @@ def ann_recall_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
     4× less per-pair arithmetic than the full space, which is the
     operational case FOR the projection wherever its recall suffices.
     """
-    from pyspark.sql import Window
-
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr("CAST(embedding AS ARRAY<DOUBLE>)").alias("emb_d"),
@@ -2019,21 +1759,8 @@ def ann_recall_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = proj.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("pr").alias("q_pr")
     )
-    scored = (
-        proj.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.expr(spark_cosine("q_pr", "pr")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    approx = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .select("query_id", "neighbor_id")
-    )
+    pairs = proj.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("query_id"))
+    approx = topk_refine(pairs, spark_cosine("q_pr", "pr"))
     return _recall_df(ann_topk_bruteforce(spark, sf_dir), approx)
 
 
@@ -2104,11 +1831,7 @@ def ivf_delta_assign_frame(base: DataFrame, delta: DataFrame, cents: list) -> Da
     Reference parity: beyond the reference — no similarity surface
     exists there (SURVEY.md §2).
     """
-    structs = _cell_score_structs(cents)
-    pick = (
-        f"array_sort(transform({structs},"
-        f" s -> struct(-s.score AS ns, s.cell AS cell)))[0].cell"
-    )
+    best = F.element_at(_rank_cells(_cell_score_structs(cents)), 1)["cell"]
 
     def assign(df: DataFrame) -> DataFrame:
         e = df.select(
@@ -2116,7 +1839,7 @@ def ivf_delta_assign_frame(base: DataFrame, delta: DataFrame, cents: list) -> Da
             "label",
             F.expr("CAST(embedding AS ARRAY<DOUBLE>)").alias("emb_d"),
         ).withColumn("nrm", F.expr(_SPARK_NORM.format(a="emb_d")))
-        return e.select("vec_id", "label", F.expr(pick).alias("cell"))
+        return e.select("vec_id", "label", best.alias("cell"))
 
     nb = assign(base).groupBy("cell").agg(F.count("*").alias("n_base"))
     da = (
@@ -2160,42 +1883,10 @@ def ivf_delta_assign_frame(base: DataFrame, delta: DataFrame, cents: list) -> Da
 #: the kernel and hash-matched in tests (the takedown template), so
 #: the r12 registration is the one-line @query move.
 IVF_DELTA_ORACLE = f"""
-    WITH el AS (
-        SELECT label, u.idx, CAST(u.val AS DOUBLE) AS val
-        FROM embeddings,
-             LATERAL (SELECT unnest(embedding) AS val,
-                             generate_subscripts(embedding, 1) AS idx) u
-        WHERE vec_id % {_IVF_DELTA_MOD} != 0
-    ),
-    means AS (
-        SELECT label, idx,
-               CAST(SUM(CAST(floor(val * 1073741824.0) AS BIGINT)) AS DOUBLE)
-                   / 1073741824.0 / COUNT(*) AS m
-        FROM el GROUP BY label, idx
-    ),
-    cents AS (
-        SELECT label AS cell, list(m ORDER BY idx) AS c FROM means GROUP BY label
-    ),
-    cnorm AS (
-        SELECT cell, c,
-               sqrt(list_aggregate(list_transform(generate_series(1, {_DIM}),
-                    i -> c[i] * c[i]), 'sum')) AS nc
-        FROM cents
-    ),
-    cell_scores AS (
-        SELECT e.vec_id, e.label, (e.vec_id % {_IVF_DELTA_MOD} = 0) AS is_delta,
-               k.cell,
-               round(list_aggregate(list_transform(generate_series(1, {_DIM}),
-                         i -> CAST(e.embedding[i] AS DOUBLE) * k.c[i]), 'sum')
-                     / ({_DUCK_NORM.format(a='e.embedding', dim=_DIM)} * k.nc), 9) AS score
-        FROM embeddings e, cnorm k
-    ),
+    WITH {_duck_lm_ranked(f"WHERE vec_id % {_IVF_DELTA_MOD} != 0")},
     assigned AS (
-        SELECT vec_id, label, is_delta, cell FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                         ORDER BY score DESC, cell) AS rn
-            FROM cell_scores
-        ) WHERE rn = 1
+        SELECT vec_id, label, vec_id % {_IVF_DELTA_MOD} = 0 AS is_delta, cell
+        FROM lm_ranked WHERE rn = 1
     ),
     b AS (
         SELECT cell, COUNT(*) AS n_base FROM assigned

@@ -849,6 +849,49 @@ def test_label_propagation_matches_pure_python_replica(spark, oracle_sf_dir):
     assert 1 < len(want) < len(adj)  # nontrivial: real grouping happened
 
 
+def test_similarity_kernels_break_ties_to_the_lower_id(spark):
+    """The shared re-rank and cell ranking on hand-built ties. The
+    re-rank keeps exactly min(k, group size) rows per query, the prefix
+    of the (score DESC, id ASC) order: query 1 has 12 candidates with a
+    five-way tie straddling rank k=10, query 2 three tied candidates.
+    The cell ranking sorts by (score DESC, cell ASC), so its argmax is
+    the lowest cell among equal best scores — the order the DuckDB
+    oracles spell as ``ORDER BY score DESC, cell``."""
+    from cooler_mapreduce_spark.operators.similarity import (
+        _TOP_K,
+        _rank_cells,
+        topk_refine,
+    )
+
+    scores = [0.9, 0.8, 0.8, 0.7, 0.6, 0.5, 0.4] + [0.3] * 5
+    rows = [(1, 100 - i, s) for i, s in enumerate(scores)]
+    rows += [(2, 7, -0.2), (2, 3, -0.2), (2, 5, -0.2)]
+    df = spark.createDataFrame(rows, "query_id INT, vec_id INT, s DOUBLE")
+    got = topk_refine(df, "s").collect()
+    for q in (1, 2):
+        order = sorted((r for r in rows if r[0] == q), key=lambda r: (-r[2], r[1]))
+        kept = sorted(
+            ((r.query_id, r.neighbor_id, r.cosine) for r in got if r.query_id == q),
+            key=lambda r: (-r[2], r[1]),
+        )
+        assert kept == order[: min(_TOP_K, len(order))], (q, kept)
+
+    cells = [
+        [(3, 0.7), (1, 0.7), (2, 0.2), (0, -0.4), (4, 0.7)],
+        [(0, 0.1), (1, 0.1)],
+        [(2, 0.3), (1, -0.3), (0, 0.25)],
+    ]
+    cs = spark.createDataFrame(
+        [(i, c) for i, c in enumerate(cells)],
+        "row INT, cs ARRAY<STRUCT<cell: INT, score: DOUBLE>>",
+    )
+    ranked = cs.select("row", _rank_cells("cs").alias("r")).collect()
+    for r in sorted(ranked):
+        want = sorted(cells[r.row], key=lambda s: (-s[1], s[0]))
+        assert [(s.cell, s.score) for s in r.r] == want
+    assert [r.r[0].cell for r in sorted(ranked)] == [1, 0, 2]
+
+
 def test_semdedup_prune_monotone_in_threshold(spark, oracle_sf_dir):
     """SemDeDup invariants the oracle can't see: (1) raising τ can only
     prune FEWER items (the offending-pair set shrinks), (2) a τ above
