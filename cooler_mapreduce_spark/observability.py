@@ -14,11 +14,16 @@ Typical use::
     gated.write.parquet(...)          # one action
     metrics = obs.get                  # filled by that same action
     assert metrics["null_o_custkey"] == 0
+
+Iterative queries read their loop-control values the same way:
+:func:`checkpoint` observes the frame its checkpoint job materializes,
+so a frontier's row count or an edge set's checksum needs no job of its
+own.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 
 def observe_scan_quality(
@@ -44,3 +49,15 @@ def observe_scan_quality(
     for c in nonneg_cols or []:
         metrics.append(F.sum(F.when(F.col(c) < 0, 1).otherwise(0)).alias(f"neg_{c}"))
     return df.observe(obs, *metrics), obs
+
+
+def checkpoint(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
+    """``df.localCheckpoint(eager=True)`` plus ``metrics`` observed by that
+    same checkpoint job; with no metrics, the row count as ``n``.
+
+    Returns the checkpointed frame and the metric values by alias. An
+    empty frame (AQE may coalesce it to 0 partitions) reads ``n`` = 0.
+    """
+    obs = Observation()
+    out = df.observe(obs, *(metrics or (F.count(F.lit(1)).alias("n"),)))
+    return out.localCheckpoint(eager=True), obs.get

@@ -41,6 +41,7 @@ from ..functions.hashing import (
     shingles_duckdb,
     shingles_spark,
 )
+from ..observability import checkpoint
 from ..registry import query
 from ..sources.catalog import table
 
@@ -785,28 +786,23 @@ def connected_components(pairs: DataFrame, max_rounds: int = 50) -> DataFrame:
     cluster_id = the component's minimum id. Neither star operation ever
     drops a node from the edge set, so the label pass at the end covers
     exactly the input's nodes. Fixpoint is detected by an edge-set
-    checksum (count + xxhash sum — one tiny aggregate per round instead
-    of a full except/anti-join) and ASSERTED: if ``max_rounds`` rounds
-    don't converge (astronomically beyond O(log n) for any real input),
-    this raises rather than returning partial labels. See
+    checksum (count + xxhash sum, observed by each round's checkpoint
+    job instead of a full except/anti-join) and ASSERTED: if
+    ``max_rounds`` rounds don't converge (astronomically beyond
+    O(log n) for any real input), this raises rather than returning
+    partial labels. See
     :func:`dedup_clusters` for the scale rationale.
     """
-    edges = _canonical_edges(pairs).localCheckpoint()
-
-    def checksum(e: DataFrame) -> tuple:
-        row = e.agg(
-            F.count("*").alias("n"),
-            # decimal staging: ANSI sum of raw int64 hashes would overflow
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    prev = checksum(edges)
+    checksum = (
+        F.count(F.lit(1)).alias("n"),
+        # decimal staging: ANSI sum of raw int64 hashes would overflow
+        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
+    )
+    edges, prev = checkpoint(_canonical_edges(pairs), *checksum)
     converged = False
     for _ in range(max_rounds):
         edges = _canonical_edges(_large_star(_symmetric(edges))).localCheckpoint()
-        edges = _canonical_edges(_small_star(_symmetric(edges))).localCheckpoint()
-        cur = checksum(edges)
+        edges, cur = checkpoint(_canonical_edges(_small_star(_symmetric(edges))), *checksum)
         if cur == prev:  # star rounds are deterministic functions of the
             converged = True  # edge set — an unchanged set is a fixpoint
             break

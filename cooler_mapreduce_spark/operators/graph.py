@@ -7,10 +7,20 @@ reference cannot express it because its jobs are single-round
 declarative join + partial-aggregated shuffle and the driver loop only
 composes plans — the Spark-native shape of iterate-until-k.
 
-The five rank queries (uniform, weighted and personalized PageRank, and
-the two weekly random-walk-with-restart faces) run one kernel,
-:func:`rank_walk`, over static sides built once by :func:`rank_sides`;
-the kernel's docstring carries the determinism and scale argument.
+One kernel per algorithm family; each kernel's docstring carries its
+determinism and scale argument:
+
+- :func:`rank_walk`, over static sides built once by :func:`rank_sides`,
+  runs the five rank queries (uniform, weighted and personalized
+  PageRank, and the two weekly random-walk-with-restart faces);
+- :func:`bfs_levels`, unweighted frontier BFS, runs the single-source
+  hop query and the multi-source harmonic centrality;
+- :func:`sssp_frame`, bounded-cost frontier Bellman-Ford, runs the
+  weighted shortest-path query.
+
+A loop-control value (a node count, an emptiness probe) is observed by
+the checkpoint job that precedes it (:func:`observability.checkpoint`),
+never counted by a job of its own.
 """
 
 from __future__ import annotations
@@ -20,6 +30,7 @@ import operator
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ..observability import checkpoint
 from ..registry import query
 from ..sources.catalog import table
 
@@ -32,15 +43,48 @@ _Q = "1000000000000000"
 _PR_ITERATIONS = 5
 _DAMPING = 0.85
 
+#: tie-strength -> edge weight: stronger trading relationships are
+#: "closer" (more distinct orders => lower traversal cost). Integer
+#: weights in {1,2,3} keep all arithmetic exact and the state space
+#: bounded; the CASE is one spelling shared by both engines.
+_SSSP_W = "CASE WHEN n >= 4 THEN 1 WHEN n >= 2 THEN 2 ELSE 3 END"
+
+#: DuckDB CTEs of the mirrored supplier↔customer trade graph and its
+#: out-degrees (node ids: supplier s ↦ 2s, customer c ↦ 2c+1), the
+#: prefix of every unweighted trade-graph oracle.
+_DUCK_TRADE = """
+    fwd AS (
+        SELECT DISTINCT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+    ),
+    edges AS (SELECT src, dst FROM fwd UNION ALL SELECT dst, src FROM fwd),
+    deg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src)"""
+
+#: the same graph weighted by the ``_SSSP_W`` tie-strength bands, the
+#: prefix of the weighted PageRank and SSSP oracles.
+_DUCK_WTRADE = f"""
+    fwd AS (
+        SELECT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst,
+               COUNT(DISTINCT l_orderkey) AS n
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        GROUP BY 1, 2
+    ),
+    wedges AS (SELECT src, dst, {_SSSP_W} AS w FROM fwd),
+    edges AS (
+        SELECT src, dst, w FROM wedges
+        UNION ALL SELECT dst, src, w FROM wedges
+    )"""
+
 
 def rank_sides(
     edges: DataFrame, group: tuple[str, ...] = (), weight: str | None = None
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, int]:
     """The static sides of :func:`rank_walk`, materialized once: the
     ``(group…, src, dst[, weight])`` edge frame hash-partitioned by its
-    join key ``(group…, src)`` and checkpointed, and its out-degree frame
+    join key ``(group…, src)`` and checkpointed, its out-degree frame
     ``(group…, src, outdeg)`` — ``count(*)``, or ``sum(weight)`` when
-    weighted — checkpointed too.
+    weighted — checkpointed too, and the degree frame's row count,
+    observed by that checkpoint job.
 
     Every round joins both sides; without the checkpoints round i's plan
     re-derives the edge subtree i times over (measured 8.4 s → the
@@ -57,8 +101,8 @@ def rank_sides(
     keys = (*group, "src")
     edges = edges.repartition(*keys).localCheckpoint(eager=True)
     outdeg = F.sum(weight) if weight else F.count("*")
-    deg = edges.groupBy(*keys).agg(outdeg.alias("outdeg")).localCheckpoint(eager=True)
-    return edges, deg
+    deg, m = checkpoint(edges.groupBy(*keys).agg(outdeg.alias("outdeg")))
+    return edges, deg, m["n"]
 
 
 def rank_walk(
@@ -142,12 +186,7 @@ def _pagerank_oracle(iterations: int = _PR_ITERATIONS) -> str:
     CTEs — same joins, same quantized sums as the Spark loop."""
     parts = [
         f"""
-    WITH fwd AS (
-        SELECT DISTINCT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    edges AS (SELECT src, dst FROM fwd UNION ALL SELECT dst, src FROM fwd),
-    deg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src),
+    WITH {_DUCK_TRADE},
     n AS (SELECT COUNT(*) AS n_nodes FROM deg),
     pr0 AS (
         SELECT src AS node, outdeg,
@@ -198,15 +237,14 @@ def pagerank_supplier_customer(
     Node ids: supplier s ↦ 2s, customer c ↦ 2c+1 — disjoint numeric
     spaces, join-key friendly. The rounds are :func:`rank_walk`'s — the
     exact map/combine/reduce round the reference would need k chained
-    jobs for. The node count n is ONE driver-side count of the
-    checkpointed degree frame, folded into the init and teleport
-    literals: 1.0/n and 0.15/n are the same IEEE divisions the oracle
-    does, and a 1-row aggregate in the plan would re-enter every round
-    as a broadcast subtree (r12 A/B, identical top-20: 2.592 → 2.477 s).
+    jobs for. The node count n is observed by the degree frame's
+    checkpoint job (:func:`rank_sides`) and folded into the init and
+    teleport literals: 1.0/n and 0.15/n are the same IEEE divisions the
+    oracle does, and a 1-row aggregate in the plan would re-enter every
+    round as a broadcast subtree (r12 A/B, identical top-20: 2.592 → 2.477 s).
     The final top-20 is TakeOrdered with a node-id tiebreak.
     """
-    edges, deg = _uniform_trade_graph(spark, sf_dir)
-    n = deg.count()
+    edges, deg, n = _uniform_trade_graph(spark, sf_dir)
     init, teleport = F.lit(1.0) / F.lit(n), F.lit(0.15) / F.lit(n)
     ranks = rank_walk(edges, deg, init=init, teleport=teleport, iterations=iterations)
     return (
@@ -218,8 +256,8 @@ def pagerank_supplier_customer(
 
 def _uniform_trade_graph(spark: SparkSession, sf_dir: str):
     """:func:`rank_sides` of the unweighted mirrored trade graph — the
-    static sides shared by the uniform and personalized PageRank tiers
-    and by :func:`harmonic_centrality_hubs`."""
+    static sides shared by the uniform and personalized PageRank tiers,
+    :func:`bfs_hops_from_hub` and :func:`harmonic_centrality_hubs`."""
     li = table(spark, sf_dir, "lineitem", fan_out=False)
     o = table(spark, sf_dir, "orders", fan_out=False)
     fwd = (
@@ -285,13 +323,7 @@ def _copurchase_graph(spark: SparkSession, sf_dir: str):
         .distinct()
         .localCheckpoint(eager=True)
     )
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-        .localCheckpoint(eager=True)
-    )
+    deg = _undirected_degree(edges).localCheckpoint(eager=True)
     # SHUFFLE_HASH on the degree side of both annotation joins (the
     # pagerank rationale, rank_walk): sort-merge would sort the
     # O(m) edge side twice for zero information, while a shuffled-hash
@@ -329,6 +361,37 @@ def _copurchase_graph(spark: SparkSession, sf_dir: str):
         .localCheckpoint(eager=True)
     )
     return edges, deg, adj
+
+
+def _undirected_degree(edges: DataFrame) -> DataFrame:
+    """``(node, d)``: each endpoint's degree in a ``(u, v)`` edge set."""
+    return (
+        edges.select(F.col("u").alias("node"))
+        .unionAll(edges.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("d"))
+    )
+
+
+def _affinity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The part AFFINITY graph shared by :func:`kcore_copurchase` and
+    :func:`label_propagation_communities`: ``(u, v)`` with u < v for
+    parts co-purchased in ≥2 distinct orders. Returned UNCHECKPOINTED —
+    each caller owns its materialization point (the
+    :func:`_weighted_trade_edges` convention)."""
+    li = table(spark, sf_dir, "lineitem", fan_out=False).select(
+        "l_orderkey", "l_partkey"
+    )
+    a, b = li.alias("a"), li.alias("b")
+    return (
+        a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+               & (F.col("a.l_partkey") < F.col("b.l_partkey")))
+        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
+        .agg(F.count("*").alias("c"))
+        .filter(F.col("c") >= 2)
+        .select("u", "v")
+    )
+
 
 @query(
     "triangle_count_copurchase",
@@ -543,8 +606,8 @@ def kcore_copurchase(
     monotonically; the k-core is ORDER-INDEPENDENT (peeling is
     confluent), so the result is deterministic regardless of round
     grouping. The loop's only driver traffic is one surviving-node
-    count per round (the bounded fixpoint probe, like connected
-    components' checksum); it terminates because the node count
+    count per round (the bounded fixpoint probe, a job of its own: the
+    degree frame it counts is never checkpointed); it terminates because the node count
     strictly decreases until the fixpoint — asserted, never assumed:
     a non-converged loop raises rather than returning a partial core.
     Output: one row per surviving node with its in-core degree. When a
@@ -552,37 +615,16 @@ def kcore_copurchase(
     survivor count are recorded in it (the 1×/10× scale sweep asserts
     the fixpoint arrives in comparably few rounds at both scales).
     """
-    li = table(spark, sf_dir, "lineitem", fan_out=False).select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
-    cur = (
-        a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-               & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count("*").alias("c"))
-        .filter(F.col("c") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=True)
-    )
-    cur_deg = (
-        cur.select(F.col("u").alias("node"))
-        .unionAll(cur.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-    )
+    cur = _affinity_edges(spark, sf_dir).localCheckpoint(eager=True)
     prev_nodes = None
-    n_keep = 0
-    rounds_run = 0
-    for _ in range(60):  # diameter-independent bound; peeling halves fast
+    # diameter-independent bound; peeling halves fast
+    for rounds_run in range(1, 61):
+        cur_deg = _undirected_degree(cur)
         keep = cur_deg.filter(F.col("d") >= k).select("node")
         n_keep = keep.count()
-        rounds_run += 1
-        if prev_nodes is not None and n_keep == prev_nodes:
+        if n_keep in (prev_nodes, 0):
             break
         prev_nodes = n_keep
-        if n_keep == 0:
-            break
         # NOT shuffle_hash-hinted, deliberately (measured, r7): hinting
         # the keep sides read 3.94 s vs 3.78 s unhinted at sf0.1 — the
         # peeling loop is fixpoint-probe + checkpoint bound, not
@@ -593,12 +635,6 @@ def kcore_copurchase(
             cur.join(ku, "u", "left_semi")
             .join(kv, "v", "left_semi")
             .localCheckpoint(eager=True)
-        )
-        cur_deg = (
-            cur.select(F.col("u").alias("node"))
-            .unionAll(cur.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("d"))
         )
     else:
         raise RuntimeError("k-core peeling did not converge in 60 rounds")
@@ -613,15 +649,72 @@ def kcore_copurchase(
 _BFS_MAX_HOPS = 6
 
 
+def _top_degree(deg: DataFrame, n: int) -> DataFrame:
+    """The ``n`` highest out-degree nodes of a ``(src, outdeg)`` frame
+    (outdeg DESC, src ASC — a total order) as a ``(node)`` frame: a
+    TakeOrdered over the degree rows, never a collect."""
+    return deg.orderBy(F.desc("outdeg"), F.asc("src")).limit(n).select(F.col("src").alias("node"))
+
+
+def bfs_levels(
+    edges: DataFrame, sources: DataFrame, max_hops: int, *, group: tuple[str, ...] = ()
+) -> DataFrame:
+    """Unweighted frontier BFS over a ``(src, dst)`` edge frame from a
+    ``(group…, node)`` source frame; returns ``(group…, node, hops)``:
+    every node within ``max_hops`` of its group's sources, once, at its
+    first level (the sources at 0). Group keys (``seed`` for the
+    harmonic cohort) ride every frontier row, so one join per hop
+    advances every group at once: more sources add rows, never stages.
+
+    One hop is the frontier ⋈ edges on ``node = src`` (one keyed
+    shuffle, O(|edges touched|)), a ``distinct`` over (group…, dst), and
+    an anti-join against ``seen`` — VISITED-SET PRUNING: mirrored edges
+    guarantee 2-step returns, so an unpruned hop d would re-expand every
+    node reached at d-1 and the frontier would grow toward |groups| ×
+    |nodes|; with the anti-join each (group…, node) expands exactly
+    once, at its first (= minimum) level — any path through a node at a
+    later level yields neighbors at levels ≥ those its first expansion
+    produced, so pruning cannot change a minimum and no MIN(hops)
+    collapse is needed.
+
+    Each level goes through :func:`observability.checkpoint`: the job
+    that materializes it also counts it, and a 0-row level ends the loop
+    with no probe job. ``seen`` is the union of the checkpointed levels
+    and is never re-checkpointed, so its plan is a union of checkpoint
+    scans and round k+1 replays none of rounds 1..k.
+
+    SHUFFLE_HASH on the state sides (r12, measured): the frontier and
+    ``seen`` are O(|groups| × nodes) pairs of ints (harmonic at sf0.1:
+    frontier ≤ 57 k rows, seen ≤ 64 k vs 1.17 M edges), yet sort-merge
+    re-SORTED the checkpointed O(|edges|) side every hop — the
+    :func:`rank_walk` rationale. Hash-building the state sides streams
+    the edges unsorted: interleaved A/B at sf0.1, identical top-20,
+    4.181 → 3.993 s min; executed plan 8 SortMergeJoins → 0. Per-task
+    builds are O(|groups| × nodes / partitions), executor-sized at any
+    scale.
+    """
+    keys = [*group, "node"]
+    e = edges.select(F.col("src").alias("node"), "dst")
+    level = sources.select(*keys).localCheckpoint(eager=True)
+    seen = level.withColumn("hops", F.lit(0))
+    for hop in range(1, max_hops + 1):
+        level, m = checkpoint(
+            level.hint("shuffle_hash")
+            .join(e, "node")
+            .select(*group, F.col("dst").alias("node"))
+            .distinct()
+            .join(seen.select(*keys).hint("shuffle_hash"), keys, "left_anti")
+        )
+        if m["n"] == 0:
+            break
+        seen = seen.unionAll(level.withColumn("hops", F.lit(hop)))
+    return seen
+
+
 @query(
     "bfs_hops_from_hub",
     oracle=f"""
-    WITH RECURSIVE fwd AS (
-        SELECT DISTINCT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    edges AS (SELECT src, dst FROM fwd UNION ALL SELECT dst, src FROM fwd),
-    deg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src),
+    WITH RECURSIVE {_DUCK_TRADE},
     hub AS (SELECT src AS node FROM deg ORDER BY outdeg DESC, src LIMIT 1),
     reach(node, hop) AS (
         SELECT node, 0 FROM hub
@@ -637,60 +730,23 @@ _BFS_MAX_HOPS = 6
 )
 def bfs_hops_from_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BFS hop distance from the hub (highest-degree node, id tiebreak)
-    of the supplier↔customer trade graph (same node encoding as
-    ``pagerank_supplier_customer``: supplier s ↦ 2s, customer c ↦ 2c+1,
-    mirrored edges) — "how far is everything from the busiest actor",
-    the reachability primitive under influence radii and blast-radius
-    queries. Capped at 6 hops: a mirrored bipartite trade graph is
-    small-world, so deeper frontiers are empty long before the cap.
+    of the supplier↔customer trade graph (same node encoding and
+    checkpointed sides as ``pagerank_supplier_customer``: supplier
+    s ↦ 2s, customer c ↦ 2c+1, mirrored edges) — "how far is everything
+    from the busiest actor", the reachability primitive under influence
+    radii and blast-radius queries. Capped at 6 hops: a mirrored
+    bipartite trade graph is small-world, so deeper frontiers are empty
+    long before the cap.
 
-    The Spark side is true frontier BFS: per round, frontier ⋈ edges on
-    the source key (one keyed shuffle, O(|edges touched|)), dedup, then
-    an anti-join against the visited set — each node enters `visited`
-    exactly once, at its minimum hop, so no (node, hop) multiplicity
-    ever materializes. The loop breaks on an empty frontier; each
-    frontier is localCheckpoint'ed so round k+1's plan doesn't replay
-    rounds 1..k. The oracle spells the same search as a recursive CTE
-    whose UNION dedups (node, hop) rows, then takes MIN(hop) — bounded
-    by |V| × hops rows, exponential walk blowup excluded. All values
-    are exact integers; no float determinism risk anywhere.
+    The Spark side is :func:`bfs_levels` from the one hub. The oracle
+    spells the same search as a recursive CTE whose UNION dedups
+    (node, hop) rows, then takes MIN(hop) — bounded by |V| × hops rows,
+    exponential walk blowup excluded. All values are exact integers; no
+    float determinism risk anywhere.
     """
-    li = table(spark, sf_dir, "lineitem", fan_out=False).select("l_orderkey", "l_suppkey")
-    o = table(spark, sf_dir, "orders", fan_out=False).select("o_orderkey", "o_custkey")
-    fwd = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            (F.col("l_suppkey") * 2).alias("src"),
-            (F.col("o_custkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = fwd.unionAll(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    hub = (
-        deg.orderBy(F.desc("outdeg"), F.asc("src"))
-        .limit(1)
-        .select(F.col("src").alias("node"))
-    )
-    visited = hub.withColumn("hops", F.lit(0)).localCheckpoint(eager=True)
-    frontier = visited.select("node")
-    for hop in range(1, _BFS_MAX_HOPS + 1):
-        nxt = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.unionAll(
-            nxt.withColumn("hops", F.lit(hop))
-        ).localCheckpoint(eager=True)
-        frontier = nxt
-    return visited.select("node", F.col("hops").cast("bigint").alias("hops"))
+    edges, deg, _ = _uniform_trade_graph(spark, sf_dir)
+    levels = bfs_levels(edges, _top_degree(deg, 1), _BFS_MAX_HOPS)
+    return levels.select("node", F.col("hops").cast("bigint").alias("hops"))
 
 
 _LPA_ITERATIONS = 5
@@ -734,18 +790,7 @@ def label_propagation_communities(
     canonical (minimum) member — rows-only at the driver, value-pinned
     by the replica test.
     """
-    li = table(spark, sf_dir, "lineitem", fan_out=False).select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-               & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count("*").alias("c"))
-        .filter(F.col("c") >= 2)
-        .select("u", "v")
-    )
+    edges = _affinity_edges(spark, sf_dir)
     und = (
         edges.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
         .unionAll(edges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
@@ -782,27 +827,12 @@ def label_propagation_communities(
 #: graph is small-world, so the horizon bounds rounds, rows, AND the
 #: oracle's recursive enumeration at |V| x (horizon+1) states).
 _SSSP_MAX_COST = 8
-#: tie-strength -> edge weight: stronger trading relationships are
-#: "closer" (more distinct orders => lower traversal cost). Integer
-#: weights in {1,2,3} keep all arithmetic exact and the state space
-#: bounded; the CASE is one spelling shared by both engines.
-_SSSP_W = "CASE WHEN n >= 4 THEN 1 WHEN n >= 2 THEN 2 ELSE 3 END"
 
 
 @query(
     "sssp_weighted_from_hub",
     oracle=f"""
-    WITH RECURSIVE fwd AS (
-        SELECT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst,
-               COUNT(DISTINCT l_orderkey) AS n
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        GROUP BY 1, 2
-    ),
-    wedges AS (SELECT src, dst, {_SSSP_W} AS w FROM fwd),
-    edges AS (
-        SELECT src, dst, w FROM wedges
-        UNION ALL SELECT dst, src, w FROM wedges
-    ),
+    WITH RECURSIVE {_DUCK_WTRADE},
     deg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src),
     hub AS (SELECT src AS node FROM deg ORDER BY outdeg DESC, src LIMIT 1),
     reach(node, cost) AS (
@@ -833,8 +863,9 @@ def sssp_weighted_from_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
     improved rows (an anti-join on the exact (node, cost) pair). With
     integer weights >= 1 the horizon also bounds the round count (a
     cost-8 path has <= 8 edges), and the loop exits early on an empty
-    frontier; each round's state is localCheckpoint'ed so round k+1's
-    plan does not replay rounds 1..k (the BFS convention). The oracle
+    frontier, read from the frontier's own checkpoint job; each round's
+    state is localCheckpoint'ed so round k+1's plan does not replay
+    rounds 1..k (the :func:`bfs_levels` convention). The oracle
     spells the same search as a recursive CTE whose UNION dedups
     (node, cost) states — bounded by |V| x (horizon+1), exponential path
     enumeration excluded. All values exact integers; no float
@@ -842,8 +873,8 @@ def sssp_weighted_from_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: dist/frontier are O(|V|) rows keyed by node; every
     relaxation shuffles only frontier-adjacent edges; nothing is ever
-    collected or broadcast (the hub row rides the plan as a 1-row
-    cross join, same as BFS).
+    collected or broadcast (the hub is a TakeOrdered over the degree
+    rows, checkpointed as the first dist state).
 
     Reference parity: beyond the reference — its single-round MapReduce
     cannot chain relaxation state across rounds (SURVEY.md §2.2: no job
@@ -851,12 +882,7 @@ def sssp_weighted_from_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     edges = _weighted_trade_edges(spark, sf_dir).localCheckpoint(eager=True)
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    hub = (
-        deg.orderBy(F.desc("outdeg"), F.asc("src"))
-        .limit(1)
-        .select(F.col("src").alias("node"))
-    )
-    return sssp_frame(edges, hub, _SSSP_MAX_COST)
+    return sssp_frame(edges, _top_degree(deg, 1), _SSSP_MAX_COST)
 
 
 def _weighted_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -893,9 +919,10 @@ def sssp_frame(edges: DataFrame, sources: DataFrame, max_cost: int) -> DataFrame
     dist = sources.withColumn("cost", F.lit(0)).localCheckpoint(eager=True)
     frontier = dist
     for _ in range(max_cost):
+        fr = frontier.hint("shuffle_hash")
         cand = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select(F.col("dst").alias("node"), (frontier.cost + edges.w).alias("cost"))
+            fr.join(edges, fr.node == edges.src)
+            .select(F.col("dst").alias("node"), (fr.cost + edges.w).alias("cost"))
             .filter(F.col("cost") <= max_cost)
         )
         new_dist = (
@@ -904,11 +931,9 @@ def sssp_frame(edges: DataFrame, sources: DataFrame, max_cost: int) -> DataFrame
             .agg(F.min("cost").alias("cost"))
             .localCheckpoint(eager=True)
         )
-        frontier = new_dist.join(dist, ["node", "cost"], "left_anti").localCheckpoint(
-            eager=True
-        )
+        frontier, m = checkpoint(new_dist.join(dist, ["node", "cost"], "left_anti"))
         dist = new_dist
-        if frontier.limit(1).count() == 0:
+        if m["n"] == 0:
             break
     return dist.select("node", F.col("cost").cast("bigint").alias("cost"))
 
@@ -925,17 +950,7 @@ def _weighted_pagerank_oracle(iterations: int = _PR_ITERATIONS) -> str:
     tele = "(CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE))"
     parts = [
         f"""
-    WITH fwd AS (
-        SELECT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst,
-               COUNT(DISTINCT l_orderkey) AS n
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        GROUP BY 1, 2
-    ),
-    wedges AS (SELECT src, dst, {_SSSP_W} AS w FROM fwd),
-    edges AS (
-        SELECT src, dst, w FROM wedges
-        UNION ALL SELECT dst, src, w FROM wedges
-    ),
+    WITH {_DUCK_WTRADE},
     ow AS (SELECT src, SUM(w) AS outw FROM edges GROUP BY src),
     n AS (SELECT COUNT(*) AS n_nodes FROM ow),
     pr0 AS (
@@ -984,8 +999,8 @@ def weighted_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties count more", the weighted sibling completing the ranking tier.
 
     :func:`rank_walk` with ``weight="w"``: contribution rank·w/outdeg,
-    out-degree SUM(w). The node count n is one driver-side count of the
-    checkpointed out-weight frame folded into the init and teleport
+    out-degree SUM(w). The node count n, observed by the out-weight
+    frame's checkpoint job, is folded into the init and teleport
     literals, as in the uniform tier; the teleport is (1.0-0.85)/n, the
     subtraction the oracle spells. The oracle unrolls the same five
     iterations as chained CTEs. Top-20 is TakeOrdered with a node-id
@@ -995,8 +1010,7 @@ def weighted_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference cannot chain (SURVEY.md §2.2); closes the round-8
     verdict's staged-kernel item (next-round #1).
     """
-    edges, deg = rank_sides(_weighted_trade_edges(spark, sf_dir), weight="w")
-    n = deg.count()
+    edges, deg, n = rank_sides(_weighted_trade_edges(spark, sf_dir), weight="w")
     init, teleport = F.lit(1.0) / F.lit(n), F.lit(1.0 - _DAMPING) / F.lit(n)
     ranks = rank_walk(edges, deg, weight="w", init=init, teleport=teleport)
     # Round BEFORE ordering so the top-20 gate binds to the same value
@@ -1031,12 +1045,7 @@ def _personalized_pagerank_oracle(iterations: int = _PR_ITERATIONS) -> str:
     )
     parts = [
         f"""
-    WITH fwd AS (
-        SELECT DISTINCT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    edges AS (SELECT src, dst FROM fwd UNION ALL SELECT dst, src FROM fwd),
-    deg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src),
+    WITH {_DUCK_TRADE},
     pr0 AS (
         SELECT src AS node, outdeg,
                CASE WHEN src IN ({seeds}) THEN CAST(1.0 AS DOUBLE) / {ns}
@@ -1096,7 +1105,7 @@ def personalized_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFra
     reference cannot chain (SURVEY.md §2.2); completes the ranking
     family's third member (uniform / weighted / personalized).
     """
-    edges, deg = _uniform_trade_graph(spark, sf_dir)
+    edges, deg, _ = _uniform_trade_graph(spark, sf_dir)
     ns = float(len(_PPR_SEEDS))
     seed = F.col("node").isin(*_PPR_SEEDS)
     init = F.when(seed, F.lit(1.0 / ns)).otherwise(F.lit(0.0))
@@ -1159,7 +1168,7 @@ def _weekly_rwr(spark: SparkSession, sf_dir: str) -> DataFrame:
     teleport mass (1-d) lands only there; rank starts as the seed
     indicator), ranks rounded to 12 places with zero ranks dropped —
     the row set both weekly faces and their oracles share."""
-    edges, deg = rank_sides(_weekly_transition_edges(spark, sf_dir), ("week",), "w")
+    edges, deg, _ = rank_sides(_weekly_transition_edges(spark, sf_dir), ("week",), "w")
     seed = F.col("node") == F.lit(_RWR_SEED)
     init = F.when(seed, F.lit(1.0)).otherwise(F.lit(0.0))
     teleport = F.when(seed, F.lit(1.0 - _DAMPING)).otherwise(F.lit(0.0))
@@ -1305,12 +1314,7 @@ def _harmonic_oracle() -> str:
     DISTINCT reach set per hop, MIN(d) over the level union, and the
     exact integer-sixths harmonic sum."""
     return f"""
-    WITH fwd AS (
-        SELECT DISTINCT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    edges AS (SELECT src, dst FROM fwd UNION ALL SELECT dst, src FROM fwd),
-    deg AS (SELECT src, COUNT(*) AS outdeg FROM edges GROUP BY src),
+    WITH {_DUCK_TRADE},
     seeds AS (SELECT src AS seed FROM deg
               ORDER BY outdeg DESC, src LIMIT {_HC_SOURCES}),
     r1 AS (SELECT DISTINCT s.seed, e.dst AS node
@@ -1361,68 +1365,24 @@ def harmonic_centrality_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
     6.0 once, so the score never depends on double addition order —
     the same exactness trick as the quantized bigint rank sums.
 
-    100 TB shape: the frontier state is O(|S| x |nodes|) rows (|S| = 4
-    literal) and each hop is ONE join against the shared checkpointed
-    src-partitioned edge list (reused from the PageRank family's
-    `_uniform_trade_graph`) plus a distinct plus one anti-join against
-    the accumulated (seed, node) level set — VISITED-SET PRUNING
-    (round-10 ADVICE): mirrored edges guarantee 2-step returns, so an
-    unpruned hop d would re-expand every node already reached at d-1
-    and the frontier would grow toward |S| x |nodes| before any MIN(d)
-    collapse; with the anti-join each (seed, node) pair expands exactly
-    once, at its first (= minimum) level — the standard BFS argument:
-    any path through a node at a later level yields neighbors at
-    levels >= those already produced from its first expansion, so
-    pruning cannot change a minimum. Per-hop shuffled bytes are
-    O(|S| x frontier-adjacent edges), horizon fixed at 3. Seeds come
-    from a TakeOrdered over the degree frame (O(1) rows), never a
-    collect.
+    100 TB shape: :func:`bfs_levels` with ``group=("seed",)`` over the
+    shared checkpointed src-partitioned edge list (reused from the
+    PageRank family's `_uniform_trade_graph`): the frontier state is
+    O(|S| x |nodes|) rows (|S| = 4 literal), each hop is ONE join plus
+    a distinct plus one anti-join against the (seed, node) level set,
+    and per-hop shuffled bytes are O(|S| x frontier-adjacent edges),
+    horizon fixed at 3. Seeds come from a TakeOrdered over the degree
+    frame (O(1) rows), never a collect.
 
     Reference parity: iterative multi-round MapReduce the reference
     cannot chain (SURVEY.md §2.2); extends the graph family with the
     multi-source/centrality member (round-10 growth).
     """
-    edges, deg = _uniform_trade_graph(spark, sf_dir)
-    seeds = (
-        deg.orderBy(F.desc("outdeg"), F.asc("src"))
-        .limit(_HC_SOURCES)
-        .select(F.col("src").alias("seed"))
-    )
-    e = edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))
-    # visited-set pruning (round-10 ADVICE): seen accumulates each
-    # (seed, node) at its FIRST level (d=0 rows stop the seeds from
-    # re-expanding on the guaranteed 2-step mirror-edge returns); the
-    # next frontier anti-joins seen, so every pair expands exactly once
-    # and no MIN(d) collapse is needed — seen IS the distance table.
-    seen = seeds.select("seed", F.col("seed").alias("node"), F.lit(0).alias("d"))
-    frontier = seeds.select("seed", F.col("seed").alias("node"))
-    # SHUFFLE_HASH on the small state sides (r12, measured): the hop
-    # join's frontier and the anti-join's seen set are O(|S| × nodes)
-    # pairs of ints (measured at sf0.1: frontier ≤ 57 k rows, seen
-    # ≤ 64 k vs 1.17 M edges), yet sort-merge re-SORTED the checkpointed
-    # O(|edges|) side every hop — the rank_walk rationale verbatim.
-    # Hash-building the state sides streams the edges unsorted:
-    # interleaved A/B at sf0.1, identical top-20, 4.181 → 3.993 s min
-    # (and far tighter spread); executed plan 8 SortMergeJoins → 0.
-    # Per-task builds are O(|S| × nodes / partitions) — executor-sized
-    # at any scale, growing with the cluster.
-    for d in range(1, _HC_HOPS + 1):
-        fr = frontier.hint("shuffle_hash")
-        frontier = (
-            fr.join(e, fr.node == F.col("e_src"))
-            .select("seed", F.col("e_dst").alias("node"))
-            .distinct()
-            .join(
-                seen.select("seed", "node").hint("shuffle_hash"),
-                ["seed", "node"],
-                "left_anti",
-            )
-        )
-        seen = seen.unionAll(frontier.withColumn("d", F.lit(d)))
-    dist = seen.filter(F.col("d") >= 1)
-    sixths = (
-        F.when(F.col("d") == 1, F.lit(6)).when(F.col("d") == 2, F.lit(3)).otherwise(F.lit(2))
-    )
+    edges, deg, _ = _uniform_trade_graph(spark, sf_dir)
+    seeds = _top_degree(deg, _HC_SOURCES).select(F.col("node").alias("seed"), "node")
+    dist = bfs_levels(edges, seeds, _HC_HOPS, group=("seed",)).filter(F.col("hops") >= 1)
+    d = F.col("hops")
+    sixths = F.when(d == 1, F.lit(6)).when(d == 2, F.lit(3)).otherwise(F.lit(2))
     return (
         dist.groupBy("node")
         .agg(

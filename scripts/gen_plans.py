@@ -909,11 +909,11 @@ CASES = {
         ],
     ),
     "harmonic_centrality_hubs": (
-        "multi-source bounded BFS: 3 hop joins against the shared checkpointed src-partitioned edge list advance all 4 frontiers at once, each new frontier anti-joined against the accumulated visited set so every (seed,node) expands exactly once at its minimum level; top-20 is TakeOrdered",
+        "multi-source bounded BFS: the hop rounds (executed eagerly during construction by bfs_levels, each a keyed join advancing all 4 frontiers at once, a distinct and a visited-set anti-join) leave one localCheckpoint'ed level set per hop; the registered face unions those level sets, so its plan is checkpoint scans feeding the harmonic sixths aggregate — no join after the loop; top-20 is TakeOrdered",
         [
             ("TakeOrdered, not Sort+Limit", lambda p: "TakeOrderedAndProject" in p),
-            ("checkpointed edge state", lambda p: "Scan ExistingRDD" in p),
-            ("visited-set pruning anti-joins present", lambda p: p.count("LeftAnti") >= 3),
+            ("checkpointed level sets feed the plan", lambda p: p.count("Scan ExistingRDD") >= 2),
+            ("no post-loop join", lambda p: "Join" not in p),
             ("harmonic sixths partial-aggregate", lambda p: "partial_sum" in p),
             ("no cartesian / NL join", lambda p: "CartesianProduct" not in p and "BroadcastNestedLoop" not in p),
         ],
@@ -1075,26 +1075,60 @@ def _fanout_key_names() -> set[str]:
 _FANOUT_KEYS = _fanout_key_names()
 
 
+#: operators that may sit between the catalog fan-out exchange and its scan
+_SCAN_CHAIN = ("Project", "Filter", "ColumnarToRow", "InputAdapter")
+
+
+def _tree_depth(line: str) -> int:
+    """Column of a plan-tree line's ``+-``/``:-`` marker (0 for the root)."""
+    m = re.search(r"[+:]- ", line)
+    return m.start() if m else 0
+
+
+def _over_scan(lines: list[str], i: int) -> bool:
+    """True when the exchange on ``lines[i]`` reads one file scan through
+    a chain of projections and filters only — the catalog fan-out's
+    single-split input, not a derived frame."""
+    depth = _tree_depth(lines[i])
+    sub = []
+    for line in lines[i + 1:]:
+        if _tree_depth(line) <= depth:
+            break
+        sub.append(re.sub(r"^\*\(\d+\) ", "", line[_tree_depth(line):].lstrip("+:- ")))
+    return (
+        bool(sub)
+        and sub[-1].startswith(("FileScan", "Scan parquet"))
+        and all(op.startswith(_SCAN_CHAIN) for op in sub[:-1])
+    )
+
+
 def _n_required_shuffles(plan: str) -> int:
     """Hash exchanges that are NOT the catalog's single-split fan-out.
 
     The deliberate fan-out repartition became a hash exchange when
     catalog._fan_out moved to hash-keyed repartitioning (optimization
     round 11), so a bare hashpartitioning count would miscount it as an
-    agg/join shuffle. r11 ADVICE flagged the first fix (counting only
-    ENSURE_REQUIREMENTS) as too loose — it silently exempted EVERY
-    repartition-origin exchange, so a regression that introduced a new
-    REPARTITION shuffle would still pass the '== 0' claims. This version
-    exempts only the fan-out's signature: a REPARTITION-origin hash
-    exchange keyed on a catalog table's primary-key column(s). All other
-    hash exchanges (ENSURE_REQUIREMENTS, REBALANCE, repartitions on
-    derived keys) count."""
+    agg/join shuffle. Counting only ENSURE_REQUIREMENTS was too loose:
+    it exempted EVERY repartition-origin exchange, so a regression that
+    introduced a new REPARTITION shuffle would still pass the '== 0'
+    claims. Keying the exemption on a table-key column name alone was
+    still loose: a repartition of a derived frame on, say, l_orderkey
+    passed as the fan-out. This version exempts only the fan-out's full
+    signature: a REPARTITION-origin hash exchange keyed on a catalog
+    table's primary-key column(s) whose child is the file scan itself
+    (through projections and filters only). All other hash exchanges
+    (ENSURE_REQUIREMENTS, REBALANCE, repartitions on derived keys or
+    derived inputs) count."""
+    lines = plan.splitlines()
     n = 0
-    for line in plan.splitlines():
+    for i, line in enumerate(lines):
         if "Exchange hashpartitioning" not in line:
             continue
-        if "REPARTITION" in line and "ENSURE_REQUIREMENTS" not in line and any(
-            f"{k}#" in line for k in _FANOUT_KEYS
+        if (
+            "REPARTITION" in line
+            and "ENSURE_REQUIREMENTS" not in line
+            and any(f"{k}#" in line for k in _FANOUT_KEYS)
+            and _over_scan(lines, i)
         ):
             continue  # the catalog fan-out: hash on a table's unique key
         n += 1

@@ -174,8 +174,7 @@ def test_pagerank_mass_conservation_and_concentration(spark, sf_dir):
 
     def pagerank_frame(spark, sf_dir, iterations):
         # the uniform tier's ranks before its top-20
-        edges, deg = _uniform_trade_graph(spark, sf_dir)
-        n = deg.count()
+        edges, deg, n = _uniform_trade_graph(spark, sf_dir)
         return rank_walk(
             edges,
             deg,

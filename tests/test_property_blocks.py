@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import datetime
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from cooler_mapreduce_spark.functions.timeutil import us_between, wall_trunc
@@ -648,6 +648,32 @@ def test_sssp_frame_equals_bounded_dijkstra(spark, edges, cap):
     assert got == _dijkstra_bounded(edges, 0, cap)
 
 
+@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(edges=_wedges, seeds=st.sets(st.integers(0, 15), max_size=3), hops=st.integers(1, 6))
+@example(edges=[(0, 1, 1)], seeds=set(), hops=3)
+def test_bfs_levels_equals_unit_weight_dijkstra_per_seed(spark, edges, seeds, hops):
+    """The multi-source level kernel must equal a sequential bounded
+    Dijkstra with unit weights, run once per seed, on ANY digraph: each
+    (seed, node) pair once, at its first level. Node 99 is an isolated
+    seed whose frontier is empty at hop 1; with no other seed (the
+    explicit example) the whole level is empty and the loop breaks
+    there."""
+    from cooler_mapreduce_spark.operators.graph import bfs_levels
+
+    e = spark.createDataFrame([(s, d) for s, d, _w in edges], "src int, dst int")
+    cohort = sorted(seeds | {99})
+    src = spark.createDataFrame([(s, s) for s in cohort], "seed int, node int")
+    got = {
+        (r.seed, r.node): r.hops
+        for r in bfs_levels(e, src, hops, group=("seed",)).collect()
+    }
+    unit = [(s, d, 1) for s, d, _w in edges]
+    want = {
+        (s, node): d for s in cohort for node, d in _dijkstra_bounded(unit, s, hops).items()
+    }
+    assert got == want
+
+
 _series = st.lists(
     st.floats(min_value=-1e6, max_value=1e6, allow_nan=False, allow_infinity=False),
     min_size=1,
@@ -899,8 +925,8 @@ def test_weighted_pagerank_equals_sequential_replica(spark, base, iters):
     from cooler_mapreduce_spark.operators.graph import _DAMPING, rank_sides, rank_walk
 
     def walk(df, weight):
-        edges, deg = rank_sides(df, weight=weight)
-        n = deg.count()
+        edges, deg, n = rank_sides(df, weight=weight)
+        assert n == deg.count()  # observed by the degree checkpoint job
         ranks = rank_walk(
             edges,
             deg,
@@ -1388,7 +1414,7 @@ def test_grouped_rwr_equals_sequential_replica(spark, edges):
     df = spark.createDataFrame(
         list(edges), "week int, src int, dst int, w int"
     )
-    e, deg = rank_sides(df, group=("week",), weight="w")
+    e, deg, _ = rank_sides(df, group=("week",), weight="w")
     seed = F2.col("node") == F2.lit(1)
     ranks = rank_walk(
         e,

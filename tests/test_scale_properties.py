@@ -932,3 +932,40 @@ def test_apply_session_defaults_walks_the_input_dir_once(oracle_sf_dir, monkeypa
     session.apply_session_defaults(host, oracle_sf_dir)
     assert walks == [oracle_sf_dir]
     assert conf["spark.sql.shuffle.partitions"] == want
+
+
+_FANOUT_PLAN = """HashAggregate(keys=[l_returnflag#1], functions=[sum(l_quantity#2)])
++- Exchange hashpartitioning(l_returnflag#1, 8), ENSURE_REQUIREMENTS, [plan_id=30]
+   +- HashAggregate(keys=[l_returnflag#1], functions=[partial_sum(l_quantity#2)])
+      +- Exchange hashpartitioning(l_orderkey#0, l_linenumber#3, 8), REPARTITION_BY_NUM, [plan_id=25]
+         +- *(1) Project [l_orderkey#0, l_linenumber#3, l_returnflag#1, l_quantity#2]
+            +- *(1) Filter isnotnull(l_shipdate#4)
+               +- *(1) ColumnarToRow
+                  +- FileScan parquet [l_orderkey#0,l_linenumber#3,l_returnflag#1,l_quantity#2,l_shipdate#4] Batched: true
+"""
+
+_DERIVED_PLAN = """Exchange hashpartitioning(l_orderkey#0, 8), REPARTITION_BY_NUM, [plan_id=40]
++- Project [l_orderkey#0, o_custkey#5]
+   +- BroadcastHashJoin [l_orderkey#0], [o_orderkey#6], Inner, BuildRight
+      :- Filter isnotnull(l_orderkey#0)
+      :  +- FileScan parquet [l_orderkey#0] Batched: true
+      +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id=38]
+         +- Filter isnotnull(o_orderkey#6)
+            +- FileScan parquet [o_orderkey#6,o_custkey#5] Batched: true
+"""
+
+
+def test_required_shuffles_exempt_only_the_catalog_fan_out():
+    """``scripts/gen_plans.py``'s shuffle count skips the catalog fan-out
+    (a key-named REPARTITION exchange straight over a file scan) and
+    counts a key-named repartition of a derived frame, here a join."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts", "gen_plans.py")
+    spec = importlib.util.spec_from_file_location("gen_plans", path)
+    gen_plans = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen_plans)
+
+    assert gen_plans._n_required_shuffles(_FANOUT_PLAN) == 1
+    assert gen_plans._n_required_shuffles(_DERIVED_PLAN) == 1

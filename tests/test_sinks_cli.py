@@ -350,6 +350,31 @@ def test_observe_scan_quality(spark, sf_dir):
     assert m["neg_o_totalprice"] == o.filter("o_totalprice < 0").count()
 
 
+def test_checkpoint_observes_its_own_job(spark):
+    """``observability.checkpoint`` reads its metrics from the checkpoint
+    job itself: a shuffle-free frame runs exactly one job and reads its
+    row count; an empty frame that AQE coalesced to 0 partitions reads
+    0 instead of waiting on an observation no task filled."""
+    from pyspark.sql import functions as F
+
+    from cooler_mapreduce_spark.observability import checkpoint
+
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpoint-observed", "observed checkpoint")
+    try:
+        out, m = checkpoint(spark.range(1000).filter(F.col("id") % 3 == 0))
+    finally:
+        sc.setJobGroup("", "")
+    assert m == {"n": 334}
+    assert len(sc.statusTracker().getJobIdsForGroup("checkpoint-observed")) == 1
+    assert out.count() == 334
+
+    empty = spark.range(100).filter(F.col("id") < 0).repartition(5, "id").distinct()
+    out, m = checkpoint(empty, F.count(F.lit(1)).alias("rows"), F.max("id").alias("top"))
+    assert out.rdd.getNumPartitions() == 0  # AQE coalesced the empty shuffle
+    assert m == {"rows": 0, "top": None}
+
+
 def test_python_datasource_synthetic_events(spark):
     """Custom Python DataSource: planned partitions honored, rows
     deterministic across reads."""
